@@ -463,7 +463,7 @@ def druid_query(
     for a in aggs:
         inner = a.get("aggregator", a)
         need(inner.get("fieldName"), "double")
-        for fname2 in inner.get("fieldNames", []):
+        for fname2 in inner.get("fieldNames") or inner.get("fields") or []:
             need(fname2, "string")
         if a.get("type") == "filtered":
             for d in filter_dims(a.get("filter")):

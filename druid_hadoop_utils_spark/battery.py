@@ -1401,8 +1401,8 @@ def q_forward_fill(spark, sf_dir):
 def q_theta_set_ops(spark, sf_dir):
     # Druid thetaSketchSetOp parity: two filtered theta sketches built in
     # ONE aggregation pass, then INTERSECT/NOT/UNION estimated as
-    # post-aggs (under-full states → theta=1 → exact set algebra, which
-    # is what makes the oracle hash-match; at scale the same expressions
+    # post-aggs (under-full sketches → theta=1 → exact set algebra, which
+    # is what makes the oracle hash-match; at scale the same set ops
     # degrade gracefully to sampled estimates below theta)
     ev = _t(spark, sf_dir, "events")
     sketch = lambda name, etype: {  # noqa: E731
@@ -2571,10 +2571,10 @@ def q_agg_first_last(spark, sf_dir):
        FROM events GROUP BY 1""",
 )
 def q_theta_distinct(spark, sf_dir):
-    # KMV theta-style distinct through the AggregatorFactory grammar; the
-    # default k (16384) exceeds the distinct-user cardinality at these SFs,
-    # so the state is under-full and the estimate is EXACT (theta = 1) —
-    # which is what makes the count(distinct) oracle a hash-match
+    # theta-sketch distinct through the AggregatorFactory grammar; the
+    # default size (16384) exceeds the distinct-user cardinality at these
+    # SFs, so the sketch is under-full and the estimate is EXACT (theta = 1)
+    # — which is what makes the count(distinct) oracle a hash-match
     ev = _t(spark, sf_dir, "events")
     return group_aggregate(
         ev, ["event_type"],

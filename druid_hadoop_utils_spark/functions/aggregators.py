@@ -16,27 +16,32 @@ partial (bytes) vs final (estimate) variants:
 In Spark the partial/merge split is automatic inside ``agg()`` (Catalyst
 plans partial+final HashAggregate), so the adapter layer reduces to: JSON
 spec → the right builtin Column expression. Sketch state rides as
-``BinaryType`` through the DataSketches ``hll_sketch_agg`` /
-``hll_union_agg`` / ``hll_sketch_estimate`` family and never crosses into
-Python — the per-row Python path would be the 100 TB perf cliff.
+``BinaryType`` through the DataSketches ``hll_*`` (hyperUnique,
+cardinality) and ``theta_*`` (thetaSketch) builtin families and never
+crosses into Python — the per-row Python path would be the 100 TB perf
+cliff.
 
 Supported factory grammar (Druid 0.9.1, SURVEY.md §2.5 A5): ``count``,
 ``longSum``, ``doubleSum``, ``longMin``, ``longMax``, ``doubleMin``,
-``doubleMax``, ``hyperUnique``, ``cardinality``, ``filtered``.
-``javascript`` is deliberately rejected.
+``doubleMax``, ``hyperUnique``, ``cardinality``, ``thetaSketch``,
+``filtered``. ``javascript`` is deliberately rejected.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructType
+from pyspark.sql.types import ArrayType, BinaryType, LongType, StructType
 
 from druid_hadoop_utils_spark.functions.filters import filter_to_column
 
 # Default HLL precision: lgK=12 is the DataSketches default; the sketch is
 # exact (coupon mode) for small cardinalities and ~1.6% RSE beyond.
 DEFAULT_LGK = 12
+
+# The Druid thetaSketch extension's default "size" (nominal entries): the
+# sketch is exact below it and ~1/sqrt(size) RSE beyond.
+DEFAULT_THETA_SIZE = 16384
 
 _SIMPLE = {
     "count": lambda c: F.count(c),
@@ -51,13 +56,32 @@ _SIMPLE = {
 _FINAL_CASTS = {"long": "long", "float": "float", "double": "double"}
 
 
-def _is_binary(schema: StructType | None, name: str) -> bool:
+def _field_type(schema: StructType | None, name: str):
     if schema is None:
-        return False
+        return None
     try:
-        return isinstance(schema[name].dataType, BinaryType)
+        return schema[name].dataType
     except KeyError:
-        return False
+        return None
+
+
+def _is_binary(schema: StructType | None, name: str) -> bool:
+    return isinstance(_field_type(schema, name), BinaryType)
+
+
+def _theta_lg(spec: dict) -> int:
+    """Druid's thetaSketch ``size`` (nominal entries, a power of two) →
+    the ``lgNomEntries`` Spark's theta functions take."""
+    size = int(spec.get("size", DEFAULT_THETA_SIZE))
+    if not 16 <= size <= 1 << 26 or size & (size - 1):
+        raise ValueError(
+            f"thetaSketch size must be a power of two in [16, 2^26]: {spec!r}"
+        )
+    return size.bit_length() - 1
+
+
+def _theta_estimate(sketch: Column) -> Column:
+    return F.theta_sketch_estimate(sketch).cast("double")
 
 
 def _hll_partial(col: Column, is_sketch: bool, lgk: int) -> Column:
@@ -158,31 +182,30 @@ def agg_expr(
         )
 
     if atype == "thetaSketch":
-        # KMV theta-style distinct (functions/theta): array<long> state,
-        # mergeable; Druid DataSketches-extension JSON shape {type, name,
-        # fieldName, size}. A field that is ALREADY a state (array<long>)
-        # merges instead of rebuilding — same convention as hyperUnique.
-        from druid_hadoop_utils_spark.functions.theta import (
-            DEFAULT_K,
-            is_kmv_state,
-            kmv_estimate,
-            kmv_merge,
-            kmv_state,
-        )
-
+        # DataSketches theta sketch; Druid DataSketches-extension JSON shape
+        # {type, name, fieldName, size}. A field that is ALREADY a sketch
+        # (binary) merges instead of rebuilding — same rule as hyperUnique.
         if field is None:
             raise ValueError(f"thetaSketch needs fieldName: {spec!r}")
-        k = int(spec.get("size", DEFAULT_K))
-        try:
-            already_state = schema is not None and is_kmv_state(schema[field].dataType)
-        except KeyError:
-            already_state = False
-        partial = (
-            kmv_merge(value(field), k) if already_state else kmv_state(value(field), k)
-        )
+        lg = _theta_lg(spec)
+        ftype = _field_type(schema, field)
+        if isinstance(ftype, ArrayType) and isinstance(ftype.elementType, LongType):
+            # theta_sketch_agg would sketch the arrays themselves as values
+            raise ValueError(
+                f"thetaSketch field {field!r} is array<long>, the engine's "
+                "former KMV state; theta states are binary sketches now — "
+                f"re-materialize it from raw rows: {spec!r}"
+            )
+        if isinstance(ftype, BinaryType):
+            partial = F.theta_union_agg(value(field), lg)
+        else:
+            partial = F.theta_sketch_agg(value(field), lg)
         if not finalize:
             return partial.alias(name)
-        return kmv_estimate(partial, k).cast(_FINAL_CASTS[finalize_type]).alias(name)
+        return (
+            F.theta_sketch_estimate(partial).cast(_FINAL_CASTS[finalize_type])
+            .alias(name)
+        )
 
     if atype in {"approxHistogram", "approxHistogramFold"}:
         # Druid's approximate-histogram extension, re-expressed on the
@@ -190,8 +213,6 @@ def agg_expr(
         # the state is self-describing, so `quantile` post-aggs need no
         # side-channel parameters. "Fold" (merging pre-built states) is
         # detected from a struct-typed input column.
-        from pyspark.sql.types import StructType as _St
-
         from druid_hadoop_utils_spark.functions.quantiles import (
             DEFAULT_BINS,
             qhist_merge,
@@ -202,13 +223,7 @@ def agg_expr(
         if field is None:
             raise ValueError(f"{atype} needs fieldName: {spec!r}")
         bins = int(spec.get("numBuckets", DEFAULT_BINS))
-        is_state = False
-        if schema is not None:
-            try:
-                is_state = isinstance(schema[field].dataType, _St)
-            except KeyError:
-                pass
-        if is_state:
+        if isinstance(_field_type(schema, field), StructType):
             partial = qhist_merge(F.col(field), bins)
         else:
             lo = float(spec.get("lowerLimit", 0.0))
@@ -263,26 +278,18 @@ def finalize_sketch_columns(
     each named hyperUnique/cardinality/thetaSketch state column with its
     double estimate (empty/null state — an empty filled bucket — reads
     0.0, Druid's empty-sketch estimate)."""
-    from druid_hadoop_utils_spark.functions.theta import DEFAULT_K, kmv_estimate
-
     for a in aggregations:
         name = agg_out_name(a)
         if name not in names:
             continue
         t = agg_inner(a).get("type")
         if t in ("hyperUnique", "cardinality"):
-            df = df.withColumn(
-                name,
-                F.coalesce(
-                    F.hll_sketch_estimate(F.col(name)).cast("double"),
-                    F.lit(0.0),
-                ),
-            )
+            est = F.hll_sketch_estimate(F.col(name)).cast("double")
         elif t == "thetaSketch":
-            k = int(agg_inner(a).get("size", DEFAULT_K))
-            df = df.withColumn(
-                name, F.coalesce(kmv_estimate(F.col(name), k), F.lit(0.0))
-            )
+            est = _theta_estimate(F.col(name))
+        else:
+            continue
+        df = df.withColumn(name, F.coalesce(est, F.lit(0.0)))
     return df
 
 
@@ -334,45 +341,33 @@ def _post_expr(spec: dict) -> Column:
         # (reference: druid_exporter.pig:4,15 + PostAggregatorAdapter.java:94)
         return F.hll_sketch_estimate(F.col(spec["fieldName"])).cast("double")
     if ptype == "thetaSketchEstimate":
-        # finalize a non-finalized KMV theta state column → double estimate
-        # (Druid DataSketches extension post-agg shape). A nested
-        # thetaSketchSetOp field yields a set-op struct, which finalizes
-        # through the unified size/theta estimator instead.
-        from druid_hadoop_utils_spark.functions.theta import (
-            DEFAULT_K,
-            kmv_estimate,
-            kmv_setop_estimate,
-        )
-
+        # finalize a theta sketch → double estimate (Druid DataSketches
+        # extension post-agg shape): a non-finalized aggregator column, or
+        # a nested thetaSketchSetOp result
         inner = spec.get("field")
-        if inner and inner.get("type") == "thetaSketchSetOp":
-            return kmv_setop_estimate(_post_expr(inner))
         target = _post_expr(inner) if inner else F.col(spec["fieldName"])
-        return kmv_estimate(target, int(spec.get("size", DEFAULT_K)))
+        return _theta_estimate(target)
     if ptype == "thetaSketchSetOp":
         # Druid DataSketches thetaSketchSetOp: {"func": "UNION|INTERSECT|
-        # NOT", "fields": [postAggs...]} → a composable set-op sketch
-        # struct. Raw array-state fields are lifted; nested setOp fields
-        # compose directly; ops fold left across >2 fields (Druid
-        # semantics).
-        from druid_hadoop_utils_spark.functions.theta import (
-            DEFAULT_K,
-            kmv_setop,
-            to_setop_sketch,
-        )
-
-        k = int(spec.get("size", DEFAULT_K))
+        # NOT", "size": k, "fields": [postAggs...]} → a theta sketch, so
+        # set ops nest; ops fold left across >2 fields (Druid semantics)
+        lg = _theta_lg(spec)
+        ops = {
+            "UNION": lambda a, b: F.theta_union(a, b, lg),
+            "INTERSECT": F.theta_intersection,
+            "NOT": F.theta_difference,
+        }
+        func = spec.get("func")
+        if func not in ops:
+            raise ValueError(
+                f"thetaSketchSetOp func must be one of {sorted(ops)}: {spec!r}"
+            )
         fields = spec.get("fields", [])
         if len(fields) < 2:
             raise ValueError(f"thetaSketchSetOp needs >=2 fields: {spec!r}")
-
-        def lifted(f: dict) -> Column:
-            e = _post_expr(f)
-            return e if f.get("type") == "thetaSketchSetOp" else to_setop_sketch(e, k)
-
-        out = lifted(fields[0])
+        out = _post_expr(fields[0])
         for f in fields[1:]:
-            out = kmv_setop(spec["func"], out, lifted(f), k)
+            out = ops[func](out, _post_expr(f))
         return out
     if ptype == "arithmetic":
         fn = spec["fn"]
@@ -440,16 +435,6 @@ def group_aggregate(
     One shuffle on the group keys; Catalyst plans partial+final hash
     aggregation automatically (map-side combine), so sketch partials merge
     exactly like the reference's NonFinalizing → merge → Finalizing chain.
-
-    Finalizing ``thetaSketch`` aggregations over RAW (non-state) columns
-    route through ``kmv_distinct``'s memory-bounded two-shuffle build and
-    join back on the group keys: the expression state's transient
-    ``collect_set`` is O(group distinct count), which is a cliff for
-    unbounded groups (VERDICT r2). The expression path remains for
-    ``finalize=False`` (a mergeable state column is the point there), for
-    re-merging existing state columns, for filtered-wrapped thetas, and
-    for global (keyless) aggregation where both paths funnel one group
-    through one reducer anyway.
     """
     keys = ([time_column] if time_column else []) + list(dimensions)
     skip_final = (no_finalize or set()) | sketch_post_agg_refs(post_aggregations)
@@ -463,55 +448,8 @@ def group_aggregate(
         # having/limit over the aggregator name still see a double.
         return finalize and agg_out_name(a) not in skip_final
 
-    def _bounded_theta(a: dict) -> bool:
-        # the memory-bounded kmv_distinct route applies to keyed
-        # thetaSketch over RAW columns whether or not the column finalizes
-        # (it produces both the bounded state and the estimate)
-        if not (finalize and keys) or a.get("type") != "thetaSketch":
-            return False
-        from druid_hadoop_utils_spark.functions.theta import is_kmv_state
-
-        f = a.get("fieldName")
-        try:
-            return f is not None and not is_kmv_state(df.schema[f].dataType)
-        except KeyError:
-            return False
-
-    bounded = [a for a in aggregations if _bounded_theta(a)]
-    rest = [a for a in aggregations if not _bounded_theta(a)]
-
-    aggs = [agg_expr(a, df.schema, finalize=_fin(a), lgk=lgk) for a in rest]
-    if bounded and not rest:
-        # base frame still defines the group universe (incl. groups whose
-        # theta field is entirely null)
-        aggs = [F.count(F.lit(1)).alias("__ga_n")]
+    aggs = [agg_expr(a, df.schema, finalize=_fin(a), lgk=lgk) for a in aggregations]
     out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    if bounded:
-        from druid_hadoop_utils_spark.functions.theta import DEFAULT_K, kmv_distinct
-
-        for a in bounded:
-            k = int(a.get("size", DEFAULT_K))
-            pick = "estimate" if _fin(a) else "kmv"
-            th = kmv_distinct(df, keys, a["fieldName"], k).select(
-                *keys, F.col(pick).alias(agg_out_name(a))
-            )
-            out = out.join(th, keys, "left")
-        # an absent group in the theta frame means zero non-null values —
-        # estimate 0.0 / empty state, matching the expression path
-        fills = [
-            F.coalesce(F.col(agg_out_name(a)), F.lit(0.0)).cast("double")
-            .alias(agg_out_name(a))
-            if _fin(a)
-            else F.coalesce(
-                F.col(agg_out_name(a)), F.array().cast("array<long>")
-            ).alias(agg_out_name(a))
-            for a in bounded
-        ]
-        out = out.select(
-            *keys,
-            *[F.col(agg_out_name(a)) for a in rest],
-            *fills,
-        ).select(*keys, *[agg_out_name(a) for a in aggregations])
     if post_aggregations:
         out = out.select("*", *[post_agg_expr(p) for p in post_aggregations])
         if finalize:

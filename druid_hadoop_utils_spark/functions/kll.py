@@ -1,7 +1,7 @@
 """KLL-style mergeable rank-quantile sketch.
 
 Completes the engine's mergeable-state family (Druid hyperUnique bytes,
-KMV theta, fixed-range ``qhist`` histograms) with a RANK-based sketch:
+theta sketches, fixed-range ``qhist`` histograms) with a RANK-based sketch:
 no [lo, hi) range declaration, works on any numeric distribution, and its
 partial states merge associatively — the property segment-level
 pre-aggregation needs (build one small state per segment, merge states at

@@ -928,7 +928,7 @@ def _assign_encode_udf(
         cells = np.argsort(-sims, axis=1)[:, 0].astype(np.int32)
         enc = mat
         if residual:
-            assign = np.argmax(mat @ centroids.T, axis=1)
+            assign = np.argmax(sims, axis=1)
             enc = mat - centroids[assign]
         codes = np.empty((len(mat), m), dtype=np.int32)
         for j in range(m):

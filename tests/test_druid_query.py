@@ -395,6 +395,24 @@ def test_native_query_over_managed_segment_table(spark, tmp_path, golden_events)
     assert row.hosts == 3.0
 
 
+def test_cardinality_fields_spelling_over_segment_table(spark, tmp_path, golden_events):
+    """The cardinality aggregator's ``fields`` spelling (an alias of
+    ``fieldNames``) must reach the segment scan's column list too."""
+    from druid_hadoop_utils_spark import write_segment
+
+    write_segment(golden_events, str(tmp_path), "web", "2014-10-22/2014-10-23", "v1")
+    q = {
+        "queryType": "timeseries",
+        "dataSource": "web",
+        "intervals": ["2014-10-22/2014-10-23"],
+        "granularity": "DAY",
+        "aggregations": [
+            {"type": "cardinality", "name": "hosts", "fields": ["user_host"]},
+        ],
+    }
+    assert druid_query(spark, str(tmp_path), q).first().hosts == 3.0
+
+
 def test_theta_setop_post_agg_through_native_query(spark, events):
     """thetaSketchSetOp composes through the full native-query JSON path:
     two filtered theta sketches, INTERSECT estimated as a post-agg,

@@ -158,22 +158,16 @@ def test_registered_lookup_filter_has_no_join(spark, sf_dir):
 
 
 def test_theta_sketch_is_bounded_jvm_side(spark, sf_dir):
-    """Finalizing thetaSketch routes through the memory-bounded
-    kmv_distinct build (round 3): a (keys, hash) dedup aggregate with
-    map-side combine plus a per-key top-k window, joined back to the base
-    aggregate — NOT the collect_set expression whose transient state is
-    O(group distinct count)."""
+    """Finalizing thetaSketch is one theta_sketch_agg in the ordinary
+    two-phase HashAggregate: bounded JVM-side state, no per-group
+    collect_set, no top-k window, no join back, no Python."""
     fn, _ = QUERIES["q_theta_distinct"]
     plan = plan_str(fn(spark, sf_dir))
     ns = nodes(plan)
-    assert "collect_set" not in plan  # the unbounded expression state
-    assert any("Window" in n for n in ns)  # per-key k-smallest truncation
-    # base agg (1 exchange) + hash dedup (1) + window/groupBy reuse of the
-    # same key partitioning (1) — bounded at 3, no cartesian/BNL join
-    assert ns.count("Exchange") <= 3
-    assert not any("BroadcastNestedLoop" in n or "CartesianProduct" in n
-                   for n in ns)
+    assert "collect_set" not in plan
+    assert not any("Window" in n or "Join" in n for n in ns)
     assert "EvalPython" not in plan
+    assert ns.count("Exchange") <= 1
 
 
 def test_natural_bound_filter_stays_codegen(spark, sf_dir):

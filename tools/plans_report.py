@@ -67,9 +67,9 @@ ANNOTATED = {
         "no shuffle for the filter."
     ),
     "q_theta_distinct": (
-        "KMV theta sketch: collect_set partials merge through the standard "
-        "two-phase HashAggregate (one Exchange); the k-truncation and "
-        "estimate are projection-time expressions."
+        "Theta sketch: theta_sketch_agg partials merge through the standard "
+        "two-phase HashAggregate (one Exchange) with bounded JVM-side state; "
+        "the estimate is computed in the final aggregate's result projection."
     ),
     "q_timeseries_zero_fill": (
         "Zero-filled timeseries: the bucket enumeration is a one-row "
@@ -186,7 +186,7 @@ ANNOTATED = {
     ),
     "q_theta_set_ops": (
         "Theta set operations: both filtered sketches build in ONE "
-        "aggregation pass over one scan (two filtered collect_set "
+        "aggregation pass over one scan (two filtered theta_sketch_agg "
         "branches in the same HashAggregate), and INTERSECT/NOT/UNION + "
         "estimates are a pure Project over the 1-row aggregate — no "
         "second scan, no join, no Python."
