@@ -5,18 +5,22 @@ grouping and aggregation (reference: druid_exporter.pig:6-17). Druid itself
 serves three canonical query shapes over the same data — ``timeseries``,
 ``topN``, ``groupBy`` — so a reference user migrating here gets them as
 one-call DataFrame builders. Each is: engine ``load()`` (pruned scan +
-filter + granularity) → ``group_aggregate`` (two-phase aggs + post-aggs) →
-shape-specific ordering/limit. All Catalyst; a topN plans as partial
-top-k per partition (TakeOrderedAndProject), not a global sort.
+filter + granularity) → ONE ``spark.sql`` statement over it
+(``sqltext.sql_over``) holding the dimension specs, the two-phase
+aggregation and post-aggs (``group_aggregate_sql``) and the
+shape-specific zero-fill / ranking / ordering / limit. All Catalyst; the
+compile is a constant number of py4j round trips and launches no Spark
+job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from druid_hadoop_utils_spark.functions.aggregators import group_aggregate
-from druid_hadoop_utils_spark.functions.filters import _is_array, filter_to_column
+from druid_hadoop_utils_spark.functions.filters import _is_array, filter_sql
+from druid_hadoop_utils_spark.functions.sqltext import ident, lit, sql_over
 from druid_hadoop_utils_spark.plans.planner import load
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
 
@@ -36,55 +40,41 @@ def _base(
     return df, spec
 
 
-def _bucket_frame(spark: SparkSession, granularity, intervals) -> DataFrame:
-    """One row per granularity bucket start covering the (condensed)
-    intervals — Catalyst ``sequence`` + ``explode``, no driver loop over
-    buckets.
+def _bucket_sql(granularity, intervals) -> str:
+    """SELECT text: one row per granularity bucket start covering the
+    (condensed) intervals — Catalyst ``sequence`` + ``explode``, no driver
+    loop over buckets.
 
     timeZone period granularities enumerate in the LOCAL wall-time frame
     (truncate → sequence → to_utc_timestamp): stepping UTC instants by a
-    fixed INTERVAL diverges from the tz-aware ``granularity_expr`` values
+    fixed INTERVAL diverges from the tz-aware ``granularity_sql`` values
     after a DST transition, which would silently drop those buckets'
     aggregated rows in the fill join."""
     from druid_hadoop_utils_spark.functions.granularity import (
         bucket_step_sql,
-        granularity_expr,
+        granularity_sql,
     )
     from druid_hadoop_utils_spark.intervals import parse_intervals
 
-    ivs = parse_intervals(intervals)
     tz = granularity.get("timeZone") if isinstance(granularity, dict) else None
-    step = F.expr(bucket_step_sql(granularity))
-    parts = []
-    for iv in ivs:
-        start = F.lit(iv.start.replace(tzinfo=None)).cast("timestamp")
+    step = bucket_step_sql(granularity)
+    seqs = []
+    for iv in parse_intervals(intervals):
+        start = lit(iv.start)
         # sequence stop is inclusive: stop just short of the exclusive end
-        stop = F.lit(iv.end.replace(tzinfo=None)).cast("timestamp") - F.expr(
-            "INTERVAL 1 MICROSECOND"
-        )
-        first = granularity_expr(granularity, start)
+        stop = f"{lit(iv.end)} - INTERVAL 1 MICROSECOND"
+        first = granularity_sql(granularity, start)
         if tz:
-            # same from_utc → trunc → to_utc composition as granularity_expr,
+            # same from_utc → trunc → to_utc composition as granularity_sql,
             # so enumerated starts join exactly against truncated data rows
-            seq = F.sequence(
-                F.from_utc_timestamp(first, tz), F.from_utc_timestamp(stop, tz),
-                step,
-            )
-            parts.append(
-                spark.range(1)
-                .select(F.explode(seq).alias("__local"))
-                .select(F.to_utc_timestamp("__local", tz).alias("__time"))
-            )
+            seqs.append(f"sequence(from_utc_timestamp({first}, {lit(tz)}), "
+                        f"from_utc_timestamp({stop}, {lit(tz)}), {step})")
         else:
-            parts.append(
-                spark.range(1).select(
-                    F.explode(F.sequence(first, stop, step)).alias("__time")
-                )
-            )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            seqs.append(f"sequence({first}, {stop}, {step})")
+    buckets = f"concat({', '.join(seqs)})"
+    if tz:
+        buckets = f"transform({buckets}, __b -> to_utc_timestamp(__b, {lit(tz)}))"
+    return f"SELECT explode({buckets}) AS `__time` FROM range(1)"
 
 
 # aggregator types whose Druid "empty bucket" value is zero; everything
@@ -110,21 +100,24 @@ def timeseries(
     interval with no rows still appear, count/sum aggregators zero-filled
     (min/max/sketches null) and post-aggs evaluated over the fill. Pass
     ``skip_empty_buckets=True`` for the data-buckets-only behavior."""
-    if not isinstance(spec, LoadSpec):
-        spec = LoadSpec.from_json(spec, data_source=data_source, interval=interval)
-    df, _ = _base(spark, source, spec, interval, data_source, time_column)
-    # post-aggs evaluate AFTER the empty-bucket fill (Druid computes them
-    # over the filled aggregate row); aggregators the post-aggs consume as
-    # sketches must stay non-finalized through the fill
     from druid_hadoop_utils_spark.functions.aggregators import (
+        _post_sql,
         agg_inner,
         agg_out_name,
-        finalize_sketch_columns,
+        finalized_sql,
+        group_aggregate_sql,
+        post_agg_sql,
         sketch_post_agg_refs,
     )
 
+    if not isinstance(spec, LoadSpec):
+        spec = LoadSpec.from_json(spec, data_source=data_source, interval=interval)
+    df, _ = _base(spark, source, spec, interval, data_source, time_column)
+    schema = df.schema
+    # post-aggs evaluate AFTER the empty-bucket fill (Druid computes them
+    # over the filled aggregate row); aggregators the post-aggs consume as
+    # sketches must stay non-finalized through the fill
     refs = sketch_post_agg_refs(post_aggregations)
-    out = group_aggregate(df, [], aggregations, None, no_finalize=refs)
     gran = spec.granularity
     # dict granularities (duration/period) always have bucket structure;
     # only the named NONE/ALL shapes skip the fill (and a dict must not hit
@@ -132,37 +125,40 @@ def timeseries(
     has_buckets = not (
         isinstance(gran, str) and gran.upper() in {"NONE", "ALL"}
     )
-    if not skip_empty_buckets and has_buckets:
-        ivs = spec.intervals if interval is None else interval
-        buckets = _bucket_frame(spark, gran, ivs)
-        out = buckets.join(out, "__time", "left")
-        fills = []
-        for a in aggregations:
-            name = agg_out_name(a)
-            if agg_inner(a).get("type") in _ZERO_FILL_TYPES:
-                fills.append(F.coalesce(F.col(name), F.lit(0)).alias(name))
-            else:
-                fills.append(F.col(name))
-        out = out.select("__time", *fills)
-    if post_aggregations:
-        from druid_hadoop_utils_spark.functions.aggregators import post_agg_expr
+    names = [ident(agg_out_name(a)) for a in aggregations]
+    cols = ["`__time`"]
+    for a, name in zip(aggregations, names):
+        # the broker step: referenced sketch columns re-finalize
+        cols.append((agg_out_name(a) in refs and finalized_sql(a)) or name)
+    for p in post_aggregations or []:
+        if p.get("type") in {"thetaSketchEstimate", "hyperUniqueCardinality"}:
+            # sketch-finalizing post-aggs over a filled (null-state)
+            # bucket read 0.0 — Druid's empty-sketch estimate
+            cols.append(f"coalesce({_post_sql(p)}, 0.0D) AS "
+                        f"{ident(p.get('name') or p['type'])}")
+        else:
+            cols.append(post_agg_sql(p))
 
-        # sketch-finalizing post-aggs over a filled (null-state) bucket
-        # read 0.0 — Druid's empty-sketch estimate
-        posts = []
-        for p in post_aggregations:
-            e = post_agg_expr(p)
-            if p.get("type") in {"thetaSketchEstimate", "hyperUniqueCardinality"}:
-                e = F.coalesce(e, F.lit(0.0)).alias(p.get("name") or p["type"])
-            posts.append(e)
-        out = out.select("*", *posts)
-    # the broker step: referenced sketch columns re-finalize in the output
-    out = finalize_sketch_columns(out, aggregations, refs)
-    return out.orderBy("__time")
+    def build(scan: str) -> str:
+        text = group_aggregate_sql(scan, schema, ["__time"], aggregations,
+                                   no_finalize=refs)
+        if not skip_empty_buckets and has_buckets:
+            ivs = spec.intervals if interval is None else interval
+            fills = ["`__time`"] + [
+                f"coalesce({n}, 0) AS {n}"
+                if agg_inner(a).get("type") in _ZERO_FILL_TYPES else n
+                for a, n in zip(aggregations, names)]
+            text = (f"SELECT {', '.join(fills)} "
+                    f"FROM ({_bucket_sql(gran, ivs)}) AS __buckets "
+                    f"LEFT JOIN ({text}) AS __aggs USING (`__time`)")
+        return f"SELECT {', '.join(cols)} FROM ({text}) ORDER BY `__time`"
+
+    return sql_over(df, build)
 
 
-def _topn_ordering(metric, dimension: str) -> tuple[list, Column | None]:
-    """Druid 0.9 TopNMetricSpec → (orderBy columns, optional pre-filter).
+def _topn_ordering(metric, dimension: str) -> tuple[list, str | None]:
+    """Druid 0.9 TopNMetricSpec → (ordering (name, ascending) pairs,
+    optional pre-filter SQL text).
 
     A bare string means ``{"type": "numeric", "metric": <string>}``.
     ``numeric`` ranks by the aggregation descending; ``lexicographic``
@@ -176,12 +172,16 @@ def _topn_ordering(metric, dimension: str) -> tuple[list, Column | None]:
         return [(metric["metric"], False), (dimension, True)], None
     if mtype == "lexicographic":
         stop = metric.get("previousStop")
-        flt = F.col(dimension) > F.lit(stop) if stop is not None else None
+        flt = f"{ident(dimension)} > {lit(stop)}" if stop is not None else None
         return [(dimension, True)], flt
     if mtype == "inverted":
         inner, flt = _topn_ordering(metric["metric"], dimension)
         return [(name, not asc) for name, asc in inner], flt
     raise ValueError(f"unknown topN metric spec: {metric!r}")
+
+
+def _order_sql(pairs) -> str:
+    return ", ".join(f"{ident(n)} {'ASC' if asc else 'DESC'}" for n, asc in pairs)
 
 
 def topn(
@@ -201,45 +201,65 @@ def topn(
     granularity bucket (ties broken by dimension value for determinism).
     ``dimension`` may be a name or a DimensionSpec; ``metric`` a name or a
     TopNMetricSpec (numeric / lexicographic / inverted)."""
-    from pyspark.sql import Window
+    from druid_hadoop_utils_spark.functions.aggregators import group_aggregate_sql
 
     df, _ = _base(spark, source, spec, interval, data_source, time_column)
-    df, (dimension,) = _apply_dimension_specs(
-        df, [_normalize_dimension_spec(dimension)]
-    )
-    out = group_aggregate(df, [dimension], aggregations, post_aggregations)
-    pairs, pre_filter = _topn_ordering(metric, dimension)
-    order = [F.col(n).asc() if asc else F.col(n).desc() for n, asc in pairs]
-    if pre_filter is not None:
-        out = out.where(pre_filter)
-    w = Window.partitionBy("__time").orderBy(*order)
-    return (
-        out.withColumn("__rank", F.row_number().over(w))
-        .where(F.col("__rank") <= threshold)
-        .drop("__rank")
-        .orderBy("__time", *order)
-    )
+    schema = df.schema
+
+    def build(scan: str) -> str:
+        src, (dim,), types = _dimensions_sql(
+            scan, schema, [_normalize_dimension_spec(dimension)], explode=False)
+        grouped = group_aggregate_sql(src, types, ["__time", dim], aggregations,
+                                      post_aggregations)
+        pairs, pre_filter = _topn_ordering(metric, dim)
+        order = _order_sql(pairs)
+        where = f" WHERE {pre_filter}" if pre_filter is not None else ""
+        ranked = (f"SELECT *, row_number() OVER (PARTITION BY `__time` "
+                  f"ORDER BY {order}) AS `__rank` FROM ({grouped}){where}")
+        return (f"SELECT * EXCEPT (`__rank`) FROM ({ranked}) "
+                f"WHERE `__rank` <= {int(threshold)} ORDER BY `__time`, {order}")
+
+    return sql_over(df, build)
 
 
-def _apply_dimension_specs(df: DataFrame, specs: list[dict]) -> tuple[DataFrame, list[str]]:
-    """Materialize DimensionSpec outputs (renames / extractionFns) as
-    columns; returns the frame plus the output group-key names. Extraction
-    over a multi-value dimension maps per element (Druid semantics)."""
-    from pyspark.sql.types import ArrayType
+def _dimensions_sql(source: str, schema: StructType, specs: list[dict],
+                    explode: bool) -> tuple[str, list[str], StructType]:
+    """FROM-clause text over ``source`` (columns per ``schema``) that
+    materializes DimensionSpec outputs (renames / extractionFns) as
+    columns, plus the output group-key names and the result's schema.
+    Specs apply in order, each over the previous ones' output. Extraction
+    over a multi-value dimension maps per element (Druid semantics);
+    ``explode`` then gives each value of a multi-value output its own row
+    (Druid's multi-value groupBy)."""
+    from druid_hadoop_utils_spark.functions.filters import extraction_sql
 
-    from druid_hadoop_utils_spark.functions.filters import _extraction_fn
-
+    exprs = {f.name: ident(f.name) for f in schema.fields}
+    types = {f.name: f.dataType for f in schema.fields}
     for d in specs:
         fn, src, out = d["extractionFn"], d["dimension"], d["outputName"]
+        base, dtype = exprs.get(src, ident(src)), types.get(src)
         if fn is not None:
-            col = F.col(src)
-            if isinstance(df.schema[src].dataType, ArrayType):
-                df = df.withColumn(out, F.transform(col, lambda v: _extraction_fn(fn, v)))
+            if isinstance(dtype, ArrayType):
+                exprs[out] = f"transform({base}, __dx -> {extraction_sql(fn, '__dx')})"
+                types[out] = ArrayType(StringType())
             else:
-                df = df.withColumn(out, _extraction_fn(fn, col))
+                exprs[out] = extraction_sql(fn, base)
+                types[out] = StringType()
         elif out != src:
-            df = df.withColumn(out, F.col(src))
-    return df, [d["outputName"] for d in specs]
+            exprs[out], types[out] = base, dtype
+    dims = [d["outputName"] for d in specs]
+    if any(t != ident(n) for n, t in exprs.items()):
+        source = ("(SELECT " + ", ".join(f"{t} AS {ident(n)}" for n, t in exprs.items())
+                  + f" FROM {source})")
+    if explode:
+        for d in dims:
+            if isinstance(types[d], ArrayType):
+                cols = ", ".join(f"explode_outer({ident(n)}) AS {ident(n)}"
+                                 if n == d else ident(n) for n in exprs)
+                source = f"(SELECT {cols} FROM {source})"
+                types[d] = types[d].elementType
+    return source, dims, StructType([StructField(n, t) for n, t in types.items()
+                                     if t is not None])
 
 
 def _normalize_dimension_spec(d) -> dict:
@@ -260,52 +280,46 @@ def _normalize_dimension_spec(d) -> dict:
     }
 
 
-def having_to_column(spec: dict) -> Column:
-    """Druid 0.9 HavingSpec → boolean Column over the aggregated output:
+def having_sql(spec: dict) -> str:
+    """Druid 0.9 HavingSpec → boolean SQL text over the aggregated output:
     equalTo / greaterThan / lessThan on aggregation names, dimSelector on
     group keys, and / or / not combinators."""
     htype = spec.get("type")
-    if htype == "and":
-        out = having_to_column(spec["havingSpecs"][0])
-        for h in spec["havingSpecs"][1:]:
-            out = out & having_to_column(h)
-        return out
-    if htype == "or":
-        out = having_to_column(spec["havingSpecs"][0])
-        for h in spec["havingSpecs"][1:]:
-            out = out | having_to_column(h)
-        return out
+    if htype in ("and", "or"):
+        parts = [having_sql(h) for h in spec["havingSpecs"]]
+        return "(" + f" {htype.upper()} ".join(parts) + ")"
     if htype == "not":
-        return ~F.coalesce(having_to_column(spec["havingSpec"]), F.lit(False))
+        return f"(NOT coalesce({having_sql(spec['havingSpec'])}, false))"
     if htype in {"equalTo", "greaterThan", "lessThan"}:
-        col = F.col(spec["aggregation"]).cast("double")
-        val = F.lit(float(spec["value"]))
-        return {"equalTo": col == val, "greaterThan": col > val,
-                "lessThan": col < val}[htype]
+        op = {"equalTo": "=", "greaterThan": ">", "lessThan": "<"}[htype]
+        return (f"(CAST({ident(spec['aggregation'])} AS DOUBLE) {op} "
+                f"{lit(float(spec['value']))})")
     if htype == "dimSelector":
-        return F.col(spec["dimension"]) == F.lit(spec["value"])
+        return f"({ident(spec['dimension'])} = {lit(spec['value'])})"
     raise ValueError(f"unknown havingSpec type: {htype!r}")
 
 
-def _apply_limit_spec(df: DataFrame, spec: dict) -> DataFrame:
-    """Druid 0.9 DefaultLimitSpec: ordered columns + limit."""
-    if spec.get("type", "default") != "default":
-        raise ValueError(f"unknown limitSpec type: {spec!r}")
-    orders = []
-    for c in spec.get("columns", []):
-        if isinstance(c, str):
-            orders.append(F.col(c).asc())
-        else:
-            col = F.col(c["dimension"])
-            orders.append(
-                col.desc() if c.get("direction", "ascending").lower()
-                in {"descending", "desc"} else col.asc()
-            )
-    if orders:
-        df = df.orderBy(*orders)
-    if spec.get("limit") is not None:
-        df = df.limit(int(spec["limit"]))
-    return df
+def _having_limit_sql(source: str, q: dict) -> str:
+    """groupBy's ``having`` / ``limitSpec`` (Druid 0.9 DefaultLimitSpec:
+    ordered columns + limit) / ``limit`` over ``source`` as one SELECT."""
+    text = f"SELECT * FROM {source}"
+    if q.get("having"):
+        text += f" WHERE {having_sql(q['having'])}"
+    spec = q.get("limitSpec")
+    if spec:
+        if spec.get("type", "default") != "default":
+            raise ValueError(f"unknown limitSpec type: {spec!r}")
+        pairs = [(c, True) if isinstance(c, str) else
+                 (c["dimension"], c.get("direction", "ascending").lower()
+                  not in {"descending", "desc"})
+                 for c in spec.get("columns", [])]
+        if pairs:
+            text += f" ORDER BY {_order_sql(pairs)}"
+        if spec.get("limit") is not None:
+            text += f" LIMIT {int(spec['limit'])}"
+    if q.get("limit"):
+        text = f"SELECT * FROM ({text}) LIMIT {int(q['limit'])}"
+    return text
 
 
 def druid_query(
@@ -508,15 +522,15 @@ def druid_query(
         df = load(spark, source, scan_spec, interval=interval, data_source=ds,
                   time_column=time_column)
         parts = []
+        schema = df.schema
         for d in search_dims:
-            matches = df.where(
-                filter_to_column({"type": "search", "dimension": d, "query": sq},
-                                 df.schema)
-            )
-            col = F.explode(F.col(d)) if _is_array(df.schema, d) else F.col(d)
+            matches = df.where(filter_sql(
+                {"type": "search", "dimension": d, "query": sq}, schema))
+            value = (f"explode({ident(d)})" if _is_array(schema, d)
+                     else ident(d))
             parts.append(
-                matches.select(F.lit(d).alias("dimension"), col.alias("value"))
-                .groupBy("dimension", "value").agg(F.count("*").alias("count"))
+                matches.selectExpr(f"{lit(d)} AS dimension", f"{value} AS value")
+                .groupBy("dimension", "value").agg(F.expr("count(*) AS count"))
             )
         out = parts[0]
         for p in parts[1:]:
@@ -525,9 +539,9 @@ def druid_query(
         # Druid 0.9 SearchSortSpec: lexicographic (default) or strlen
         sort = (q.get("sort") or {}).get("type", "lexicographic")
         if sort == "lexicographic":
-            order = [F.col("value"), F.col("dimension")]
+            order = ["value", "dimension"]
         elif sort == "strlen":
-            order = [F.length("value"), F.col("value"), F.col("dimension")]
+            order = [F.expr("length(value)"), "value", "dimension"]
         else:
             raise ValueError(f"unknown search sort type: {sort!r}")
         return out.orderBy(*order).limit(limit)
@@ -537,9 +551,9 @@ def druid_query(
         bound = q.get("bound")  # Druid 0.9: minTime | maxTime | absent=both
         aggs_tb = []
         if bound in (None, "minTime"):
-            aggs_tb.append(F.min("__time").alias("minTime"))
+            aggs_tb.append(F.expr("min(`__time`) AS minTime"))
         if bound in (None, "maxTime"):
-            aggs_tb.append(F.max("__time").alias("maxTime"))
+            aggs_tb.append(F.expr("max(`__time`) AS maxTime"))
         if not aggs_tb:
             raise ValueError(f"unknown timeBoundary bound: {bound!r}")
         return df.agg(*aggs_tb)
@@ -550,7 +564,7 @@ def druid_query(
         # the time column only.
         df = load(spark, source, spec, interval=interval, data_source=ds,
                   time_column=time_column)
-        return df.agg(F.max("__time").alias("maxIngestedEventTime"))
+        return df.agg(F.expr("max(`__time`) AS maxIngestedEventTime"))
     if qtype == "segmentMetadata":
         # driver-side manifest inventory as a DataFrame (the reference's
         # metadata surface, SURVEY.md §2.1 S1)
@@ -576,30 +590,27 @@ def druid_query(
                 )
             from druid_hadoop_utils_spark.intervals import Interval
             from druid_hadoop_utils_spark.plans.planner import (
-                _interval_pred,
-                _scan_segments,
+                _scan,
+                interval_sql,
             )
 
             span = Interval(interval[0].start, interval[-1].end)
-            df = _scan_segments(spark, source, ds, span, as_of=q.get("asOf"))
+            df, schema = _scan(spark, source, ds, span, as_of=q.get("asOf"))
+            dtypes = {f.name: f.dataType.simpleString()
+                      for f in (schema or df.schema).fields}
             # normalize the stored time column exactly as load() does
             # before comparing against timestamp literals (epoch-nanos
             # bigint from imported segments, or TIMESTAMP_NTZ)
-            ttype = dict(df.dtypes).get("__time")
+            ttype = dtypes.get("__time")
             if ttype == "bigint":
                 df = df.withColumn(
-                    "__time", F.timestamp_micros(F.expr("`__time` DIV 1000"))
-                )
+                    "__time", F.expr("timestamp_micros(`__time` DIV 1000)"))
             elif ttype == "timestamp_ntz":
-                df = df.withColumn("__time", F.col("__time").cast("timestamp"))
-            pred = _interval_pred(interval[0], F.col("__time"))
-            for iv2 in interval[1:]:
-                pred = pred | _interval_pred(iv2, F.col("__time"))
-            df = df.where(pred)
+                df = df.withColumn("__time", F.expr("CAST(`__time` AS TIMESTAMP)"))
+            df = df.where(interval_sql(interval))
             # MapType has no ordering/equality in Spark: skip those
             # columns rather than failing the whole analysis
-            dtypes = dict(df.dtypes)
-            cols = [c for c in df.columns
+            cols = [c for c in dtypes
                     if c != "__time" and not dtypes[c].startswith("map<")]
             schema_str = ("column string, type string, cardinality long, "
                           "min_value string, max_value string")
@@ -608,13 +619,13 @@ def druid_query(
             aggs = []
             for c in cols:
                 if "cardinality" in analysis:
-                    aggs.append(F.count_distinct(F.col(c)).alias(f"__card_{c}"))
+                    aggs.append(f"count(DISTINCT {ident(c)}) AS {ident('__card_' + c)}")
                 if "minmax" in analysis:
                     aggs += [
-                        F.min(c).cast("string").alias(f"__min_{c}"),
-                        F.max(c).cast("string").alias(f"__max_{c}"),
+                        f"CAST(min({ident(c)}) AS STRING) AS {ident('__min_' + c)}",
+                        f"CAST(max({ident(c)}) AS STRING) AS {ident('__max_' + c)}",
                     ]
-            row = df.agg(*aggs).collect()[0]
+            row = df.selectExpr(*aggs).collect()[0]
             out_rows = [
                 (
                     c, dtypes[c],
@@ -696,16 +707,13 @@ def druid_query(
                 "plain dataSource, default dimension specs, and no asOf "
                 "(materialized states cover only the current timeline)"
             )
+        finish = any(q.get(k) for k in ("having", "limitSpec", "limit"))
         if out is None:
-            out = groupby(spark, source, spec, raw_dims, aggs, posts,
-                          interval=interval, data_source=ds,
-                          time_column=time_column)
-        if q.get("having"):
-            out = out.where(having_to_column(q["having"]))
-        if q.get("limitSpec"):
-            out = _apply_limit_spec(out, q["limitSpec"])
-        if q.get("limit"):
-            out = out.limit(int(q["limit"]))
+            return _groupby(spark, source, spec, raw_dims, aggs, posts,
+                            interval, ds, time_column, True,
+                            q if finish else None)
+        if finish:
+            out = sql_over(out, lambda src: _having_limit_sql(src, q))
         return out
     raise ValueError(f"unsupported queryType: {qtype!r}")
 
@@ -726,13 +734,28 @@ def groupby(
     explode so each value groups separately (Druid semantics,
     SURVEY.md §7.4), unless ``explode_multivalue=False``. Dimensions may
     be bare names or Druid DimensionSpecs (default / extraction)."""
-    from pyspark.sql.types import ArrayType
+    return _groupby(spark, source, spec, dimensions, aggregations,
+                    post_aggregations, interval, data_source, time_column,
+                    explode_multivalue, None)
+
+
+def _groupby(spark, source, spec, dimensions, aggregations, post_aggregations,
+             interval, data_source, time_column, explode_multivalue,
+             query: dict | None) -> DataFrame:
+    """``groupby`` as one SQL statement over the load, with ``query``'s
+    having / limitSpec / limit folded in when given."""
+    from druid_hadoop_utils_spark.functions.aggregators import group_aggregate_sql
 
     df, spec_obj = _base(spark, source, spec, interval, data_source, time_column)
+    schema = df.schema
     raw = dimensions if dimensions is not None else spec_obj.dimensions
-    df, dims = _apply_dimension_specs(df, [_normalize_dimension_spec(d) for d in raw])
-    if explode_multivalue:
-        for d in dims:
-            if isinstance(df.schema[d].dataType, ArrayType):
-                df = df.withColumn(d, F.explode_outer(d))
-    return group_aggregate(df, dims, aggregations, post_aggregations)
+
+    def build(scan: str) -> str:
+        src, dims, types = _dimensions_sql(
+            scan, schema, [_normalize_dimension_spec(d) for d in raw],
+            explode=explode_multivalue)
+        text = group_aggregate_sql(src, types, ["__time", *dims], aggregations,
+                                   post_aggregations)
+        return _having_limit_sql(f"({text})", query) if query else text
+
+    return sql_over(df, build)

@@ -1,4 +1,4 @@
-"""Druid AggregatorFactory / PostAggregator JSON → Spark Columns.
+"""Druid AggregatorFactory / PostAggregator JSON → Spark SQL text.
 
 Re-expresses the reference's two-phase aggregation protocol (SURVEY.md §2.5,
 §2.6). The reference wraps Druid factories in Pig UDFs with explicit
@@ -15,7 +15,9 @@ partial (bytes) vs final (estimate) variants:
 
 In Spark the partial/merge split is automatic inside ``agg()`` (Catalyst
 plans partial+final HashAggregate), so the adapter layer reduces to: JSON
-spec → the right builtin Column expression. Sketch state rides as
+spec → the right builtin expression, emitted as one SQL text per
+aggregator (``agg_sql`` / ``post_agg_sql``; ``agg_expr`` / ``post_agg_expr``
+wrap it in ``F.expr``). Sketch state rides as
 ``BinaryType`` through the DataSketches ``hll_*`` (hyperUnique,
 cardinality) and ``theta_*`` (thetaSketch) builtin families and never
 crosses into Python — the per-row Python path would be the 100 TB perf
@@ -33,7 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, LongType, StructType
 
-from druid_hadoop_utils_spark.functions.filters import filter_to_column
+from druid_hadoop_utils_spark.functions.filters import filter_sql
+from druid_hadoop_utils_spark.functions.sqltext import ident, lit, sql_over
 
 # Default HLL precision: lgK=12 is the DataSketches default; the sketch is
 # exact (coupon mode) for small cardinalities and ~1.6% RSE beyond.
@@ -44,16 +47,15 @@ DEFAULT_LGK = 12
 DEFAULT_THETA_SIZE = 16384
 
 _SIMPLE = {
-    "count": lambda c: F.count(c),
-    "longSum": lambda c: F.sum(c.cast("long")).cast("long"),
-    "doubleSum": lambda c: F.sum(c.cast("double")),
-    "longMin": lambda c: F.min(c.cast("long")),
-    "longMax": lambda c: F.max(c.cast("long")),
-    "doubleMin": lambda c: F.min(c.cast("double")),
-    "doubleMax": lambda c: F.max(c.cast("double")),
+    "longSum": "CAST(sum(CAST({} AS BIGINT)) AS BIGINT)",
+    "doubleSum": "sum(CAST({} AS DOUBLE))",
+    "longMin": "min(CAST({} AS BIGINT))",
+    "longMax": "max(CAST({} AS BIGINT))",
+    "doubleMin": "min(CAST({} AS DOUBLE))",
+    "doubleMax": "max(CAST({} AS DOUBLE))",
 }
 
-_FINAL_CASTS = {"long": "long", "float": "float", "double": "double"}
+_FINAL_CASTS = {"long": "BIGINT", "float": "FLOAT", "double": "DOUBLE"}
 
 
 def _field_type(schema: StructType | None, name: str):
@@ -80,79 +82,68 @@ def _theta_lg(spec: dict) -> int:
     return size.bit_length() - 1
 
 
-def _theta_estimate(sketch: Column) -> Column:
-    return F.theta_sketch_estimate(sketch).cast("double")
-
-
-def _hll_partial(col: Column, is_sketch: bool, lgk: int) -> Column:
+def hll_partial_sql(value: str, is_sketch: bool, lgk: int) -> str:
     """Partial HLL state: build from raw values, or merge pre-built sketches
     (the reference merges pre-rolled ``hyperUnique`` columns the same way)."""
     if is_sketch:
-        return F.hll_union_agg(col, F.lit(True))
-    return F.hll_sketch_agg(col, F.lit(lgk))
+        return f"hll_union_agg({value}, true)"
+    return f"hll_sketch_agg({value}, {int(lgk)})"
 
 
-def agg_expr(
+def agg_sql(
     spec: dict,
-    schema: StructType | DataFrame | None = None,
+    schema: StructType | None = None,
     finalize: bool = True,
     finalize_type: str = "double",
     lgk: int = DEFAULT_LGK,
-    _cond: Column | None = None,
-) -> Column:
-    """Build the aggregate Column for one AggregatorFactory JSON spec.
+) -> str:
+    """SQL text (``<aggregate> AS <name>``) for one AggregatorFactory JSON
+    spec; ``schema`` is the aggregated frame's (binary/struct fields are
+    pre-built states to merge)."""
+    body = _agg_body(spec, schema, finalize, finalize_type, lgk, None)
+    return f"{body} AS {ident(agg_out_name(spec))}"
 
-    ``finalize=False`` is the NonFinalizing path (sketch state as binary,
-    re-mergeable); ``finalize=True`` finalizes (HLL → estimate, cast per
-    ``finalize_type`` like the reference's Long/Float/Double adapters).
-    The result is aliased to ``spec['name']``.
-    """
-    if isinstance(schema, DataFrame):
-        schema = schema.schema
+
+def _agg_body(spec: dict, schema, finalize: bool, finalize_type: str,
+              lgk: int, cond: str | None) -> str:
     atype = spec.get("type")
-    name = spec.get("name") or spec.get("fieldName") or atype
 
     if atype == "filtered":
-        cond = filter_to_column(spec["filter"], schema)
-        inner = dict(spec["aggregator"])
-        inner.setdefault("name", spec.get("name", inner.get("name")))
-        return agg_expr(inner, schema, finalize, finalize_type, lgk, _cond=cond).alias(
-            inner.get("name") or name
-        )
+        return _agg_body(spec["aggregator"], schema, finalize, finalize_type,
+                         lgk, filter_sql(spec["filter"], schema))
 
-    def value(field: str | None) -> Column:
-        col = F.col(field) if field else F.lit(1)
-        if _cond is not None:
-            col = F.when(_cond, col)
-        return col
+    def value(field: str | None) -> str:
+        v = ident(field) if field else "1"
+        return f"CASE WHEN {cond} THEN {v} END" if cond is not None else v
+
+    def finalized(partial: str, estimate: str) -> str:
+        if not finalize:
+            return partial
+        return f"CAST({estimate}({partial}) AS {_FINAL_CASTS[finalize_type]})"
 
     if atype == "count":
-        return F.count(value(None)).alias(name)
+        return f"count({value(None)})"
 
     field = spec.get("fieldName")
     if atype in _SIMPLE:
         if field is None:
             raise ValueError(f"{atype} aggregator needs fieldName: {spec!r}")
-        return _SIMPLE[atype](value(field)).alias(name)
+        return _SIMPLE[atype].format(value(field))
 
     if atype in {"longFirst", "longLast", "doubleFirst", "doubleLast"}:
         # Druid 0.9.1 first/last aggregators: the metric value at the
         # min/max __time of the group — Spark's min_by/max_by exactly
         if field is None:
             raise ValueError(f"{atype} aggregator needs fieldName: {spec!r}")
-        pick = F.min_by if atype.endswith("First") else F.max_by
-        cast = "long" if atype.startswith("long") else "double"
-        return pick(value(field).cast(cast), F.col("__time")).alias(name)
+        pick = "min_by" if atype.endswith("First") else "max_by"
+        cast = "BIGINT" if atype.startswith("long") else "DOUBLE"
+        return f"{pick}(CAST({value(field)} AS {cast}), `__time`)"
 
     if atype == "hyperUnique":
         if field is None:
             raise ValueError(f"hyperUnique needs fieldName: {spec!r}")
-        partial = _hll_partial(value(field), _is_binary(schema, field), lgk)
-        if not finalize:
-            return partial.alias(name)
-        return (
-            F.hll_sketch_estimate(partial).cast(_FINAL_CASTS[finalize_type]).alias(name)
-        )
+        partial = hll_partial_sql(value(field), _is_binary(schema, field), lgk)
+        return finalized(partial, "hll_sketch_estimate")
 
     if atype == "cardinality":
         fields = spec.get("fieldNames") or spec.get("fields") or ([field] if field else [])
@@ -163,23 +154,18 @@ def agg_expr(
             # \x01 separator keeps value boundaries distinct (('ab','c') vs
             # ('a','bc')); the \x00 null sentinel matters because concat_ws
             # SKIPS nulls, which would collapse (null,'x') with ('x',null)
-            combined = F.concat_ws(
-                "\x01",
-                *[F.coalesce(F.col(f).cast("string"), F.lit("\x00")) for f in fields],
-            )
-            if _cond is not None:
-                combined = F.when(_cond, combined)
-            partial = F.hll_sketch_agg(combined, F.lit(lgk))
+            parts = ", ".join(f"coalesce(CAST({ident(f)} AS STRING), {lit(chr(0))})"
+                              for f in fields)
+            combined = f"concat_ws({lit(chr(1))}, {parts})"
+            if cond is not None:
+                combined = f"CASE WHEN {cond} THEN {combined} END"
+            partial = f"hll_sketch_agg({combined}, {int(lgk)})"
         else:
-            sketches = [F.hll_sketch_agg(value(f), F.lit(lgk)) for f in fields]
+            sketches = [f"hll_sketch_agg({value(f)}, {int(lgk)})" for f in fields]
             partial = sketches[0]
             for s in sketches[1:]:
-                partial = F.hll_union(partial, s)
-        if not finalize:
-            return partial.alias(name)
-        return (
-            F.hll_sketch_estimate(partial).cast(_FINAL_CASTS[finalize_type]).alias(name)
-        )
+                partial = f"hll_union({partial}, {s})"
+        return finalized(partial, "hll_sketch_estimate")
 
     if atype == "thetaSketch":
         # DataSketches theta sketch; Druid DataSketches-extension JSON shape
@@ -196,16 +182,8 @@ def agg_expr(
                 "former KMV state; theta states are binary sketches now — "
                 f"re-materialize it from raw rows: {spec!r}"
             )
-        if isinstance(ftype, BinaryType):
-            partial = F.theta_union_agg(value(field), lg)
-        else:
-            partial = F.theta_sketch_agg(value(field), lg)
-        if not finalize:
-            return partial.alias(name)
-        return (
-            F.theta_sketch_estimate(partial).cast(_FINAL_CASTS[finalize_type])
-            .alias(name)
-        )
+        fn = "theta_union_agg" if isinstance(ftype, BinaryType) else "theta_sketch_agg"
+        return finalized(f"{fn}({value(field)}, {lg})", "theta_sketch_estimate")
 
     if atype in {"approxHistogram", "approxHistogramFold"}:
         # Druid's approximate-histogram extension, re-expressed on the
@@ -215,24 +193,23 @@ def agg_expr(
         # detected from a struct-typed input column.
         from druid_hadoop_utils_spark.functions.quantiles import (
             DEFAULT_BINS,
-            qhist_merge,
-            qhist_quantile,
-            qhist_state,
+            qhist_merge_sql,
+            qhist_quantile_sql,
+            qhist_state_sql,
         )
 
         if field is None:
             raise ValueError(f"{atype} needs fieldName: {spec!r}")
         bins = int(spec.get("numBuckets", DEFAULT_BINS))
         if isinstance(_field_type(schema, field), StructType):
-            partial = qhist_merge(F.col(field), bins)
+            partial = qhist_merge_sql(ident(field), bins)
         else:
             lo = float(spec.get("lowerLimit", 0.0))
             hi = float(spec.get("upperLimit", 1.0))
-            partial = qhist_state(value(field), lo, hi, bins)
+            partial = qhist_state_sql(value(field), lo, hi, bins)
         if not finalize:
-            return partial.alias(name)
-        prob = float(spec.get("probability", 0.5))
-        return qhist_quantile(partial, prob).alias(name)
+            return partial
+        return qhist_quantile_sql(partial, float(spec.get("probability", 0.5)))
 
     if atype == "javascript":
         raise NotImplementedError(
@@ -242,13 +219,37 @@ def agg_expr(
     raise ValueError(f"unknown AggregatorFactory type: {atype!r}")
 
 
-def post_agg_expr(spec: dict) -> Column:
-    """Build a Column for one PostAggregator JSON spec, evaluated over the
+def agg_expr(
+    spec: dict,
+    schema: StructType | DataFrame | None = None,
+    finalize: bool = True,
+    finalize_type: str = "double",
+    lgk: int = DEFAULT_LGK,
+) -> Column:
+    """Build the aggregate Column for one AggregatorFactory JSON spec.
+
+    ``finalize=False`` is the NonFinalizing path (sketch state as binary,
+    re-mergeable); ``finalize=True`` finalizes (HLL → estimate, cast per
+    ``finalize_type`` like the reference's Long/Float/Double adapters).
+    The result is aliased to ``spec['name']``.
+    """
+    if isinstance(schema, DataFrame):
+        schema = schema.schema
+    return F.expr(agg_sql(spec, schema, finalize, finalize_type, lgk))
+
+
+def post_agg_sql(spec: dict) -> str:
+    """SQL text for one PostAggregator JSON spec, evaluated over the
     output of ``agg()`` (SURVEY.md §2.6 PA3). Aliased to ``spec['name']``
     when present."""
-    col = _post_expr(spec)
+    body = _post_sql(spec)
     name = spec.get("name")
-    return col.alias(name) if name else col
+    return f"{body} AS {ident(name)}" if name else body
+
+
+def post_agg_expr(spec: dict) -> Column:
+    """``post_agg_sql`` as a Column."""
+    return F.expr(post_agg_sql(spec))
 
 
 def agg_inner(a: dict) -> dict:
@@ -258,9 +259,8 @@ def agg_inner(a: dict) -> dict:
 
 
 def agg_out_name(a: dict) -> str:
-    """The output column name an aggregator spec aliases to — mirrors
-    ``agg_expr``'s rule (name, else fieldName, else type; filtered
-    wrappers prefer the inner name)."""
+    """The output column name an aggregator spec aliases to: name, else
+    fieldName, else type; filtered wrappers prefer the inner name."""
     inner = agg_inner(a)
     return (
         inner.get("name") or a.get("name")
@@ -268,29 +268,38 @@ def agg_out_name(a: dict) -> str:
     )
 
 
+_ESTIMATES = {
+    "hyperUnique": "hll_sketch_estimate",
+    "cardinality": "hll_sketch_estimate",
+    "thetaSketch": "theta_sketch_estimate",
+}
+
+
+def finalized_sql(a: dict) -> str | None:
+    """Druid's broker step for one aggregator: its hyperUnique /
+    cardinality / thetaSketch state column as the double estimate
+    (empty/null state — an empty filled bucket — reads 0.0, Druid's
+    empty-sketch estimate), aliased to the column; None for other types."""
+    fn = _ESTIMATES.get(agg_inner(a).get("type"))
+    if fn is None:
+        return None
+    name = ident(agg_out_name(a))
+    return f"coalesce(CAST({fn}({name}) AS DOUBLE), 0.0D) AS {name}"
+
+
 def finalize_sketch_columns(
     df: DataFrame,
     aggregations: list[dict],
     names: set[str],
 ) -> DataFrame:
-    """Druid's broker step: after post-aggregators have read the raw
-    sketch state, the response finalizes the aggregator columns. Replaces
-    each named hyperUnique/cardinality/thetaSketch state column with its
-    double estimate (empty/null state — an empty filled bucket — reads
-    0.0, Druid's empty-sketch estimate)."""
+    """Replace each named sketch state column of ``df`` with its estimate
+    (``finalized_sql``) — after post-aggregators have read the raw state."""
+    out = {}
     for a in aggregations:
-        name = agg_out_name(a)
-        if name not in names:
-            continue
-        t = agg_inner(a).get("type")
-        if t in ("hyperUnique", "cardinality"):
-            est = F.hll_sketch_estimate(F.col(name)).cast("double")
-        elif t == "thetaSketch":
-            est = _theta_estimate(F.col(name))
-        else:
-            continue
-        df = df.withColumn(name, F.coalesce(est, F.lit(0.0)))
-    return df
+        text = finalized_sql(a) if agg_out_name(a) in names else None
+        if text:
+            out[agg_out_name(a)] = F.expr(text)
+    return df.withColumns(out) if out else df
 
 
 def sketch_post_agg_refs(post_aggregations: list[dict] | None) -> set[str]:
@@ -330,32 +339,32 @@ def sketch_post_agg_refs(post_aggregations: list[dict] | None) -> set[str]:
     return refs
 
 
-def _post_expr(spec: dict) -> Column:
+def _post_sql(spec: dict) -> str:
     ptype = spec.get("type")
     if ptype == "fieldAccess":
-        return F.col(spec["fieldName"])
+        return ident(spec["fieldName"])
     if ptype == "constant":
-        return F.lit(spec["value"])
+        return lit(spec["value"])
     if ptype == "hyperUniqueCardinality":
         # finalize a non-finalized sketch column → double estimate
         # (reference: druid_exporter.pig:4,15 + PostAggregatorAdapter.java:94)
-        return F.hll_sketch_estimate(F.col(spec["fieldName"])).cast("double")
+        return f"CAST(hll_sketch_estimate({ident(spec['fieldName'])}) AS DOUBLE)"
     if ptype == "thetaSketchEstimate":
         # finalize a theta sketch → double estimate (Druid DataSketches
         # extension post-agg shape): a non-finalized aggregator column, or
         # a nested thetaSketchSetOp result
         inner = spec.get("field")
-        target = _post_expr(inner) if inner else F.col(spec["fieldName"])
-        return _theta_estimate(target)
+        target = _post_sql(inner) if inner else ident(spec["fieldName"])
+        return f"CAST(theta_sketch_estimate({target}) AS DOUBLE)"
     if ptype == "thetaSketchSetOp":
         # Druid DataSketches thetaSketchSetOp: {"func": "UNION|INTERSECT|
         # NOT", "size": k, "fields": [postAggs...]} → a theta sketch, so
         # set ops nest; ops fold left across >2 fields (Druid semantics)
         lg = _theta_lg(spec)
         ops = {
-            "UNION": lambda a, b: F.theta_union(a, b, lg),
-            "INTERSECT": F.theta_intersection,
-            "NOT": F.theta_difference,
+            "UNION": lambda a, b: f"theta_union({a}, {b}, {lg})",
+            "INTERSECT": lambda a, b: f"theta_intersection({a}, {b})",
+            "NOT": lambda a, b: f"theta_difference({a}, {b})",
         }
         func = spec.get("func")
         if func not in ops:
@@ -365,57 +374,86 @@ def _post_expr(spec: dict) -> Column:
         fields = spec.get("fields", [])
         if len(fields) < 2:
             raise ValueError(f"thetaSketchSetOp needs >=2 fields: {spec!r}")
-        out = _post_expr(fields[0])
+        out = _post_sql(fields[0])
         for f in fields[1:]:
-            out = ops[func](out, _post_expr(f))
+            out = ops[func](out, _post_sql(f))
         return out
     if ptype == "arithmetic":
         fn = spec["fn"]
-        parts = [_post_expr(f).cast("double") for f in spec["fields"]]
+        parts = [f"CAST({_post_sql(f)} AS DOUBLE)" for f in spec["fields"]]
         if len(parts) < 2:
             raise ValueError(f"arithmetic needs >=2 fields: {spec!r}")
         out = parts[0]
         for p in parts[1:]:
-            if fn == "+":
-                out = out + p
-            elif fn == "-":
-                out = out - p
-            elif fn == "*":
-                out = out * p
+            if fn in ("+", "-", "*"):
+                out = f"({out} {fn} {p})"
             elif fn == "/":
                 # Druid's "/" returns 0 on division by zero
-                out = F.when(p == 0, F.lit(0.0)).otherwise(out / p)
+                out = f"CASE WHEN {p} = 0 THEN 0.0D ELSE {out} / {p} END"
             elif fn == "quotient":
                 # Druid's quotient is IEEE double division (±Inf / NaN on
                 # zero divisor); spelled out because Spark's ANSI mode would
                 # otherwise raise on /0
-                out = (
-                    F.when((p == 0) & (out > 0), F.lit(float("inf")))
-                    .when((p == 0) & (out < 0), F.lit(float("-inf")))
-                    .when((p == 0), F.lit(float("nan")))
-                    .otherwise(out / p)
-                )
+                out = (f"CASE WHEN {p} = 0 AND {out} > 0 THEN {lit(float('inf'))} "
+                       f"WHEN {p} = 0 AND {out} < 0 THEN {lit(float('-inf'))} "
+                       f"WHEN {p} = 0 THEN {lit(float('nan'))} "
+                       f"ELSE {out} / {p} END")
             else:
                 raise ValueError(f"unknown arithmetic fn: {fn!r}")
         return out
-    if ptype == "quantile":
-        # Druid approximate-histogram `quantile` post-agg over a
+    if ptype in ("quantile", "quantiles"):
+        # Druid approximate-histogram `quantile(s)` post-agg over a
         # non-finalized histogram state column
-        from druid_hadoop_utils_spark.functions.quantiles import qhist_quantile
+        from druid_hadoop_utils_spark.functions.quantiles import qhist_quantile_sql
 
-        return qhist_quantile(F.col(spec["fieldName"]), float(spec["probability"]))
-    if ptype == "quantiles":
-        from druid_hadoop_utils_spark.functions.quantiles import qhist_quantile
-
-        return F.array(
-            *[
-                qhist_quantile(F.col(spec["fieldName"]), float(p))
-                for p in spec["probabilities"]
-            ]
-        )
+        state = ident(spec["fieldName"])
+        if ptype == "quantile":
+            return qhist_quantile_sql(state, float(spec["probability"]))
+        return "array(" + ", ".join(
+            qhist_quantile_sql(state, float(p)) for p in spec["probabilities"]
+        ) + ")"
     if ptype == "javascript":
         raise NotImplementedError("javascript post-aggregator is not supported")
     raise ValueError(f"unknown PostAggregator type: {ptype!r}")
+
+
+def group_aggregate_sql(
+    source: str,
+    schema: StructType | None,
+    keys: list[str],
+    aggregations: list[dict],
+    post_aggregations: list[dict] | None = None,
+    finalize: bool = True,
+    lgk: int = DEFAULT_LGK,
+    no_finalize: set[str] | None = None,
+) -> str:
+    """The engine's groupBy as one SELECT statement over ``source`` (a
+    relation name or parenthesized subquery whose columns ``schema``
+    describes): group ``keys``, aggregators, then post-aggregators.
+
+    Druid semantics: an aggregator a post-aggregator consumes as a SKETCH
+    (hyperUniqueCardinality / thetaSketchEstimate / thetaSketchSetOp /
+    quantile) stays non-finalized while the post-aggs evaluate; the
+    OUTPUT column re-finalizes afterwards (the broker step —
+    ``finalized_sql``), so ordering/having/limit over the aggregator name
+    still see a double."""
+    skip_final = (no_finalize or set()) | sketch_post_agg_refs(post_aggregations)
+    key_cols = [ident(k) for k in keys]
+    aggs = [agg_sql(a, schema, lgk=lgk,
+                    finalize=finalize and agg_out_name(a) not in skip_final)
+            for a in aggregations]
+    text = f"SELECT {', '.join(key_cols + aggs)} FROM {source}"
+    if keys:
+        text += f" GROUP BY {', '.join(key_cols)}"
+    if not post_aggregations:
+        return text
+    cols = key_cols + [
+        (finalize and agg_out_name(a) in skip_final and finalized_sql(a))
+        or ident(agg_out_name(a))
+        for a in aggregations
+    ]
+    posts = [post_agg_sql(p) for p in post_aggregations]
+    return f"SELECT {', '.join(cols + posts)} FROM ({text})"
 
 
 def group_aggregate(
@@ -437,21 +475,7 @@ def group_aggregate(
     exactly like the reference's NonFinalizing → merge → Finalizing chain.
     """
     keys = ([time_column] if time_column else []) + list(dimensions)
-    skip_final = (no_finalize or set()) | sketch_post_agg_refs(post_aggregations)
-
-    def _fin(a: dict) -> bool:
-        # Druid semantics: an aggregator a post-aggregator consumes as a
-        # SKETCH (hyperUniqueCardinality / thetaSketchEstimate /
-        # thetaSketchSetOp / quantile) must stay non-finalized while the
-        # post-aggs evaluate; the OUTPUT column re-finalizes afterwards
-        # (the broker step — finalize_sketch_columns below), so ordering/
-        # having/limit over the aggregator name still see a double.
-        return finalize and agg_out_name(a) not in skip_final
-
-    aggs = [agg_expr(a, df.schema, finalize=_fin(a), lgk=lgk) for a in aggregations]
-    out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
-    if post_aggregations:
-        out = out.select("*", *[post_agg_expr(p) for p in post_aggregations])
-        if finalize:
-            out = finalize_sketch_columns(out, aggregations, skip_final)
-    return out
+    schema = df.schema
+    return sql_over(df, lambda source: group_aggregate_sql(
+        source, schema, keys, aggregations, post_aggregations, finalize, lgk,
+        no_finalize))

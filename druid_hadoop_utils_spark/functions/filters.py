@@ -1,4 +1,4 @@
-"""DimFilter JSON tree → Catalyst ``Column`` predicate (SURVEY.md §2.2 P3).
+"""DimFilter JSON tree → Spark SQL predicate text (SURVEY.md §2.2 P3).
 
 Implements the Druid 0.9.1 DimFilter grammar the reference wires through its
 ingestion spec (reference: PigSegmentLoadSpec.java:20,31,43 — the ``filter``
@@ -18,7 +18,9 @@ value; a selector with a null/empty value matches missing dimensions.
 Everything here emits built-in Catalyst expressions, so simple predicates
 (selector/in/bound on scalar columns) push down to Parquet row-group stats
 automatically — the Spark-era analogue of the reference's bitmap-index
-filtering (SURVEY.md §4 O4).
+filtering (SURVEY.md §4 O4). The tree compiles to ONE SQL text
+(``filter_sql``) that Spark parses in a single call; every dimension name
+and literal goes through ``functions/sqltext`` quoting.
 """
 
 from __future__ import annotations
@@ -28,6 +30,11 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, NumericType, StructType
+
+from druid_hadoop_utils_spark.functions.sqltext import ident, lit
+
+# the lambda variable of ANY-value matches over multi-value dimensions
+_V = "__dv"
 
 
 def _is_array(schema: StructType | None, name: str) -> bool:
@@ -39,9 +46,9 @@ def _is_array(schema: StructType | None, name: str) -> bool:
         return False
 
 
-def _any_value(col: Column, pred) -> Column:
+def _any_value(col: str, pred) -> str:
     """ANY-value match over a multi-value dimension."""
-    return F.coalesce(F.exists(col, pred), F.lit(False))
+    return f"coalesce(exists({col}, {_V} -> {pred(_V)}), false)"
 
 
 def _is_numeric(schema: StructType | None, name: str) -> bool:
@@ -65,14 +72,14 @@ def _parse_number(value: str):
             return None
 
 
-def _null_or_empty(col: Column, is_array: bool, is_numeric: bool = False) -> Column:
+def _null_or_empty(col: str, is_array: bool, is_numeric: bool = False) -> str:
     if is_array:
-        return col.isNull() | (F.size(col) == 0)
+        return f"({col} IS NULL OR size({col}) = 0)"
     if is_numeric:
         # '' has no numeric rendering: only NULL rows match (comparing a
         # numeric column to '' would throw CAST_INVALID_INPUT under ANSI)
-        return col.isNull()
-    return col.isNull() | (col == F.lit(""))
+        return f"({col} IS NULL)"
+    return f"({col} IS NULL OR {col} = '')"
 
 
 _CHUNK_SPLIT = r"(?<=[0-9])(?=[^0-9])|(?<=[^0-9])(?=[0-9])"
@@ -86,12 +93,12 @@ def _strip_zeros(s: str) -> str:
     return s.lstrip("0") or "0"
 
 
-def _natural_cmp(col: Column, bound: str) -> tuple[Column, Column]:
+def natural_cmp_sql(col: str, bound: str) -> tuple[str, str]:
     """(col < bound, col > bound) under Druid 0.9's alphanumeric comparator
     (StringComparators.ALPHANUMERIC): strings split into digit / non-digit
     chunks; two digit chunks compare as nonnegative integers, any other
     chunk pair compares lexicographically; a string that runs out of chunks
-    first is smaller.
+    first is smaller. ``col`` is SQL text of a string value.
 
     The bound is a plan-time literal, so its chunking happens in Python and
     the runtime side is one ``split`` plus an O(#bound-chunks) expression —
@@ -99,62 +106,59 @@ def _natural_cmp(col: Column, bound: str) -> tuple[Column, Column]:
     lexicographic) tuple order, which equals integer order at arbitrary
     precision without any overflow-prone cast.
     """
-    toks = F.split(col, _CHUNK_SPLIT)
+    toks = f"split({col}, {lit(_CHUNK_SPLIT)})"
     kchunks = _alphanum_chunks(bound)
     if not kchunks:  # empty bound: anything non-empty is greater
-        return F.lit(False), col != F.lit("")
+        return "false", f"({col} != '')"
 
-    digits = "^[0-9]+$"
-    lt = F.lit(False)  # all bound chunks matched equally...
-    gt = F.size(toks) > len(kchunks)  # ...col bigger only via extra chunks
+    lt = "false"  # all bound chunks matched equally...
+    gt = f"(size({toks}) > {len(kchunks)})"  # ...col bigger only via extra chunks
     for i in reversed(range(len(kchunks))):
         # try_element_at: out-of-bounds → null (ANSI element_at throws)
-        t = F.try_element_at(toks, F.lit(i + 1))
+        t = f"try_element_at({toks}, {i + 1})"
         kc = kchunks[i]
         if kc.isdigit():
             kn = _strip_zeros(kc)
-            ts = F.regexp_replace(t, "^0+", "")
-            ts = F.when(ts == "", F.lit("0")).otherwise(ts)
-            both = t.rlike(digits)
-            c_lt = F.when(
-                both,
-                (F.length(ts) < len(kn)) | ((F.length(ts) == len(kn)) & (ts < kn)),
-            ).otherwise(t < F.lit(kc))
-            c_gt = F.when(
-                both,
-                (F.length(ts) > len(kn)) | ((F.length(ts) == len(kn)) & (ts > kn)),
-            ).otherwise(t > F.lit(kc))
+            ts = f"regexp_replace({t}, '^0+', '')"
+            ts = f"CASE WHEN {ts} = '' THEN '0' ELSE {ts} END"
+            both = f"{t} RLIKE '^[0-9]+$'"
+            n, kq = len(kn), lit(kn)
+            c_lt = (f"CASE WHEN {both} THEN (length({ts}) < {n} OR "
+                    f"(length({ts}) = {n} AND {ts} < {kq})) "
+                    f"ELSE {t} < {lit(kc)} END")
+            c_gt = (f"CASE WHEN {both} THEN (length({ts}) > {n} OR "
+                    f"(length({ts}) = {n} AND {ts} > {kq})) "
+                    f"ELSE {t} > {lit(kc)} END")
         else:
-            c_lt, c_gt = t < F.lit(kc), t > F.lit(kc)
+            c_lt, c_gt = f"({t} < {lit(kc)})", f"({t} > {lit(kc)})"
         # a missing chunk at i means col is a strict prefix of the bound
-        lt = F.when(t.isNull(), F.lit(True)).otherwise(
-            F.when(c_lt, F.lit(True)).when(c_gt, F.lit(False)).otherwise(lt)
-        )
-        gt = F.when(t.isNull(), F.lit(False)).otherwise(
-            F.when(c_gt, F.lit(True)).when(c_lt, F.lit(False)).otherwise(gt)
-        )
+        lt = (f"CASE WHEN {t} IS NULL THEN true WHEN {c_lt} THEN true "
+              f"WHEN {c_gt} THEN false ELSE {lt} END")
+        gt = (f"CASE WHEN {t} IS NULL THEN false WHEN {c_gt} THEN true "
+              f"WHEN {c_lt} THEN false ELSE {gt} END")
     # Spark splits "" into [""] (one empty token) — force the prefix rule
-    lt = F.when(col == F.lit(""), F.lit(True)).otherwise(lt)
-    gt = F.when(col == F.lit(""), F.lit(False)).otherwise(gt)
+    lt = f"CASE WHEN {col} = '' THEN true ELSE {lt} END"
+    gt = f"CASE WHEN {col} = '' THEN false ELSE {gt} END"
     return lt, gt
 
 
 def _search_query_pred(q: dict):
-    """Druid 0.9 SearchQuerySpec → per-value boolean predicate builder
-    (shared by the ``search`` filter and the ``searchQuery`` extractionFn)."""
+    """Druid 0.9 SearchQuerySpec → a function from a value's SQL text to
+    its boolean match text (shared by the ``search`` filter and the
+    ``searchQuery`` extractionFn)."""
     qtype = q.get("type", "contains")
     if qtype == "fragment":
         values = q.get("values", [])
         case_sensitive = bool(q.get("caseSensitive"))
 
-        def frag(v: Column) -> Column:
-            pred = F.lit(True)
+        def frag(v: str) -> str:
+            parts = ["true"]
             for needle in values:
                 if case_sensitive:
-                    pred = pred & v.contains(needle)
+                    parts.append(f"contains({v}, {lit(needle)})")
                 else:
-                    pred = pred & F.lower(v).contains(needle.lower())
-            return pred
+                    parts.append(f"contains(lower({v}), {lit(needle.lower())})")
+            return "(" + " AND ".join(parts) + ")"
 
         return frag
     value = q.get("value", "")
@@ -164,10 +168,10 @@ def _search_query_pred(q: dict):
     if qtype == "insensitive_contains":
         case_sensitive = False
 
-    def contains(v: Column) -> Column:
+    def contains(v: str) -> str:
         if case_sensitive:
-            return v.contains(value)
-        return F.lower(v).contains(value.lower())
+            return f"contains({v}, {lit(value)})"
+        return f"contains(lower({v}), {lit(value.lower())})"
 
     return contains
 
@@ -177,6 +181,8 @@ def _search_query_pred(q: dict):
 # outside this set is rejected loudly instead of silently reformatting
 # differently than Druid would have.
 _SAFE_TIME_PATTERN_LETTERS = set("yMdHhmsSEaDKkwZXx")
+
+_ISO_PATTERN = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
 
 def _check_time_pattern(pattern: str) -> str:
@@ -198,16 +204,16 @@ def _check_time_pattern(pattern: str) -> str:
     return pattern
 
 
-def _extraction_fn(fn: dict, col: Column) -> Column:
-    """Druid extractionFn grammar (the subset with Spark-native mappings):
-    substring, regex (capture group 1), partial, searchQuery, timeFormat,
-    time, lower, upper, strlen, cascade, stringFormat,
-    lookup/registeredLookup. javascript is rejected."""
+def extraction_sql(fn: dict, col: str) -> str:
+    """Druid extractionFn grammar (the subset with Spark-native mappings)
+    applied to the SQL text ``col``: substring, regex (capture group 1),
+    partial, searchQuery, timeFormat, time, lower, upper, strlen, cascade,
+    stringFormat, lookup/registeredLookup. javascript is rejected."""
     ftype = fn.get("type")
     if ftype == "cascade":
         # Druid CascadeExtractionFn: apply each listed extractionFn in order
         for sub in fn.get("extractionFns", []):
-            col = _extraction_fn(sub, col)
+            col = extraction_sql(sub, col)
         return col
     if ftype == "stringFormat":
         # Druid StringFormatExtractionFn: java String.format with the value
@@ -221,27 +227,28 @@ def _extraction_fn(fn: dict, col: Column) -> Column:
             )
         null_mode = fn.get("nullHandling", "NULLSTRING")
         if null_mode == "NULLSTRING":
-            return F.format_string(fmt, F.coalesce(col, F.lit("null")))
+            return f"format_string({lit(fmt)}, coalesce({col}, 'null'))"
         if null_mode == "EMPTYSTRING":
-            return F.format_string(fmt, F.coalesce(col, F.lit("")))
+            return f"format_string({lit(fmt)}, coalesce({col}, ''))"
         if null_mode == "RETURNNULL":
-            return F.when(col.isNotNull(), F.format_string(fmt, col))
+            return f"CASE WHEN {col} IS NOT NULL THEN format_string({lit(fmt)}, {col}) END"
         raise ValueError(f"unknown stringFormat nullHandling: {null_mode!r}")
     if ftype == "substring":
         index = int(fn.get("index", 0))
         length = fn.get("length")
-        return F.substring(col, index + 1, int(length) if length is not None else 2**31 - 1)
+        n = int(length) if length is not None else 2**31 - 1
+        return f"substring({col}, {index + 1}, {n})"
     if ftype == "regex":
-        return F.regexp_extract(col, fn["expr"], 1)
+        return f"regexp_extract({col}, {lit(fn['expr'])}, 1)"
     if ftype == "partial":
         # Druid MatchingDimExtractionFn: keep the value when it matches the
         # regex, else null (rows with null extraction drop out of groupBys)
-        return F.when(col.rlike(fn["expr"]), col)
+        return f"CASE WHEN {col} RLIKE {lit(fn['expr'])} THEN {col} END"
     if ftype == "searchQuery":
         # Druid SearchQuerySpecDimExtractionFn: keep the value when it
         # matches the SearchQuerySpec, else null
         q = fn.get("query", {})
-        return F.when(_search_query_pred(q)(col), col)
+        return f"CASE WHEN {_search_query_pred(q)(col)} THEN {col} END"
     if ftype == "timeFormat":
         # Druid TimeFormatExtractionFn over __time: format the timestamp
         # with a Joda pattern (java.time-compatible subset) in an optional
@@ -252,85 +259,75 @@ def _extraction_fn(fn: dict, col: Column) -> Column:
             raise NotImplementedError(
                 f"timeFormat locale {locale!r} is not supported (en only)"
             )
-        ts = F.from_utc_timestamp(col, tz) if tz else col
+        ts = f"from_utc_timestamp({col}, {lit(tz)})" if tz else col
         pattern = fn.get("format")
         if pattern is None:
-            return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-        return F.date_format(ts, _check_time_pattern(pattern))
+            return f"date_format({ts}, {lit(_ISO_PATTERN)})"
+        return f"date_format({ts}, {lit(_check_time_pattern(pattern))})"
     if ftype == "time":
         # Druid TimeDimExtractionFn: parse a STRING dimension with
         # timeFormat, re-format with resultFormat (e.g. MM/dd/yyyy → yyyy-MM)
-        parsed = F.to_timestamp(col, _check_time_pattern(fn["timeFormat"]))
-        return F.date_format(parsed, _check_time_pattern(fn["resultFormat"]))
+        parsed = f"to_timestamp({col}, {lit(_check_time_pattern(fn['timeFormat']))})"
+        return f"date_format({parsed}, {lit(_check_time_pattern(fn['resultFormat']))})"
     if ftype == "lower":
-        return F.lower(col)
+        return f"lower({col})"
     if ftype == "upper":
-        return F.upper(col)
+        return f"upper({col})"
     if ftype == "strlen":
-        return F.length(col).cast("string")
+        return f"CAST(length({col}) AS STRING)"
     if ftype == "lookup":
         # inline map lookup (Druid MapLookupExtractor): the map ships as a
         # literal expression; retainMissingValue keeps unmapped values,
         # otherwise they become replaceMissingValueWith (default null)
         from druid_hadoop_utils_spark.functions.lookups import (
-            apply_missing_policy,
-            lookup_expr,
+            lookup_sql,
+            missing_policy_sql,
         )
 
         lookup = fn.get("lookup", {})
         if lookup.get("type") != "map":
             raise NotImplementedError("only inline map lookups are supported")
-        mapped = lookup_expr(lookup.get("map", {}), col)
-        return apply_missing_policy(mapped, col, fn)
+        return missing_policy_sql(lookup_sql(lookup.get("map", {}), col), col, fn)
     if ftype == "registeredLookup":
         # named lookup resolved from the process-local registry (Druid's
         # cluster-distributed lookup module); same missing-value policy as
         # the inline form. Large registered tables → lookups.lookup_join.
         from druid_hadoop_utils_spark.functions.lookups import (
-            apply_missing_policy,
-            lookup_expr,
             lookup_mapping,
+            lookup_sql,
+            missing_policy_sql,
         )
 
-        mapped = lookup_expr(lookup_mapping(fn["lookup"]), col)
-        return apply_missing_policy(mapped, col, fn)
+        mapped = lookup_sql(lookup_mapping(fn["lookup"]), col)
+        return missing_policy_sql(mapped, col, fn)
     if ftype == "javascript":
         raise NotImplementedError(f"extractionFn {ftype!r} is not supported")
     raise ValueError(f"unknown extractionFn: {fn!r}")
 
 
-def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = None) -> Column:
-    """Translate a DimFilter JSON tree into a boolean Column."""
-    if isinstance(schema, DataFrame):
-        schema = schema.schema
+def filter_sql(spec: dict | None, schema: StructType | None = None) -> str:
+    """Translate a DimFilter JSON tree into boolean SQL expression text.
+    ``schema`` (of the filtered frame) decides the multi-value and
+    numeric-column rules."""
     if spec is None:
-        return F.lit(True)
+        return "true"
     ftype = spec.get("type")
     if ftype is None:
         raise ValueError(f"filter missing 'type': {spec!r}")
 
-    if ftype == "and":
-        cols = [filter_to_column(f, schema) for f in spec["fields"]]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out & c
-        return out
-    if ftype == "or":
-        cols = [filter_to_column(f, schema) for f in spec["fields"]]
-        out = cols[0]
-        for c in cols[1:]:
-            out = out | c
-        return out
+    if ftype in ("and", "or"):
+        parts = [filter_sql(f, schema) for f in spec["fields"]]
+        return "(" + f" {ftype.upper()} ".join(parts) + ")"
     if ftype == "not":
-        inner = filter_to_column(spec["field"], schema)
+        inner = filter_sql(spec["field"], schema)
         # Druid's NOT matches rows where the inner filter does not match,
         # including rows where the inner predicate is NULL (missing dim).
-        return ~F.coalesce(inner, F.lit(False))
+        return f"(NOT coalesce({inner}, false))"
 
     dim = spec.get("dimension")
     if dim is None:
         raise ValueError(f"filter missing 'dimension': {spec!r}")
-    col = F.col(dim)
+    col = ident(dim)
     arr = _is_array(schema, dim)
     num = _is_numeric(schema, dim)
     if arr and schema is not None:
@@ -352,10 +349,10 @@ def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = 
             # comparing the raw string would CAST_INVALID_INPUT under ANSI
             value = _parse_number(value)
             if value is None:
-                return F.lit(False)
+                return "false"
         if arr:
-            return F.coalesce(F.array_contains(col, F.lit(value)), F.lit(False))
-        return col == F.lit(value)
+            return f"coalesce(array_contains({col}, {lit(value)}), false)"
+        return f"({col} = {lit(value)})"
 
     if ftype == "in":
         values = [v for v in spec.get("values", [])]
@@ -365,15 +362,15 @@ def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = 
             non_null = [p for v in non_null
                         if (p := _parse_number(v) if isinstance(v, str) else v)
                         is not None]
-        if arr:
-            pred = F.coalesce(
-                F.arrays_overlap(col, F.array(*[F.lit(v) for v in non_null])), F.lit(False)
-            ) if non_null else F.lit(False)
+        lits = ", ".join(lit(v) for v in non_null)
+        if not non_null:
+            pred = "false"
+        elif arr:
+            pred = f"coalesce(arrays_overlap({col}, array({lits})), false)"
         else:
-            pred = col.isin(non_null) if non_null else F.lit(False)
-            pred = F.coalesce(pred, F.lit(False))
+            pred = f"coalesce({col} IN ({lits}), false)"
         if has_null:
-            pred = pred | _null_or_empty(col, arr, num)
+            pred = f"({pred} OR {_null_or_empty(col, arr, num)})"
         return pred
 
     if ftype == "bound":
@@ -398,70 +395,62 @@ def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = 
         numeric = spec.get("ordering") == "numeric" or (alpha and col_numeric)
         natural = alpha and not numeric
 
-        def one(v: Column) -> Column:
+        def one(v: str) -> str:
             # try_cast: under ANSI mode a plain cast THROWS on non-numeric
             # strings; Druid's numeric bound simply doesn't match such rows.
-            # The isNotNull base also keeps a boundless bound filter from
+            # The IS NOT NULL base also keeps a boundless bound filter from
             # matching missing/uncastable values.
             if numeric:
-                target = v.try_cast("double")
+                target = f"try_cast({v} AS DOUBLE)"
             elif col_numeric and not natural:
                 # Druid's DEFAULT bound ordering is lexicographic over the
                 # dimension's STRING values even for numeric columns —
                 # compare renderings (also ANSI-safe for bounds like
                 # "abc" that a numeric-literal comparison would throw on)
-                target = v.cast("string")
+                target = f"CAST({v} AS STRING)"
             else:
                 target = v
-            pred = target.isNotNull()
-            if spec.get("lower") is not None:
+            parts = [f"{target} IS NOT NULL"]
+            for key, strict_key, op, strict_op in (
+                ("lower", "lowerStrict", ">=", ">"),
+                ("upper", "upperStrict", "<=", "<"),
+            ):
+                b = spec.get(key)
+                if b is None:
+                    continue
+                strict = bool(spec.get(strict_key))
                 if natural:
-                    lt, gt = _natural_cmp(v.cast("string"), str(spec["lower"]))
-                    pred = pred & (gt if spec.get("lowerStrict") else ~lt)
+                    lt, gt = natural_cmp_sql(f"CAST({v} AS STRING)", str(b))
+                    if key == "lower":
+                        parts.append(gt if strict else f"(NOT {lt})")
+                    else:
+                        parts.append(lt if strict else f"(NOT {gt})")
                 else:
-                    lo = F.lit(float(spec["lower"])) if numeric else F.lit(spec["lower"])
-                    pred = pred & (target > lo if spec.get("lowerStrict") else target >= lo)
-            if spec.get("upper") is not None:
-                if natural:
-                    lt, gt = _natural_cmp(v.cast("string"), str(spec["upper"]))
-                    pred = pred & (lt if spec.get("upperStrict") else ~gt)
-                else:
-                    hi = F.lit(float(spec["upper"])) if numeric else F.lit(spec["upper"])
-                    pred = pred & (target < hi if spec.get("upperStrict") else target <= hi)
-            return pred
+                    lb = lit(float(b)) if numeric else lit(b)
+                    parts.append(f"{target} {strict_op if strict else op} {lb}")
+            return "(" + " AND ".join(parts) + ")"
 
-        if arr:
-            return _any_value(col, one)
-        return one(col)
+        return _any_value(col, one) if arr else one(col)
 
-    if ftype == "regex":
-        pattern = spec["pattern"]
+    if ftype in ("regex", "like"):
+        op = "RLIKE" if ftype == "regex" else "LIKE"
+        pattern = lit(spec["pattern"])
         if arr:
-            return _any_value(col, lambda v: v.rlike(pattern))
-        return col.rlike(pattern)
+            return _any_value(col, lambda v: f"{v} {op} {pattern}")
+        return f"({col} {op} {pattern})"
 
     if ftype == "search":
         pred = _search_query_pred(spec.get("query", {}))
         return _any_value(col, pred) if arr else pred(col)
 
-    if ftype == "like":
-        pattern = spec["pattern"]
-        if arr:
-            return _any_value(col, lambda v: v.like(pattern))
-        return col.like(pattern)
-
     if ftype == "extraction":
         # Druid 0.9.1 extraction filter: apply an extractionFn to the
         # dimension, compare the result to `value`
         fn = spec.get("extractionFn", {})
-        value = spec.get("value")
-
-        def extracted(v: Column) -> Column:
-            return _extraction_fn(fn, v)
-
+        value = lit(spec.get("value"))
         if arr:
-            return _any_value(col, lambda v: extracted(v) == F.lit(value))
-        return extracted(col) == F.lit(value)
+            return _any_value(col, lambda v: f"({extraction_sql(fn, v)} = {value})")
+        return f"({extraction_sql(fn, col)} = {value})"
 
     if ftype == "javascript":
         raise NotImplementedError(
@@ -470,3 +459,10 @@ def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = 
             "SURVEY.md §2.2 P3 — deliberately excluded as a non-scalable path)"
         )
     raise ValueError(f"unknown DimFilter type: {ftype!r}")
+
+
+def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = None) -> Column:
+    """Translate a DimFilter JSON tree into a boolean Column."""
+    if isinstance(schema, DataFrame):
+        schema = schema.schema
+    return F.expr(filter_sql(spec, schema))

@@ -1,4 +1,4 @@
-"""QueryGranularity → Column truncation (SURVEY.md §2.3 G1).
+"""QueryGranularity → SQL truncation text (SURVEY.md §2.3 G1).
 
 Named granularities match Druid 0.9.1's QueryGranularities set (reference:
 PigSegmentLoadSpec.java:17-18,42 import + NONE default; sample-schema.json:2
@@ -15,6 +15,8 @@ import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from druid_hadoop_utils_spark.functions.sqltext import column_sql, lit
 
 # calendar-aligned names → date_trunc unit (Spark and DuckDB both truncate
 # WEEK to the ISO Monday, matching Druid/Joda weekOfWeekyear)
@@ -50,19 +52,31 @@ def _origin_seconds(origin) -> int:
     return int(parse_ts(origin).timestamp())
 
 
-def _duration_trunc(col: Column, seconds: int, origin=None) -> Column:
+def _period_seconds(m: re.Match, period: str) -> int:
+    secs = (
+        int(m.group("weeks") or 0) * 604800
+        + int(m.group("days") or 0) * 86400
+        + int(m.group("hours") or 0) * 3600
+        + int(m.group("minutes") or 0) * 60
+        + int(m.group("seconds") or 0)
+    )
+    if secs <= 0:
+        raise ValueError(f"empty period: {period!r}")
+    return secs
+
+
+def _duration_trunc(col: str, seconds: int, origin=None) -> str:
     # floor(epoch/d)*d, all JVM-side; sub-second input floors to the bucket.
     # With an origin, buckets anchor to it instead of the epoch (Druid's
     # DurationGranularity origin): origin + floor((ts-origin)/d)*d.
     off = _origin_seconds(origin) % seconds if origin else 0
-    base = F.unix_timestamp(col) - F.lit(off)
-    return F.timestamp_seconds(
-        F.floor(base / seconds).cast("long") * seconds + F.lit(off)
-    )
+    return (f"timestamp_seconds(CAST(floor((unix_timestamp({col}) - {off}) "
+            f"/ {seconds}) AS BIGINT) * {seconds} + {off})")
 
 
-def granularity_expr(granularity: str | dict, col: Column) -> Column:
-    """Truncate a TimestampType column to the granularity bucket start.
+def granularity_sql(granularity: str | dict, col: str) -> str:
+    """SQL text truncating the TimestampType SQL expression ``col`` to the
+    granularity bucket start.
 
     Accepts named granularities, ``{"type":"duration","duration":ms}``, and
     ``{"type":"period","period":"PT15M"}`` (day-or-smaller periods map to
@@ -78,7 +92,7 @@ def granularity_expr(granularity: str | dict, col: Column) -> Column:
                 raise ValueError("sub-second duration granularity unsupported")
             return _duration_trunc(col, ms // 1000, origin)
         if gtype == "period":
-            return _period_expr(granularity["period"], col, tz, origin)
+            return _period_sql(granularity["period"], col, tz, origin)
         raise ValueError(f"unknown granularity spec: {granularity!r}")
 
     g = granularity.upper()
@@ -87,16 +101,31 @@ def granularity_expr(granularity: str | dict, col: Column) -> Column:
     if g == "ALL":
         # Druid's ALL collapses everything into a single bucket; we pin the
         # bucket timestamp to the epoch.
-        return F.lit("1970-01-01 00:00:00").cast("timestamp")
+        return "CAST('1970-01-01 00:00:00' AS TIMESTAMP)"
     if g in _TRUNC_UNITS:
-        return F.date_trunc(_TRUNC_UNITS[g], col)
+        return f"date_trunc('{_TRUNC_UNITS[g]}', {col})"
     if g in _DURATION_SECONDS:
         return _duration_trunc(col, _DURATION_SECONDS[g])
     raise ValueError(f"unknown granularity: {granularity!r}")
 
 
-def _period_expr(period: str, col: Column, tz: str | None = None,
-                 origin=None) -> Column:
+def granularity_expr(granularity: str | dict, col: Column | str) -> Column:
+    """``granularity_sql`` over a column, as a Column.
+
+    ``col`` is a column name or a plain column reference such as
+    ``F.col("ts")``; an expression Column (``F.col("ts").cast(...)``)
+    raises TypeError, since its text is embedded in SQL — select the
+    expression into a column first.
+    """
+    return F.expr(granularity_sql(granularity, column_sql(col)))
+
+
+_CALENDAR_PERIODS = {"P1D": "day", "PT24H": "day", "P1W": "week",
+                     "P1M": "month", "P3M": "quarter", "P1Y": "year"}
+
+
+def _period_sql(period: str, col: str, tz: str | None = None,
+                origin=None) -> str:
     """PeriodGranularity: calendar periods truncate via date_trunc, fixed
     periods via duration floor. ``timeZone`` localizes the truncation frame
     (DST-correct for calendar periods: convert to local wall time, truncate,
@@ -105,36 +134,25 @@ def _period_expr(period: str, col: Column, tz: str | None = None,
     origin on a calendar period is rejected (rare; Joda's chronology-origin
     math isn't worth approximating silently)."""
     p = period.upper()
-    calendar = {"P1D": "day", "PT24H": "day", "P1W": "week", "P1M": "month",
-                "P3M": "quarter", "P1Y": "year"}
-    if p in calendar:
+    if p in _CALENDAR_PERIODS:
         if origin is not None:
             raise NotImplementedError(
                 "origin on a calendar period granularity is not supported"
             )
+        unit = _CALENDAR_PERIODS[p]
         if tz:
-            return F.to_utc_timestamp(
-                F.date_trunc(calendar[p], F.from_utc_timestamp(col, tz)), tz
-            )
-        return F.date_trunc(calendar[p], col)
+            return (f"to_utc_timestamp(date_trunc('{unit}', "
+                    f"from_utc_timestamp({col}, {lit(tz)})), {lit(tz)})")
+        return f"date_trunc('{unit}', {col})"
     m = _PERIOD_RE.match(p)
     if not m:
         raise ValueError(f"unparseable period: {period!r}")
-    secs = (
-        int(m.group("weeks") or 0) * 604800
-        + int(m.group("days") or 0) * 86400
-        + int(m.group("hours") or 0) * 3600
-        + int(m.group("minutes") or 0) * 60
-        + int(m.group("seconds") or 0)
-    )
-    if secs <= 0:
-        raise ValueError(f"empty period: {period!r}")
+    secs = _period_seconds(m, period)
     if tz:
         # sub-day fixed periods only shift for fractional-hour zones; floor
         # in the local wall-time frame, then return to UTC instants
-        return F.to_utc_timestamp(
-            _duration_trunc(F.from_utc_timestamp(col, tz), secs, origin), tz
-        )
+        local = f"from_utc_timestamp({col}, {lit(tz)})"
+        return f"to_utc_timestamp({_duration_trunc(local, secs, origin)}, {lit(tz)})"
     return _duration_trunc(col, secs, origin)
 
 
@@ -158,16 +176,7 @@ def bucket_step_sql(granularity: str | dict) -> str:
             m = _PERIOD_RE.match(p)
             if not m:
                 raise ValueError(f"unparseable period: {granularity['period']!r}")
-            secs = (
-                int(m.group("weeks") or 0) * 604800
-                + int(m.group("days") or 0) * 86400
-                + int(m.group("hours") or 0) * 3600
-                + int(m.group("minutes") or 0) * 60
-                + int(m.group("seconds") or 0)
-            )
-            if secs <= 0:
-                raise ValueError(f"empty period: {granularity['period']!r}")
-            return f"INTERVAL {secs} SECOND"
+            return f"INTERVAL {_period_seconds(m, granularity['period'])} SECOND"
         raise ValueError(f"unknown granularity spec: {granularity!r}")
     g = granularity.upper()
     fixed = {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400,

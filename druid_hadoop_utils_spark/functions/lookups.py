@@ -8,7 +8,7 @@ references them by name: ``{"type": "registeredLookup", "lookup":
 - a process-local registry (``register_lookup``) holding ``dict``s or
   two-column DataFrames;
 - expression compilation for filters/projections: small maps become a
-  ``create_map`` literal, larger ones a single ``str_to_map`` string
+  ``map(...)`` literal, larger ones a single ``str_to_map`` string
   literal (one plan node, constant-folded — never a per-entry expression
   tree);
 - ``lookup_join`` as the unbounded-size scale path: an explicit broadcast
@@ -27,9 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from druid_hadoop_utils_spark.functions.sqltext import column_sql, lit
+
 _REGISTRY: dict[str, dict | DataFrame] = {}
 
-# above this, a per-entry create_map literal tree measurably bloats the
+# above this, a per-entry map(...) literal tree measurably bloats the
 # plan; switch to the single-literal str_to_map form
 _INLINE_MAP_MAX = 1000
 # lookups are broadcast-small by contract (Druid holds them on every
@@ -77,35 +79,45 @@ def lookup_mapping(name: str) -> dict:
     return {r[0]: r[1] for r in rows}
 
 
-def lookup_expr(mapping: dict, col: Column) -> Column:
-    """``mapping[col]`` as a Catalyst expression (null when absent).
+def lookup_sql(mapping: dict, col: str) -> str:
+    """``mapping[col]`` as SQL expression text (null when absent).
 
-    Small maps inline as ``create_map``; larger ones ride as ONE string
-    literal parsed by ``str_to_map`` — constant-folded, so the plan stays
-    a single node regardless of entry count.
+    Small maps inline as a ``map(...)`` literal; larger ones ride as ONE
+    string literal parsed by ``str_to_map`` — constant-folded, so the
+    plan stays a single node regardless of entry count.
     """
     if not mapping:
-        return F.lit(None).cast("string")
+        return "CAST(NULL AS STRING)"
     items = [(str(k), str(v)) for k, v in mapping.items()]
     if len(items) <= _INLINE_MAP_MAX or any(
         _PAIR_SEP in s or _KV_SEP in s for kv in items for s in kv
     ):
-        pairs = [x for k, v in items for x in (F.lit(k), F.lit(v))]
-        return F.element_at(F.create_map(*pairs), col)
+        pairs = ", ".join(f"{lit(k)}, {lit(v)}" for k, v in items)
+        return f"element_at(map({pairs}), {col})"
     blob = _PAIR_SEP.join(f"{k}{_KV_SEP}{v}" for k, v in items)
-    return F.element_at(
-        F.str_to_map(F.lit(blob), F.lit(_PAIR_SEP), F.lit(_KV_SEP)), col
-    )
+    return (f"element_at(str_to_map({lit(blob)}, {lit(_PAIR_SEP)}, "
+            f"{lit(_KV_SEP)}), {col})")
 
 
-def apply_missing_policy(mapped: Column, original: Column, fn: dict) -> Column:
+def lookup_expr(mapping: dict, col: Column | str) -> Column:
+    """``lookup_sql`` over a column, as a Column.
+
+    ``col`` is a column name or a plain column reference such as
+    ``F.col("ts")``; an expression Column (``F.col("ts").cast(...)``)
+    raises TypeError, since its text is embedded in SQL — select the
+    expression into a column first.
+    """
+    return F.expr(lookup_sql(mapping, column_sql(col)))
+
+
+def missing_policy_sql(mapped: str, original: str, fn: dict) -> str:
     """Druid's lookup missing-value semantics: ``retainMissingValue`` keeps
     the unmapped input, else ``replaceMissingValueWith`` (default null)."""
     if fn.get("retainMissingValue"):
-        return F.coalesce(mapped, original)
+        return f"coalesce({mapped}, {original})"
     replace = fn.get("replaceMissingValueWith")
     if replace is not None:
-        return F.coalesce(mapped, F.lit(replace))
+        return f"coalesce({mapped}, {lit(replace)})"
     return mapped
 
 

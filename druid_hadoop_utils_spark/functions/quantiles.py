@@ -25,74 +25,81 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from druid_hadoop_utils_spark.functions.sqltext import column_sql, ident, lit
+
 DEFAULT_BINS = 128
+
+
+def qhist_state_sql(value: str, lo: float, hi: float, bins: int = DEFAULT_BINS) -> str:
+    """Partial aggregate as SQL text over the value expression ``value``:
+    self-describing histogram state with bucket counts of length bins+2
+    (index 0 = underflow, bins+1 = overflow) — the non-finalizing form."""
+    bucket = (f"width_bucket(CAST({value} AS DOUBLE), {lit(float(lo))}, "
+              f"{lit(float(hi))}, {int(bins)})")
+    # coalesce: sum over an empty group is NULL, state must be 0s
+    counts = ", ".join(
+        f"CAST(coalesce(sum(CASE WHEN {bucket} = {i} THEN 1 ELSE 0 END), 0) AS BIGINT)"
+        for i in range(bins + 2)
+    )
+    return (f"named_struct('lo', {lit(float(lo))}, 'hi', {lit(float(hi))}, "
+            f"'counts', array({counts}))")
+
+
+def qhist_merge_sql(state: str, bins: int = DEFAULT_BINS) -> str:
+    """Merge partial states given as SQL text (element-wise count sum;
+    identical bounds assumed) — re-aggregation across groups, matching the
+    reference's partial-bytes re-merge."""
+    counts = ", ".join(f"CAST(sum(({state}).counts[{i}]) AS BIGINT)"
+                       for i in range(bins + 2))
+    return (f"named_struct('lo', first(({state}).lo), 'hi', first(({state}).hi), "
+            f"'counts', array({counts}))")
+
+
+def qhist_quantile_sql(state: str, q: float) -> str:
+    """Finalize a state given as SQL text: the q-quantile estimate (bucket
+    midpoint; underflow → lo, overflow → hi). One fold over the state's
+    count array; the bounds come from the state itself."""
+    lo, hi, counts = f"({state}).lo", f"({state}).hi", f"({state}).counts"
+    bins = f"(size({counts}) - 2)"
+    total = f"aggregate({counts}, CAST(0 AS BIGINT), (__t, __c) -> __t + __c)"
+    target = f"{lit(float(q))} * CAST({total} AS DOUBLE)"
+    acc0 = "named_struct('cum', CAST(0 AS BIGINT), 'idx', -1, 'pos', 0)"
+    step = (
+        "(__acc, __n) -> struct(__acc.cum + __n AS cum, "
+        f"CASE WHEN __acc.idx < 0 AND CAST(__acc.cum + __n AS DOUBLE) >= {target} "
+        f"AND {total} > 0 THEN __acc.pos ELSE __acc.idx END AS idx, "
+        "__acc.pos + 1 AS pos)"
+    )
+    idx = f"aggregate({counts}, {acc0}, {step}).idx"
+    mid = f"{lo} + (CAST({idx} AS DOUBLE) - 0.5D) * (({hi} - {lo}) / {bins})"
+    return (f"CASE WHEN {total} = 0 THEN CAST(NULL AS DOUBLE) "
+            f"WHEN {idx} <= 0 THEN {lo} WHEN {idx} >= {bins} + 1 THEN {hi} "
+            f"ELSE {mid} END")
 
 
 def qhist_state(
     col: Column | str, lo: float, hi: float, bins: int = DEFAULT_BINS
 ) -> Column:
-    """Partial aggregate: self-describing histogram state with bucket
-    counts of length bins+2 (index 0 = underflow, bins+1 = overflow) —
-    the non-finalizing form."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("double")
-    bucket = F.width_bucket(c, F.lit(float(lo)), F.lit(float(hi)), F.lit(bins))
-    counts = F.array(
-        *[
-            # coalesce: sum over an empty group is NULL, state must be 0s
-            F.coalesce(F.sum(F.when(bucket == i, 1).otherwise(0)), F.lit(0)).cast("long")
-            for i in range(bins + 2)
-        ]
-    )
-    return F.struct(
-        F.lit(float(lo)).alias("lo"), F.lit(float(hi)).alias("hi"), counts.alias("counts")
-    )
+    """``qhist_state_sql`` over a column, as a Column.
+
+    ``col`` is a column name or a plain column reference such as
+    ``F.col("ts")``; an expression Column (``F.col("ts").cast(...)``)
+    raises TypeError, since its text is embedded in SQL — select the
+    expression into a column first.
+    """
+    return F.expr(qhist_state_sql(column_sql(col), lo, hi, bins))
 
 
 def qhist_merge(state_col: Column | str, bins: int = DEFAULT_BINS) -> Column:
-    """Merge partial states (element-wise count sum; identical bounds
-    assumed) — re-aggregation across groups, matching the reference's
-    partial-bytes re-merge."""
-    c = F.col(state_col) if isinstance(state_col, str) else state_col
-    counts = F.array(*[F.sum(c["counts"][i]).cast("long") for i in range(bins + 2)])
-    return F.struct(
-        F.first(c["lo"]).alias("lo"), F.first(c["hi"]).alias("hi"), counts.alias("counts")
-    )
+    """``qhist_merge_sql`` over a state column, as a Column (``state_col``
+    is a name or plain column reference, as for ``qhist_state``)."""
+    return F.expr(qhist_merge_sql(column_sql(state_col), bins))
 
 
 def qhist_quantile(state: Column | str, q: float) -> Column:
-    """Finalize: the q-quantile estimate (bucket midpoint; underflow →
-    lo, overflow → hi). One fold over the state's count array; the bounds
-    come from the state itself."""
-    s = F.col(state) if isinstance(state, str) else state
-    lo, hi, counts = s["lo"], s["hi"], s["counts"]
-    bins = F.size(counts) - 2
-    total = F.aggregate(counts, F.lit(0).cast("long"), lambda a, x: a + x)
-    target = (F.lit(float(q)) * total.cast("double"))
-    acc0 = F.struct(
-        F.lit(0).cast("long").alias("cum"),
-        F.lit(-1).alias("idx"),
-        F.lit(0).alias("pos"),
-    )
-
-    def step(acc, x):
-        new_cum = acc["cum"] + x
-        found = F.when(
-            (acc["idx"] < 0) & (new_cum.cast("double") >= target) & (total > 0),
-            acc["pos"],
-        ).otherwise(acc["idx"])
-        return F.struct(
-            new_cum.alias("cum"), found.alias("idx"), (acc["pos"] + 1).alias("pos")
-        )
-
-    idx = F.aggregate(counts, acc0, step)["idx"]
-    width = (hi - lo) / bins
-    mid = lo + (idx.cast("double") - 0.5) * width
-    return (
-        F.when(total == 0, F.lit(None).cast("double"))
-        .when(idx <= 0, lo)
-        .when(idx >= bins + 1, hi)
-        .otherwise(mid)
-    )
+    """``qhist_quantile_sql`` over a state column, as a Column (``state``
+    is a name or plain column reference, as for ``qhist_state``)."""
+    return F.expr(qhist_quantile_sql(column_sql(state), q))
 
 
 def qhist_state_grouped(
@@ -119,12 +126,9 @@ def qhist_state_grouped(
     round-trips per query (round 11, the kll_quantiles finding); the
     JVM plan is identical."""
 
-    def _q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    qg = [_q(c) for c in group_cols]
+    qg = [ident(c) for c in group_cols]
     bucket_sql = (
-        f"width_bucket(cast({_q(value_col)} AS double), "
+        f"width_bucket(cast({ident(value_col)} AS double), "
         f"cast({float(lo)!r} AS double), cast({float(hi)!r} AS double), "
         f"{int(bins)})"
     )
@@ -170,14 +174,9 @@ def approx_quantiles(
 
     The finalize is the same cumulative-walk fold as ``qhist_quantile``
     but built as SQL strings over the named state column — identical
-    JVM plan, a fraction of the py4j construction cost (round 11; the
-    Column-API ``qhist_quantile`` stays for callers finalizing an
-    arbitrary state EXPRESSION, e.g. the approxHistogram aggregator)."""
+    JVM plan, a fraction of the py4j construction cost (round 11)."""
 
-    def _q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    qg = [_q(c) for c in group_cols]
+    qg = [ident(c) for c in group_cols]
     st = qhist_state_grouped(df, value_col, group_cols, lo, hi, bins)
     names = [f"p{int(q * 100)}" for q in quantiles]
     t1 = st.selectExpr(

@@ -6,15 +6,20 @@ filter/granularity applied → host-engine relational ops. Here that becomes:
 
     manifest listing (driver-side)                 [replaces S1 HTTP hop]
     → overshadow-resolved file set                 [S2 timeline]
-    → spark.read.parquet(paths)                    [S3 segment reader]
-    → .where(interval ∧ DimFilter)                 [P2 + P3, pushed down]
-    → .select(__time, dims, metrics)               [P1 column pruning]
-    → granularity truncation                       [G1]
+    → merged manifest schema (driver-side)
+    → spark.read.schema(merged).parquet(paths)     [S3 segment reader]
+    → .where("interval AND DimFilter")             [P2 + P3, pushed down]
+    → .selectExpr(granularity(__time), dims, metrics)
+                                                   [G1 + P1 column pruning]
     → optional rollup groupBy().agg(...)           [A-rows]
 
 Everything is declarative DataFrame construction — Catalyst does predicate
 pushdown, column pruning and partition planning; no custom rules
-(SURVEY.md §4 conclusion).
+(SURVEY.md §4 conclusion). Compiling a managed-table load launches no
+Spark job: the segment schemas come from the manifests (recorded at
+publish), and the predicate and projection reach Spark as SQL text
+(functions/sqltext), a constant number of py4j round trips whatever the
+filter's size.
 
 Scale notes: the fast path produces ONE parquet scan over the visible files
 (no unions, no repartition); window-filtered unions only appear under
@@ -25,24 +30,27 @@ map-side partial aggregation, including sketch partials.
 
 from __future__ import annotations
 
-import os
 from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, BinaryType, StructField, StructType, TimestampType
 
 from druid_hadoop_utils_spark.intervals import Interval, parse_intervals
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
-from druid_hadoop_utils_spark.functions.filters import filter_to_column
-from druid_hadoop_utils_spark.functions.granularity import granularity_expr
+from druid_hadoop_utils_spark.functions.filters import filter_sql
+from druid_hadoop_utils_spark.functions.granularity import granularity_sql
+from druid_hadoop_utils_spark.functions.sqltext import ident, lit, ts_text
 from druid_hadoop_utils_spark.sources.segments import (
     MANIFEST_DIR,
     list_manifests,
+    read_segments,
     resolve_visible_windows,
+    segments_schema,
 )
 
 TIME_COL = "__time"
+_ISO_MILLIS = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
 
 class AllSegmentsPruned(FileNotFoundError):
@@ -50,27 +58,23 @@ class AllSegmentsPruned(FileNotFoundError):
     the query result is provably empty (distinct from 'no segments')."""
 
 
-def _interval_pred(iv: Interval, col, ntz: bool = False):
-    lo = F.lit(iv.start.replace(tzinfo=None))
-    hi = F.lit(iv.end.replace(tzinfo=None))
-    if ntz:
-        lo, hi = lo.cast("timestamp_ntz"), hi.cast("timestamp_ntz")
-    return (col >= lo) & (col < hi)
+def interval_sql(ivs, col: str = TIME_COL, ntz: bool = False) -> str:
+    """SQL text: ``col`` inside any of the half-open intervals ``ivs``,
+    compared against TIMESTAMP (or, for a TIMESTAMP_NTZ column,
+    TIMESTAMP_NTZ) literals so the range pushes down to the scan."""
+    kw = "TIMESTAMP_NTZ" if ntz else "TIMESTAMP"
+    c = ident(col)
+    return "(" + " OR ".join(
+        f"({c} >= {kw} {lit(ts_text(iv.start))} AND {c} < {kw} {lit(ts_text(iv.end))})"
+        for iv in ivs
+    ) + ")"
 
 
-def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
-                   iv: Interval, dim_filter: dict | None = None,
-                   as_of=None, manifests=None) -> DataFrame:
-    """Manifest → overshadow resolution → minimal parquet scan(s).
-
-    ``dim_filter`` (the spec's DimFilter JSON) additionally drops visible
-    segments whose manifest column stats provably exclude the filter
-    (plans/pruning.py) — Druid-style segment skipping on dimensions, on
-    top of the timeline's interval pruning.
-
-    ``manifests`` lets a caller that already listed this (root,
-    datasource, as_of) reuse its listing — one metadata round-trip per
-    plan instead of two (clone_view)."""
+def _scan(spark: SparkSession, table_root: str, data_source: str,
+          iv: Interval, dim_filter: dict | None = None,
+          as_of=None, manifests=None) -> tuple[DataFrame, StructType | None]:
+    """``_scan_segments`` plus the scan's schema merged from the visible
+    manifests (None when a manifest records none)."""
     from druid_hadoop_utils_spark.plans.pruning import (
         filter_constraints,
         segment_excluded,
@@ -86,6 +90,7 @@ def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
     constraints = filter_constraints(dim_filter)
     full_paths: list[str] = []
     windowed: dict[tuple[Interval, ...], list[str]] = defaultdict(list)
+    scanned = []
     had_data = False
     for w in visible:
         if w.manifest.tombstone:
@@ -95,6 +100,7 @@ def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
         had_data = True
         if segment_excluded(w.manifest.stats, constraints):
             continue
+        scanned.append(w.manifest)
         if w.is_fully_visible(iv):
             full_paths.append(w.manifest.path)
         else:
@@ -114,30 +120,48 @@ def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
             "(interval fully dropped)"
         )
 
-    # mergeSchema: Druid dimensions evolve — a column added in a newer
-    # segment version must read as NULL in older segments, not pick
-    # whichever file's footer Spark sampled first. The merge is a
-    # driver-side footer union (metadata only); pushdown and pruning are
-    # unaffected. A column whose TYPE changes across versions fails the
-    # merge loudly (Spark CANNOT_MERGE_SCHEMAS) — the Druid analogue of
-    # a metric type change, which requires reindexing (compact the old
-    # intervals with the new type to migrate).
-    def read(paths: list[str]) -> DataFrame:
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
-
+    # Druid dimensions evolve — a column added in a newer segment version
+    # must read as NULL in older segments, not pick whichever file's
+    # footer Spark sampled first. The scanned manifests' recorded schemas
+    # merge on the driver (segments_schema: no Spark job); a manifest
+    # without one, or a type conflict, makes this scan read with
+    # mergeSchema instead — one footer-read job, and Spark's loud
+    # CANNOT_MERGE_SCHEMAS on a real type change. Every part reads with
+    # the same schema, so the union below lines up by name.
+    schema = segments_schema(scanned)
     parts: list[DataFrame] = []
     if full_paths:
-        parts.append(read(full_paths))
+        parts.append(read_segments(spark, full_paths, schema))
     for windows, paths in windowed.items():
-        df = read(paths)
-        pred = _interval_pred(windows[0], F.col(TIME_COL))
-        for win in windows[1:]:
-            pred = pred | _interval_pred(win, F.col(TIME_COL))
-        parts.append(df.where(pred))
+        parts.append(read_segments(spark, paths, schema)
+                     .where(interval_sql(windows)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
-    return out
+    return out, schema
+
+
+def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
+                   iv: Interval, dim_filter: dict | None = None,
+                   as_of=None, manifests=None) -> DataFrame:
+    """Manifest → overshadow resolution → minimal parquet scan(s).
+
+    ``dim_filter`` (the spec's DimFilter JSON) additionally drops visible
+    segments whose manifest column stats provably exclude the filter
+    (plans/pruning.py) — Druid-style segment skipping on dimensions, on
+    top of the timeline's interval pruning.
+
+    ``manifests`` lets a caller that already listed this (root,
+    datasource, as_of) reuse its listing — one metadata round-trip per
+    plan instead of two (clone_view)."""
+    return _scan(spark, table_root, data_source, iv, dim_filter, as_of,
+                 manifests)[0]
+
+
+def _rename(schema: StructType, old: str, new: str) -> StructType:
+    return StructType([StructField(new if f.name == old else f.name,
+                                   f.dataType, f.nullable, f.metadata)
+                       for f in schema.fields])
 
 
 def load(
@@ -168,6 +192,11 @@ def load(
     announced at or before that instant, reproducing the table exactly
     as a reader then saw it (bounded by the last physical vacuum —
     ``sources.segments.list_manifests``).
+
+    A managed-table load launches no Spark job and asks the JVM nothing
+    about the scan: its schema is the visible manifests' recorded schemas
+    merged on the driver, and the interval, filter, granularity and
+    projection go to Spark as SQL text in two DataFrame calls.
     """
     if not isinstance(spec, LoadSpec):
         spec = LoadSpec.from_json(spec, data_source=data_source, interval=interval)
@@ -178,6 +207,7 @@ def load(
         spec = _dc.replace(spec, as_of=as_of)
     ivs = parse_intervals(interval) if interval is not None else spec.intervals
 
+    schema = None
     if isinstance(source, DataFrame):
         df = source
     else:
@@ -194,9 +224,8 @@ def load(
                 # the span's visible set by the per-interval predicates
                 # below equals resolving each interval separately
                 span = Interval(ivs[0].start, ivs[-1].end)
-                df = _scan_segments(spark, source, ds, span,
-                                    dim_filter=spec.filter,
-                                    as_of=spec.as_of)
+                df, schema = _scan(spark, source, ds, span,
+                                   dim_filter=spec.filter, as_of=spec.as_of)
             except AllSegmentsPruned:
                 # a provably-empty result, not missing data
                 return _empty_result(spark, spec)
@@ -208,13 +237,18 @@ def load(
                 return _empty_result(spark, spec)
         else:
             df = spark.read.parquet(source)
+    if schema is None:
+        schema = df.schema
 
     if time_column != TIME_COL:
         df = df.withColumnRenamed(time_column, TIME_COL)
+        schema = _rename(schema, time_column, TIME_COL)
 
-    time_type = dict(df.dtypes).get(TIME_COL)
+    time_type = (schema[TIME_COL].dataType.simpleString()
+                 if TIME_COL in schema.names else None)
     time_is_nanos = time_type == "bigint"
     time_is_ntz = time_type == "timestamp_ntz"
+    preds = []
     if ivs:
         if time_is_nanos:
             # epoch-nanos long time column: compare raw longs so the range
@@ -226,45 +260,46 @@ def load(
             us = timedelta(microseconds=1)
             lmin, lmax = -(1 << 63), (1 << 63) - 1
 
-            def nanos_pred(iv: Interval):
+            def nanos_pred(iv: Interval) -> str:
                 # clamp to int64: nanos can only represent ~1677..2262, so
                 # a wider interval (e.g. /3000-01-01) means "no bound"
                 start_ns = max(((iv.start - epoch) // us) * 1000, lmin)
                 end_ns = min(((iv.end - epoch) // us) * 1000, lmax)
-                return (F.col(TIME_COL) >= F.lit(start_ns)) & (
-                    F.col(TIME_COL) < F.lit(end_ns)
-                )
+                return f"(`{TIME_COL}` >= {start_ns} AND `{TIME_COL}` < {end_ns})"
 
-            pred = nanos_pred(ivs[0])
-            for iv in ivs[1:]:
-                pred = pred | nanos_pred(iv)
+            preds.append("(" + " OR ".join(nanos_pred(iv) for iv in ivs) + ")")
         else:
             # TIMESTAMP_NTZ columns compare against NTZ literals so the
             # range predicate pushes down to the parquet scan unwrapped
             # (an LTZ literal would coerce the column and block pushdown)
-            pred = _interval_pred(ivs[0], F.col(TIME_COL), ntz=time_is_ntz)
-            for iv in ivs[1:]:
-                pred = pred | _interval_pred(iv, F.col(TIME_COL), ntz=time_is_ntz)
-        df = df.where(pred)
-    if time_is_nanos:
-        df = df.withColumn(TIME_COL, F.timestamp_micros(F.expr(f"`{TIME_COL}` DIV 1000")))
-    elif time_is_ntz:
+            preds.append(interval_sql(ivs, ntz=time_is_ntz))
+    if time_is_nanos or time_is_ntz:
+        if preds:
+            df = df.where(preds.pop())
         # session tz is pinned UTC (session.py), so NTZ → LTZ preserves the
         # instant; downstream granularity/filter/agg code sees one time type
-        df = df.withColumn(TIME_COL, F.col(TIME_COL).cast("timestamp"))
+        conv = (f"timestamp_micros(`{TIME_COL}` DIV 1000)" if time_is_nanos
+                else f"CAST(`{TIME_COL}` AS TIMESTAMP)")
+        df = df.withColumn(TIME_COL, F.expr(conv))
+        schema = StructType([
+            StructField(TIME_COL, TimestampType()) if f.name == TIME_COL else f
+            for f in schema.fields])
     if spec.filter is not None:
-        df = df.where(filter_to_column(spec.filter, df.schema))
+        preds.append(filter_sql(spec.filter, schema))
+    if preds:
+        df = df.where(" AND ".join(preds))
 
-    df = df.withColumn(TIME_COL, granularity_expr(spec.granularity, F.col(TIME_COL)))
-
-    cols = [TIME_COL] + [c for c in spec.dimensions + spec.metric_names if c in df.columns]
-    missing = [c for c in spec.dimensions + spec.metric_names if c not in df.columns]
+    names = spec.dimensions + spec.metric_names
+    missing = [c for c in names if c not in schema.names]
     if missing:
         raise ValueError(f"spec columns not in source: {missing}")
-    df = df.select(*cols)
+    df = df.selectExpr(
+        f"{granularity_sql(spec.granularity, ident(TIME_COL))} AS {ident(TIME_COL)}",
+        *[ident(c) for c in names],
+    )
 
     if rollup:
-        df = rollup_df(df, spec)
+        df = _rollup(df, spec, schema)
     return df
 
 
@@ -303,11 +338,9 @@ def to_compat_output(df: DataFrame) -> DataFrame:
     ISO-8601 string in the first position (reference: DruidStorage.java:122
     emits ``row.getTimestamp().toString()``, schema field name at :231).
     Only for the compatibility edge — keep TimestampType internally."""
-    others = [c for c in df.columns if c != TIME_COL]
-    return df.select(
-        F.date_format(F.col(TIME_COL), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'").alias(
-            "druid_timestamp"
-        ),
+    others = [ident(c) for c in df.columns if c != TIME_COL]
+    return df.selectExpr(
+        f"date_format(`{TIME_COL}`, {lit(_ISO_MILLIS)}) AS druid_timestamp",
         *others,
     )
 
@@ -321,44 +354,53 @@ def rollup_df(df: DataFrame, spec: LoadSpec, explode_dims: bool = False) -> Data
     ``explode_dims=True`` applies Druid's multi-value groupBy semantics
     (each value of a multi-value dimension forms its own group).
     """
-    from druid_hadoop_utils_spark.functions.aggregators import _hll_partial, DEFAULT_LGK
-    from pyspark.sql.types import BinaryType
+    return _rollup(df, spec, df.schema, explode_dims)
+
+
+def _rollup(df: DataFrame, spec: LoadSpec, schema: StructType,
+            explode_dims: bool = False) -> DataFrame:
+    from druid_hadoop_utils_spark.functions.aggregators import (
+        DEFAULT_LGK,
+        hll_partial_sql,
+    )
+    from druid_hadoop_utils_spark.functions.quantiles import (
+        DEFAULT_BINS,
+        qhist_merge_sql,
+    )
 
     dims = list(spec.dimensions)
     if explode_dims:
         for d in dims:
-            if isinstance(df.schema[d].dataType, ArrayType):
-                df = df.withColumn(d, F.explode_outer(d))
+            if isinstance(schema[d].dataType, ArrayType):
+                df = df.withColumn(d, F.expr(f"explode_outer({ident(d)})"))
 
     aggs = []
     for m in spec.metrics:
-        col = F.col(m.name)
-        if m.type == "qhist":
-            # mergeable histogram-quantile state (functions/quantiles):
-            # element-wise re-merge keeps the metric re-aggregable
-            from druid_hadoop_utils_spark.functions.quantiles import (
-                DEFAULT_BINS,
-                qhist_merge,
-            )
-
-            aggs.append(qhist_merge(col, DEFAULT_BINS).alias(m.name))
-        elif m.type == "druidHyperUnique":
+        c = ident(m.name)
+        if m.type == "druidHyperUnique":
             # imported Druid-format sketch bytes (NOT DataSketches): merge
             # register-wise into NEW Druid bytes so the rolled-up metric
             # stays re-mergeable in Druid's own format (reference A3,
-            # NonFinalizingAggregatorFactoryAdapter.java:19-31)
+            # NonFinalizingAggregatorFactoryAdapter.java:19-31) — a Python
+            # UDF over the collected states
             from druid_hadoop_utils_spark.sources.druid_segment import (
                 druid_hll_merge,
             )
 
-            aggs.append(druid_hll_merge(F.collect_list(col)).alias(m.name))
+            aggs.append(druid_hll_merge(F.collect_list(m.name)).alias(m.name))
+            continue
+        if m.type == "qhist":
+            # mergeable histogram-quantile state (functions/quantiles):
+            # element-wise re-merge keeps the metric re-aggregable
+            text = qhist_merge_sql(c, DEFAULT_BINS)
         elif m.is_complex:
-            is_sketch = isinstance(df.schema[m.name].dataType, BinaryType)
-            aggs.append(_hll_partial(col, is_sketch, DEFAULT_LGK).alias(m.name))
+            is_sketch = isinstance(schema[m.name].dataType, BinaryType)
+            text = hll_partial_sql(c, is_sketch, DEFAULT_LGK)
         elif m.type == "long":
-            aggs.append(F.sum(col).cast("long").alias(m.name))
+            text = f"CAST(sum({c}) AS BIGINT)"
         elif m.type in {"float", "double"}:
-            aggs.append(F.sum(col.cast("double")).alias(m.name))
+            text = f"sum(CAST({c} AS DOUBLE))"
         else:  # string passthrough metrics keep the first value
-            aggs.append(F.first(col, ignorenulls=True).alias(m.name))
+            text = f"first({c}, true)"
+        aggs.append(F.expr(f"{text} AS {c}"))
     return df.groupBy(TIME_COL, *dims).agg(*aggs)

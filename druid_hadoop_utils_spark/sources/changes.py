@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from druid_hadoop_utils_spark.intervals import Interval, merge_adjacent
-from druid_hadoop_utils_spark.sources.segments import resolve_path_views
+from druid_hadoop_utils_spark.sources.segments import (
+    read_segments,
+    resolve_path_views,
+    segments_schema,
+)
 
 #: stored segment time column (plans/planner.py TIME_COL)
 _TIME_COL = "__time"
@@ -90,7 +94,11 @@ def changed_windows(table_root: str, data_source: str, as_of_a,
     resolutions, interval subtraction; the cost pin for
     ``read_changes`` (tests assert its scans stay inside this file
     set)."""
-    a, b = _views(table_root, data_source, as_of_a, as_of_b)
+    return _changed_windows_of(*_views(table_root, data_source, as_of_a,
+                                       as_of_b))
+
+
+def _changed_windows_of(a: dict, b: dict) -> dict[str, dict[str, tuple]]:
     out: dict[str, dict[str, tuple]] = {}
     for path in sorted(set(a) | set(b)):
         w = b[path] if path in b else a[path]
@@ -104,13 +112,8 @@ def changed_windows(table_root: str, data_source: str, as_of_a,
     return out
 
 
-def _interval_pred(iv: Interval, col):
-    lo = F.lit(iv.start.replace(tzinfo=None))
-    hi = F.lit(iv.end.replace(tzinfo=None))
-    return (col >= lo) & (col < hi)
-
-
-def _read_side(spark: SparkSession, plan: dict, side: str) -> DataFrame | None:
+def _read_side(spark: SparkSession, plan: dict, side: str,
+               schema) -> DataFrame | None:
     """One tagged DataFrame for the insert or delete side. Paths whose
     changed windows cover their WHOLE segment interval (the common case
     — a replaced or added bucket) collapse into a SINGLE predicate-free
@@ -119,6 +122,8 @@ def _read_side(spark: SparkSession, plan: dict, side: str) -> DataFrame | None:
     overshadow) get per-window-pattern scans with pushed ``__time``
     range predicates. Without the collapse a 1000-bucket DML rewrite
     would plan 1000 scan nodes instead of 2."""
+    from druid_hadoop_utils_spark.plans.planner import interval_sql
+
     full_paths: list[str] = []
     grouped: dict[tuple, list[str]] = defaultdict(list)
     for path, sides in plan.items():
@@ -131,15 +136,11 @@ def _read_side(spark: SparkSession, plan: dict, side: str) -> DataFrame | None:
             grouped[wins].append(path)
     parts: list[DataFrame] = []
     if full_paths:
-        parts.append(spark.read.option("mergeSchema", "true")
-                     .parquet(*sorted(full_paths)))
+        parts.append(read_segments(spark, sorted(full_paths), schema))
     for windows, paths in sorted(grouped.items(),
                                  key=lambda kv: (kv[1][0],)):
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        pred = _interval_pred(windows[0], F.col(_TIME_COL))
-        for win in windows[1:]:
-            pred = pred | _interval_pred(win, F.col(_TIME_COL))
-        parts.append(df.where(pred))
+        parts.append(read_segments(spark, paths, schema)
+                     .where(interval_sql(windows, _TIME_COL)))
     if not parts:
         return None
     out = parts[0]
@@ -221,9 +222,13 @@ def read_changes(spark: SparkSession, table_root: str, data_source: str,
                 f"columns must name table columns only (got {columns!r}; "
                 f"{CHANGE_TYPE_COL}/{CHANGE_COUNT_COL} are added by the "
                 "feed)")
-    plan = changed_windows(table_root, data_source, as_of_a, as_of_b)
-    ins = _read_side(spark, plan, "insert")
-    del_ = _read_side(spark, plan, "delete")
+    a, b = _views(table_root, data_source, as_of_a, as_of_b)
+    plan = _changed_windows_of(a, b)
+    # one schema for both sides, merged from the changed segments'
+    # manifests (segments_schema; mergeSchema when one records none)
+    schema = segments_schema([(b.get(p) or a[p]).manifest for p in plan])
+    ins = _read_side(spark, plan, "insert", schema)
+    del_ = _read_side(spark, plan, "delete", schema)
 
     if ins is None and del_ is None:
         # no visibility change at all: a correctly-shaped EMPTY feed.
@@ -233,7 +238,6 @@ def read_changes(spark: SparkSession, table_root: str, data_source: str,
         # the evolve-forward convention), never a mergeSchema pass over
         # the whole view — that would be 10k footer reads per idle poll
         # on a 10k-segment table.
-        a, b = _views(table_root, data_source, as_of_a, as_of_b)
         view = b or a
         if not view:
             raise FileNotFoundError(
@@ -253,8 +257,9 @@ def read_changes(spark: SparkSession, table_root: str, data_source: str,
                 if w.manifest.published_at else _epoch,
                 w.manifest.version,
             ),
-        ).manifest.path
-        probe = spark.read.parquet(newest).limit(0)
+        ).manifest
+        probe = read_segments(spark, [newest.path],
+                              segments_schema([newest])).limit(0)
         if columns is not None:
             probe = probe.select(*_feed_projection(probe.columns, columns))
         return (probe

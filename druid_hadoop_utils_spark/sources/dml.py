@@ -215,8 +215,7 @@ def _affected_intervals(df: DataFrame, time_column: str,
     from druid_hadoop_utils_spark.sources.ingest import _bucket_end
 
     rows = (
-        df.select(granularity_expr(bucket, F.col(time_column))
-                  .alias("__bucket"))
+        df.select(granularity_expr(bucket, time_column).alias("__bucket"))
         .distinct()
         .collect()
     )
@@ -230,15 +229,6 @@ def _affected_intervals(df: DataFrame, time_column: str,
         start = r["__bucket"].replace(tzinfo=timezone.utc)
         out.append(Interval(start, _bucket_end(start, bucket)))
     return sorted(out, key=lambda iv: iv.start)
-
-
-def _span_pred(ivs: list[Interval], col):
-    from druid_hadoop_utils_spark.plans.planner import _interval_pred
-
-    pred = _interval_pred(ivs[0], col)
-    for iv in ivs[1:]:
-        pred = pred | _interval_pred(iv, col)
-    return pred
 
 
 def merge_into(
@@ -271,7 +261,7 @@ def merge_into(
 
     Returns the manifests announced (segments + tombstones).
     """
-    from druid_hadoop_utils_spark.plans.planner import _scan_segments
+    from druid_hadoop_utils_spark.plans.planner import _scan_segments, interval_sql
     from druid_hadoop_utils_spark.sources.ingest import publish_segments
     from druid_hadoop_utils_spark.sources.maintenance import next_version
 
@@ -309,12 +299,12 @@ def merge_into(
         granularity_expr,
     )
 
-    bkey = granularity_expr(bucket, F.col("__time"))
+    bkey = granularity_expr(bucket, "__time")
     if existing:
         base = _scan_segments(spark, table_root, data_source,
                               Interval(existing[0].start, existing[-1].end),
                               manifests=manifests)
-        base = base.where(_span_pred(existing, F.col("__time")))
+        base = base.where(interval_sql(existing))
         if when_matched == "update":
             cols = set(base.columns)
             extra = [c for c in updates.columns if c not in cols]
@@ -399,8 +389,8 @@ def update_where(
     """
     from druid_hadoop_utils_spark.functions.filters import filter_to_column
     from druid_hadoop_utils_spark.plans.planner import (
-        _interval_pred,
         _scan_segments,
+        interval_sql,
     )
     from druid_hadoop_utils_spark.sources.ingest import publish_segments
     from druid_hadoop_utils_spark.sources.maintenance import next_version
@@ -426,7 +416,7 @@ def update_where(
 
     base = _scan_segments(spark, table_root, data_source, iv,
                           dim_filter=dim_filter, manifests=manifests)
-    base = base.where(_interval_pred(iv, F.col("__time")))
+    base = base.where(interval_sql([iv]))
     missing = [c for c in set if c not in base.columns]
     if missing:
         raise ValueError(f"update_where SET targets unknown column(s) "
@@ -436,7 +426,7 @@ def update_where(
     if not affected:
         return {"announced": [], "updated_buckets": []}
 
-    rows = base.where(_span_pred(affected, F.col("__time")))
+    rows = base.where(interval_sql(affected))
     # ONE select so every SET expression evaluates against the ORIGINAL
     # row (SQL UPDATE's simultaneous-assignment semantics: SET a=b, b=a
     # swaps) — chained withColumn would leak earlier assignments in
@@ -489,7 +479,7 @@ def delete_where(
     Returns ``{"announced": [...], "deleted_buckets": [...]}``.
     """
     from druid_hadoop_utils_spark.functions.filters import filter_to_column
-    from druid_hadoop_utils_spark.plans.planner import _scan_segments
+    from druid_hadoop_utils_spark.plans.planner import _scan_segments, interval_sql
     from druid_hadoop_utils_spark.sources.ingest import publish_segments
     from druid_hadoop_utils_spark.sources.maintenance import next_version
 
@@ -507,15 +497,13 @@ def delete_where(
 
     base = _scan_segments(spark, table_root, data_source, iv,
                           dim_filter=dim_filter, manifests=manifests)
-    from druid_hadoop_utils_spark.plans.planner import _interval_pred
-
-    base = base.where(_interval_pred(iv, F.col("__time")))
+    base = base.where(interval_sql([iv]))
     pred = filter_to_column(dim_filter, base)
     affected = _affected_intervals(base.where(pred), "__time", bucket)
     if not affected:
         return {"announced": [], "deleted_buckets": []}
 
-    survivors = base.where(_span_pred(affected, F.col("__time"))).where(
+    survivors = base.where(interval_sql(affected)).where(
         ~pred | pred.isNull())
     entry_fp, stamp_floor = _entry_state(manifests, affected)
     version = next_version(table_root, data_source,

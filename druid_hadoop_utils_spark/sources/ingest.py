@@ -23,6 +23,7 @@ from druid_hadoop_utils_spark.functions.granularity import granularity_expr
 from druid_hadoop_utils_spark.intervals import Interval
 from druid_hadoop_utils_spark.sources.segments import (
     SegmentManifest,
+    recorded_schema,
     register_manifest,
     register_manifest_group,
     segment_dir,
@@ -115,7 +116,7 @@ def publish_segments(
     if time_column != "__time":
         df = df.withColumnRenamed(time_column, "__time")
     sharded = shards_per_bucket > 1
-    bucketed = df.withColumn("__bucket", granularity_expr(bucket, F.col("__time")))
+    bucketed = df.withColumn("__bucket", granularity_expr(bucket, "__time"))
     if sharded:
         # shard on the full row hash: identical timestamps spread across
         # shards (hashing __time alone would skew hot seconds into one)
@@ -166,6 +167,8 @@ def publish_segments(
     bucketed.write.mode("overwrite").partitionBy(*part_cols).parquet(
         fs.spark_url(staging)
     )
+    # every bucket's files hold exactly the input's columns
+    seg_schema = recorded_schema(df.schema)
 
     # Manifest column stats come from a RE-READ of the just-written
     # staging parquet, not a second execution of the input pipeline: the
@@ -346,7 +349,7 @@ def publish_segments(
                     SegmentManifest(
                         data_source, iv, str(version), shard_num, seg_dir,
                         stats=stats_by_key.get((raw, shard_num)),
-                        published_at=stamp,
+                        published_at=stamp, schema=seg_schema,
                     )
                 )
         else:
@@ -355,7 +358,7 @@ def publish_segments(
             bucket_manifests.append(SegmentManifest(
                 data_source, iv, str(version), 0, seg_dir,
                 stats=stats_by_key.get((raw, 0)),
-                published_at=stamp,
+                published_at=stamp, schema=seg_schema,
             ))
         to_register.append(bucket_manifests)
         manifests.extend(bucket_manifests)
@@ -533,8 +536,8 @@ def clone_view(
 
     from druid_hadoop_utils_spark.intervals import parse_intervals
     from druid_hadoop_utils_spark.plans.planner import (
-        _interval_pred,
         _scan_segments,
+        interval_sql,
     )
     from druid_hadoop_utils_spark.sources.fs import get_fs
     from druid_hadoop_utils_spark.sources.segments import (
@@ -569,10 +572,7 @@ def clone_view(
     df = _scan_segments(spark, table_root, data_source, span,
                         manifests=manifests)
     if ivs:
-        pred = _interval_pred(ivs[0], F.col("__time"))
-        for iv in ivs[1:]:
-            pred = pred | _interval_pred(iv, F.col("__time"))
-        df = df.where(pred)
+        df = df.where(interval_sql(ivs))
     out = publish_segments(df, dest_root, dest_ds, version=version,
                            bucket=bucket, **publish_kwargs)
     # same construction as segments.timeline_version, over the listing

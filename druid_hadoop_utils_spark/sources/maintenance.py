@@ -91,7 +91,7 @@ def _compact_segments_locked(
     spark, table_root, data_source, interval, bucket, files_per_bucket,
     sort_by, shards_per_bucket, stats_columns, bloom_columns, lease,
 ) -> list[SegmentManifest]:
-    from druid_hadoop_utils_spark.plans.planner import _interval_pred, _scan_segments
+    from druid_hadoop_utils_spark.plans.planner import _scan_segments, interval_sql
     from druid_hadoop_utils_spark.sources.dml import (
         _commit_announced,
         _entry_state,
@@ -121,7 +121,7 @@ def _compact_segments_locked(
     # WITHIN the interval may still hold rows outside it, and republishing
     # those under the new (highest) version would resurrect data that a
     # newer version had overshadowed elsewhere.
-    df = df.where(_interval_pred(iv, F.col("__time")))
+    df = df.where(interval_sql([iv]))
     from druid_hadoop_utils_spark.sources.segments import publish_stamp
 
     version = next_version(table_root, data_source,
@@ -1233,7 +1233,8 @@ def _restore_to_locked(
         m = w.manifest
         groups.setdefault((m.interval.iso(), m.version), []).append(
             SegmentManifest(data_source, m.interval, version, m.shard_num,
-                            m.path, stats=m.stats, published_at=stamp))
+                            m.path, stats=m.stats, published_at=stamp,
+                            schema=m.schema))
     # intervals where the CURRENT view has rows but the old view had
     # none: tombstone them at the same restore version
     old_cover = merge_adjacent(sorted(
@@ -1276,11 +1277,8 @@ def _restore_to_locked(
                 "interval": ms[0].interval.iso(),
                 "version": version,
                 "publishedAt": stamp,
-                "shards": [
-                    {"shardNum": m.shard_num, "path": m.path,
-                     **({"stats": m.stats} if m.stats else {})}
-                    for m in sorted(ms, key=lambda m: m.shard_num)
-                ],
+                "shards": [m.shard_json()
+                           for m in sorted(ms, key=lambda m: m.shard_num)],
             })
         else:
             entries.append(ms[0].to_json())

@@ -445,6 +445,10 @@ def _build_states(spark, fs, mdir: str, spec: dict, targets, visible):
     from druid_hadoop_utils_spark.functions.granularity import granularity_expr
 
     from druid_hadoop_utils_spark.sources.fs import publish_parquet_dir
+    from druid_hadoop_utils_spark.sources.segments import (
+        read_segments,
+        segments_schema,
+    )
 
     if spec.get("kind") == "ivf_postings":
         from druid_hadoop_utils_spark.operators.similarity import (
@@ -533,9 +537,10 @@ def _build_states(spark, fs, mdir: str, spec: dict, targets, visible):
     done: list[str] = []
     for w in targets:
         path = _state_path(mdir, w.manifest.identifier)
-        seg = spark.read.parquet(w.manifest.path)
+        seg = read_segments(spark, [w.manifest.path],
+                            segments_schema([w.manifest]))
         # evolving dimensions (Druid semantics, same as the raw-path
-        # mergeSchema read): a column ADDED in later segment versions is
+        # merged-schema read): a column ADDED in later segment versions is
         # NULL for every row of an older segment — typed from the
         # table-wide merged schema so state files stay union-readable.
         # A column present in NO segment still fails analysis loudly.
@@ -545,18 +550,17 @@ def _build_states(spark, fs, mdir: str, spec: dict, targets, visible):
                 # VISIBLE windows only — an overshadowed old version may
                 # carry an incompatible dtype that the raw-path read
                 # (which also resolves visibility first) never touches
-                live = sorted({v.manifest.path for v in visible
-                               if not v.manifest.tombstone})
-                union_schema = (
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*live).schema
-                )
+                live = sorted({v.manifest for v in visible
+                               if not v.manifest.tombstone},
+                              key=lambda m: m.path)
+                union_schema = segments_schema(live) or read_segments(
+                    spark, [m.path for m in live], None).schema
             for c in missing:
                 if c in union_schema.names:
                     seg = seg.withColumn(
                         c, F.lit(None).cast(union_schema[c].dataType)
                     )
-        bucket = granularity_expr(granularity, F.col(time_column))
+        bucket = granularity_expr(granularity, time_column)
         rolled = group_aggregate(
             seg.withColumn("__time", bucket),
             list(dimensions),
@@ -1274,7 +1278,7 @@ def rewrite_groupby_from_states(
         if dim_filter is not None:
             states = states.where(filter_to_column(dim_filter, states.schema))
         states = states.withColumn(
-            "__time", granularity_expr(granularity, F.col("__time"))
+            "__time", granularity_expr(granularity, "__time")
         )
         merged = []
         for qa, sa in matched:

@@ -28,6 +28,13 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 from druid_hadoop_utils_spark.intervals import Interval, merge_adjacent
 
@@ -63,6 +70,13 @@ class SegmentManifest:
     # Advisory metadata; excluded from identity (the same segment
     # re-announced is the same segment).
     published_at: str | None = field(default=None, compare=False)
+    # the segment files' Spark schema (``StructType.jsonValue()``, every
+    # field nullable — what a mergeSchema footer read of the files infers)
+    # recorded at publish, so the planner merges schemas on the driver
+    # instead of running a footer-read job per query (``segments_schema``).
+    # Advisory metadata; excluded from identity. None on manifests
+    # written before it was recorded.
+    schema: dict | None = field(default=None, compare=False)
 
     @property
     def identifier(self) -> str:
@@ -86,6 +100,8 @@ class SegmentManifest:
             out["stats"] = self.stats
         if self.published_at:
             out["publishedAt"] = self.published_at
+        if self.schema:
+            out["schema"] = self.schema
         return out
 
     @classmethod
@@ -99,7 +115,72 @@ class SegmentManifest:
             tombstone=bool(obj.get("tombstone", False)),
             stats=obj.get("stats"),
             published_at=obj.get("publishedAt"),
+            schema=obj.get("schema"),
         )
+
+    def shard_json(self) -> dict:
+        """This segment's entry in a multi-shard group manifest."""
+        return {"shardNum": self.shard_num, "path": self.path,
+                **({"stats": self.stats} if self.stats else {}),
+                **({"schema": self.schema} if self.schema else {})}
+
+
+def recorded_schema(schema: StructType, exclude=()) -> dict:
+    """The schema a segment's manifest records for files written from a
+    frame of ``schema``: partition columns (``exclude``) dropped and every
+    field nullable, as Spark's parquet writer stores it."""
+    return StructType([
+        StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+        for f in schema.fields if f.name not in exclude
+    ]).jsonValue()
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_nullable(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def segments_schema(manifests) -> StructType | None:
+    """The driver-side merge of the manifests' recorded schemas: fields
+    unioned by name in first-seen order, so a column a newer segment adds
+    reads as NULL in older ones (Druid's evolving dimensions). None when a
+    manifest records no schema (written before schemas were recorded) or
+    two manifests disagree on a field's type — the caller then reads with
+    ``mergeSchema``, which merges from the file footers and raises Spark's
+    CANNOT_MERGE_SCHEMAS on a real type conflict (a metric type change
+    needs reindexing: compact the old intervals with the new type)."""
+    fields: dict[str, StructField] = {}
+    distinct: list[dict] = []
+    for m in manifests:
+        if not m.schema:
+            return None
+        if m.schema in distinct:
+            continue
+        distinct.append(m.schema)
+        for f in StructType.fromJson(m.schema).fields:
+            prev = fields.setdefault(f.name.lower(), f)
+            if prev.name != f.name or prev.dataType != f.dataType:
+                return None
+    return StructType(list(fields.values()))
+
+
+def read_segments(spark: SparkSession, paths: list[str],
+                  schema: StructType | None) -> DataFrame:
+    """One parquet scan over segment data dirs: with the merged manifest
+    schema when there is one (no Spark job), else ``mergeSchema`` (one
+    footer-read job)."""
+    reader = spark.read
+    if schema is None:
+        reader = reader.option("mergeSchema", "true")
+    else:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
 
 
 @dataclass(frozen=True)
@@ -279,6 +360,8 @@ def write_segment(
     if partition_by_day:
         writer = writer.partitionBy("__time_day")
     writer.parquet(seg_dir)
+    schema = recorded_schema(
+        df.schema, ("__time_day",) if partition_by_day else ())
 
     # Stats come from a re-read of the parquet just written — NOT from a
     # second execution of `df`. A non-deterministic pipeline (sampling,
@@ -293,7 +376,7 @@ def write_segment(
     )
     manifest = SegmentManifest(data_source, iv, str(version), shard_num,
                                seg_dir, stats=stats,
-                               published_at=published_at)
+                               published_at=published_at, schema=schema)
     # announce under the table's commit lease: a registration landing
     # between a concurrent DML commit's timeline re-validation and its
     # register would be silently overshadowed by the DML's (higher)
@@ -426,11 +509,8 @@ def register_manifest_group(
         "interval": m0.interval.iso(),
         "version": m0.version,
         "publishedAt": stamp,
-        "shards": [
-            {"shardNum": m.shard_num, "path": m.path,
-             **({"stats": m.stats} if m.stats else {})}
-            for m in sorted(manifests, key=lambda m: m.shard_num)
-        ],
+        "shards": [m.shard_json()
+                   for m in sorted(manifests, key=lambda m: m.shard_num)],
     }
     fs.put_text(mpath, json.dumps(obj, indent=2))
     return mpath
@@ -458,6 +538,7 @@ def _manifests_from_json(obj: dict, mpath: str) -> list[SegmentManifest]:
                 manifest_file=mpath,
                 stats=s.get("stats"),
                 published_at=obj.get("publishedAt"),
+                schema=s.get("schema"),
             )
             for s in obj["shards"]
         ]
@@ -466,7 +547,7 @@ def _manifests_from_json(obj: dict, mpath: str) -> list[SegmentManifest]:
         SegmentManifest(
             m.data_source, m.interval, m.version, m.shard_num, m.path,
             manifest_file=mpath, tombstone=m.tombstone, stats=m.stats,
-            published_at=m.published_at,
+            published_at=m.published_at, schema=m.schema,
         )
     ]
 

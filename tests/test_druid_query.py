@@ -179,15 +179,19 @@ def test_cascade_and_string_format_extraction(spark, events):
 
 
 def test_string_format_null_handling(spark):
-    from druid_hadoop_utils_spark.functions.filters import _extraction_fn
+    from druid_hadoop_utils_spark.functions.filters import extraction_sql
+    from druid_hadoop_utils_spark.functions.sqltext import ident
+
+    def _extraction_fn(fn):
+        return F.expr(extraction_sql(fn, ident("v")))
 
     df = spark.createDataFrame([("a",), (None,)], "v string")
     out = df.select(
-        _extraction_fn({"type": "stringFormat", "format": "<%s>"}, F.col("v")).alias("ns"),
+        _extraction_fn({"type": "stringFormat", "format": "<%s>"}).alias("ns"),
         _extraction_fn({"type": "stringFormat", "format": "<%s>",
-                        "nullHandling": "EMPTYSTRING"}, F.col("v")).alias("es"),
+                        "nullHandling": "EMPTYSTRING"}).alias("es"),
         _extraction_fn({"type": "stringFormat", "format": "<%s>",
-                        "nullHandling": "RETURNNULL"}, F.col("v")).alias("rn"),
+                        "nullHandling": "RETURNNULL"}).alias("rn"),
     ).collect()
     got = {(r.ns, r.es, r.rn) for r in out}
     assert got == {("<a>", "<a>", "<a>"), ("<null>", "<>", None)}

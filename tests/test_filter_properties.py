@@ -213,7 +213,8 @@ def test_natural_cmp_grid_matches_druid_comparator(spark):
     Python reference of Druid 0.9's StringComparators.ALPHANUMERIC on
     tricky mixed strings (digit runs, leading zeros, punctuation chunk
     boundaries, empties, big numbers)."""
-    from druid_hadoop_utils_spark.functions.filters import _natural_cmp
+    from druid_hadoop_utils_spark.functions.filters import natural_cmp_sql
+    from druid_hadoop_utils_spark.functions.sqltext import ident
     from pyspark.sql import functions as F
 
     vals = ["", "0", "7", "007", "10", "9", "a", "a9", "a10", "a.5", "a15",
@@ -222,8 +223,8 @@ def test_natural_cmp_grid_matches_druid_comparator(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     cols = []
     for j, b in enumerate(vals):
-        lt, gt = _natural_cmp(F.col("v"), b)
-        cols += [lt.alias(f"lt{j}"), gt.alias(f"gt{j}")]
+        lt, gt = natural_cmp_sql(ident("v"), b)
+        cols += [F.expr(lt).alias(f"lt{j}"), F.expr(gt).alias(f"gt{j}")]
     rows = {r.v: r for r in df.select("v", *cols).collect()}
     for a in vals:
         for j, b in enumerate(vals):

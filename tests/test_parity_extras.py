@@ -70,18 +70,22 @@ def test_extraction_search_query(df):
 def test_extraction_time_format(spark):
     from datetime import datetime
 
-    from druid_hadoop_utils_spark.functions.filters import _extraction_fn
+    from druid_hadoop_utils_spark.functions.filters import extraction_sql
+    from druid_hadoop_utils_spark.functions.sqltext import ident
     from pyspark.sql import functions as F
+
+    def _extraction_fn(fn, name):
+        return F.expr(extraction_sql(fn, ident(name)))
 
     rows = [Row(ts=datetime(2024, 3, 15, 22, 30))]
     base = spark.createDataFrame(rows)
     got = base.select(
         _extraction_fn({"type": "timeFormat", "format": "yyyy-MM-dd HH"},
-                       F.col("ts")).alias("utc"),
+                       "ts").alias("utc"),
         _extraction_fn({"type": "timeFormat", "format": "HH",
                         "timeZone": "America/Los_Angeles"},
-                       F.col("ts")).alias("la_hour"),
-        _extraction_fn({"type": "timeFormat"}, F.col("ts")).alias("iso"),
+                       "ts").alias("la_hour"),
+        _extraction_fn({"type": "timeFormat"}, "ts").alias("iso"),
     ).first()
     assert got.utc == "2024-03-15 22"
     assert got.la_hour == "15"  # PDT = UTC-7 on that date
@@ -89,13 +93,14 @@ def test_extraction_time_format(spark):
 
 
 def test_extraction_time_dim(spark):
-    from druid_hadoop_utils_spark.functions.filters import _extraction_fn
+    from druid_hadoop_utils_spark.functions.filters import extraction_sql
+    from druid_hadoop_utils_spark.functions.sqltext import ident
     from pyspark.sql import functions as F
 
     base = spark.createDataFrame([Row(d="03/15/2024")])
     got = base.select(
-        _extraction_fn({"type": "time", "timeFormat": "MM/dd/yyyy",
-                        "resultFormat": "yyyy-MM"}, F.col("d")).alias("ym")
+        F.expr(extraction_sql({"type": "time", "timeFormat": "MM/dd/yyyy",
+                               "resultFormat": "yyyy-MM"}, ident("d"))).alias("ym")
     ).first()
     assert got.ym == "2024-03"
 
