@@ -190,48 +190,3 @@ def bucket_step_sql(granularity: str | dict) -> str:
     if g == "YEAR":
         return "INTERVAL 1 YEAR"
     raise ValueError(f"no bucket step for granularity: {granularity!r}")
-
-
-def oracle_trunc_sql(granularity: str | dict, col_sql: str) -> str:
-    """DuckDB SQL equivalent of granularity_expr, for oracle checks."""
-    def duration_sql(secs: int) -> str:
-        # CAST: DuckDB's to_timestamp returns TIMESTAMPTZ
-        return (
-            f"CAST(to_timestamp(floor(epoch({col_sql})/{secs})*{secs}) AS TIMESTAMP)"
-        )
-
-    if isinstance(granularity, dict):
-        gtype = granularity.get("type")
-        if gtype == "duration" and not granularity.get("origin"):
-            return duration_sql(int(granularity["duration"]) // 1000)
-        if gtype == "period":
-            calendar = {"P1D": "day", "PT24H": "day", "P1W": "week",
-                        "P1M": "month", "P3M": "quarter", "P1Y": "year"}
-            p = granularity["period"].upper()
-            tz = granularity.get("timeZone")
-            if p in calendar and tz and not granularity.get("origin"):
-                # localize → truncate → back to UTC instants (DuckDB's
-                # timezone() flips direction on TIMESTAMP vs TIMESTAMPTZ)
-                return (
-                    f"CAST(timezone('{tz}', CAST(date_trunc('{calendar[p]}', "
-                    f"timezone('{tz}', CAST({col_sql} AS TIMESTAMPTZ))) "
-                    f"AS TIMESTAMP)) AS TIMESTAMP)"
-                )
-            if p in calendar and not tz:
-                return f"CAST(date_trunc('{calendar[p]}', {col_sql}) AS TIMESTAMP)"
-        raise ValueError(f"no oracle sql for granularity spec: {granularity!r}")
-    g = granularity.upper()
-    if g == "NONE":
-        return col_sql
-    if g == "ALL":
-        return "TIMESTAMP '1970-01-01 00:00:00'"
-    if g in _TRUNC_UNITS:
-        unit = _TRUNC_UNITS[g]
-        if g in {"SECOND", "MINUTE", "HOUR"}:
-            return f"date_trunc('{unit}', {col_sql})"
-        # DuckDB returns DATE for day-and-coarser truncation; Spark keeps
-        # TimestampType — cast for value-hash parity
-        return f"CAST(date_trunc('{unit}', {col_sql}) AS TIMESTAMP)"
-    if g in _DURATION_SECONDS:
-        return duration_sql(_DURATION_SECONDS[g])
-    raise ValueError(f"unknown granularity: {granularity!r}")

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -54,6 +54,12 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from druid_hadoop_utils_spark.functions.quantiles import (
+    quantile_label,  # noqa: F401 — re-exported for kll callers
+    quantile_labels,
+)
+from druid_hadoop_utils_spark.functions.sqltext import ident, lit
 
 DEFAULT_K = 200
 
@@ -68,57 +74,11 @@ def _state_schema(group_fields) -> StructType:
     )
 
 
-# ------------------------------------------------------------- pure-python core
-
-
-def _compact(levels: list[list[float]], k: int) -> None:
-    """Deterministic in-place collapse: the lowest level holding more than
-    k items sorts, pairs promote every other item up one level, an odd
-    trailing item stays. Repeats until all levels fit.
-
-    The reference KLL flips a coin per compaction to pick which member of
-    each sorted pair survives, so per-compaction rank errors are zero-mean
-    and cancel. A random offset would break oracle reproducibility, so the
-    offset here is the LEVEL PARITY instead: even levels promote the lower
-    member of each pair, odd levels the upper. Still fully deterministic,
-    but successive promotions through the level hierarchy roughly cancel
-    rather than stacking one-sided. Residual caveat: errors cancel in
-    expectation across levels, not per compaction, so worst-case bias is
-    still one-sided within a single level — weaker than the randomized KLL
-    guarantee. Exactness when k ≥ group size (no compaction) is unaffected."""
-    i = 0
-    while i < len(levels):
-        if len(levels[i]) <= k:
-            i += 1
-            continue
-        items = sorted(levels[i])
-        odd = len(items) % 2 == 1
-        keep_last = [items[-1]] if odd else []
-        if odd:
-            items = items[:-1]
-        promoted = items[i % 2 :: 2]
-        levels[i] = keep_last
-        if i + 1 == len(levels):
-            levels.append([])
-        levels[i + 1].extend(promoted)
-        # the promoted items may overflow the next level — loop continues
-        # there; never re-expands a compacted level
-        i += 1
-
-
-def _merge_levels(a: list[list[float]], b: list[list[float]], k: int) -> list[list[float]]:
-    out = [list(a[i]) if i < len(a) else [] for i in range(max(len(a), len(b)))]
-    for i, items in enumerate(b):
-        out[i].extend(items)
-    _compact(out, k)
-    return out
-
-
-# ---------------------------------------------------- vectorized build core
+# ------------------------------------------------------------- numpy core
 #
 # The per-raw-row work of the sketch build is the ONLY Python-rate cost in
 # the KLL path, so it is fully vectorized: a fresh batch of values bulk-
-# loads via ONE numpy sort + strided slicing (closed form of the _compact
+# loads via ONE numpy sort + strided slicing (closed form of the _compact_np
 # cascade applied to a single sorted array — derivation below), and
 # per-partition folding merges level arrays with numpy sorts. No Python
 # floats are ever boxed per item. Round-6 measurement (sf0.1×30, 3M rows,
@@ -130,12 +90,12 @@ def _merge_levels(a: list[list[float]], b: list[list[float]], k: int) -> list[li
 # item) iff m_l is odd, and level j holds m_j items at stride 2^j. The
 # original-index offset of level l follows o_0 = 0,
 # o_{l+1} = o_l + (l % 2) * 2^l — the parity-alternating promotion
-# _compact uses. Total weight is exact: n = sum odd_l 2^l + 2^j m_j.
+# _compact_np uses. Total weight is exact: n = sum odd_l 2^l + 2^j m_j.
 
 
 def _bulk_levels_np(vals, k: int) -> list:
     """Sorted-bulk-load a fresh value array into KLL levels (numpy
-    arrays) — equivalent to feeding the array through ``_compact``."""
+    arrays) — equivalent to feeding the array through ``_compact_np``."""
     import numpy as np
 
     n = int(vals.size)
@@ -157,8 +117,20 @@ def _bulk_levels_np(vals, k: int) -> list:
 
 
 def _compact_np(levels: list, k: int) -> None:
-    """``_compact`` on numpy level arrays: same deterministic
-    parity-offset promotion, sorts in C."""
+    """Deterministic in-place collapse of numpy level arrays: the lowest
+    level holding more than k items sorts, pairs promote every other item
+    up one level, an odd trailing item stays. Repeats until all levels fit.
+
+    The reference KLL flips a coin per compaction to pick which member of
+    each sorted pair survives, so per-compaction rank errors are zero-mean
+    and cancel. A random offset would break oracle reproducibility, so the
+    offset here is the LEVEL PARITY instead: even levels promote the lower
+    member of each pair, odd levels the upper. Still fully deterministic,
+    but successive promotions through the level hierarchy roughly cancel
+    rather than stacking one-sided. Residual caveat: errors cancel in
+    expectation across levels, not per compaction, so worst-case bias is
+    still one-sided within a single level — weaker than the randomized KLL
+    guarantee. Exactness when k ≥ group size (no compaction) is unaffected."""
     import numpy as np
 
     i = 0
@@ -177,6 +149,8 @@ def _compact_np(levels: list, k: int) -> None:
             levels.append(promoted)
         else:
             levels[i + 1] = np.concatenate([levels[i + 1], promoted])
+        # the promoted items may overflow the next level — loop continues
+        # there; never re-expands a compacted level
         i += 1
 
 
@@ -278,7 +252,7 @@ def kll_state_grouped(
     k: int = DEFAULT_K,
 ) -> DataFrame:
     """One mergeable KLL state per group: partial build (no shuffle) +
-    the single state-merge shuffle (``applyInPandas``; at most
+    the single state-merge shuffle (``applyInArrow``; at most
     #partitions small states per group move)."""
     return merge_kll_states(
         kll_partials(df, value_col, group_cols, k), list(group_cols)
@@ -295,12 +269,13 @@ def merge_kll_states(states: DataFrame, group_cols: list[str]) -> DataFrame:
     into a numpy object array, before the merge touched it — pure
     serialization overhead for a function that only concatenates and
     sorts doubles. Here the level payload is read straight out of the
-    Arrow buffers (offsets + one contiguous double buffer, zero-copy) and
-    merged with the same deterministic numpy compaction cascade the build
-    uses (``_compact_np`` ≡ ``_compact`` — same parity-offset promotion,
-    pinned by tests), so the merged VALUES are bit-identical to the
-    pandas path: no arithmetic happens in either, only concatenation,
-    sorting, and strided selection of the same doubles.
+    Arrow buffers (offsets + one contiguous double buffer, zero-copy):
+    each value's level comes from one vectorized offset pass, and the
+    levels are merged with the same deterministic numpy compaction
+    cascade the build uses (``_compact_np``), so the merged VALUES are
+    bit-identical to the pandas path: no arithmetic happens in either,
+    only concatenation, sorting, and strided selection of the same
+    doubles.
 
     ORDER-FREE merge: concatenate every state level-wise, then one
     compaction cascade — the result is a function of the MULTISET of
@@ -328,23 +303,15 @@ def merge_kll_states(states: DataFrame, group_cols: list[str]) -> DataFrame:
         outer_off = lv.offsets.to_numpy()
         inner = lv.values  # every level of every state, back-to-back
         inner_off = inner.offsets.to_numpy()
-        vals = inner.values.to_numpy()
-        nstates = len(tbl)
-        widths = outer_off[1:] - outer_off[:-1]
-        max_levels = int(widths.max()) if nstates else 0
-        acc: list = []
-        for i in range(max_levels):
-            parts = []
-            for s in range(nstates):
-                j = outer_off[s] + i
-                if j < outer_off[s + 1]:
-                    a, b = inner_off[j], inner_off[j + 1]
-                    if b > a:
-                        parts.append(vals[a:b])
-            acc.append(
-                np.concatenate(parts) if len(parts) > 1
-                else (parts[0].copy() if parts else np.empty(0))
-            )
+        first, last = outer_off[0], outer_off[-1]
+        widths = np.diff(outer_off)
+        # level index of every level list (its position inside its
+        # state), then of every value; one mask per level keeps the
+        # values in state order, i.e. the state-by-state concatenation
+        list_lvl = np.arange(first, last) - np.repeat(outer_off[:-1], widths)
+        elem_lvl = np.repeat(list_lvl, np.diff(inner_off[first:last + 1]))
+        vals = inner.values.to_numpy()[inner_off[first]:inner_off[last]]
+        acc = [vals[elem_lvl == i] for i in range(int(widths.max(initial=0)))]
         if not acc:
             acc = [np.empty(0)]
         _compact_np(acc, k)
@@ -367,22 +334,60 @@ def merge_kll_states(states: DataFrame, group_cols: list[str]) -> DataFrame:
 # ------------------------------------------------------------- query
 
 
-def quantile_label(q: float) -> str:
-    """Output column name for quantile ``q``: ``p50`` for whole
-    percents, ``p99_9``-style for fine-grained ones (0.999) — always a
-    valid unquoted SQL identifier, and distinct labels for distinct
-    quantiles at any granularity the float carries.
+# All big expressions are built as ONE SQL string each (F.expr /
+# selectExpr): constructing the same nested lambdas through the Column
+# API costs hundreds of py4j round-trips — measured ~0.2 s of pure
+# driver-side plan construction PER QUERY (round 11, BASELINE.md), which
+# was most of the q_kll_quantiles_prod pair's gap vs percentile_approx at
+# sf0.1. The JVM plan is identical.
 
-    Formatting goes through one rounded decimal rendering, NEVER a
-    float-exactness test: q*100 is not float-exact for most hundredths
-    (0.29*100 == 28.999999999999996), so an ``int(pct) == pct`` fast
-    path would emit broken labels like ``p29_`` for p29 (round-12
-    review catch). ``%.8f`` absorbs that representation error (8
-    decimals of a percent = 1e-10 quantile resolution, far past any
-    meaningful distinction) and the strips leave a clean integer or
-    underscore-separated decimal."""
-    s = f"{q * 100.0:.8f}".rstrip("0").rstrip(".")
-    return "p" + s.replace(".", "_")
+
+def kll_pairs_sql(levels: str) -> str:
+    """The (item, 2^level weight) pairs of a levels array given as SQL
+    text, as one flat ``array<struct<v double, w double>>``."""
+    return (
+        f"flatten(transform({levels}, (items, lvl) -> "
+        "transform(items, v -> struct(v AS v, "
+        "cast(pow(2.0, lvl) AS double) AS w))))"
+    )
+
+
+def kll_weight_sql(levels: str) -> str:
+    """Total weight of a levels array given as SQL text, from the level
+    sizes — a fold over ~log(n/k) levels, not over the pairs."""
+    return (
+        f"aggregate(transform({levels}, (items, lvl) -> "
+        "cast(size(items) AS double) * pow(2.0, lvl)), "
+        "cast(0.0 AS double), (a, x) -> a + x)"
+    )
+
+
+def kll_pick_sql(pairs: str, weight: str, quantiles: list[float]) -> str:
+    """Every quantile's lower-rank pick at ceil(q·W) over SORTED pairs
+    (``pairs``, total weight ``weight``; both SQL text): a struct whose
+    field ``q{i}`` is the pick for ``quantiles[i]``, NULL when the weight
+    is 0. The fields are keyed by POSITION, so any distinct quantiles
+    work whatever their labels.
+
+    ONE fold finds every pick — higher-order folds evaluate interpreted
+    per element, so folding once for Q quantiles instead of Q+1 separate
+    passes is a measured ~3× on the evaluation stage (round 6)."""
+    acc0 = (
+        "named_struct('cum', cast(0.0 AS double), "
+        + ", ".join(f"'q{i}', cast(null AS double)"
+                    for i in range(len(quantiles)))
+        + ")"
+    )
+    steps = ", ".join(
+        f"CASE WHEN acc.q{i} IS NULL AND acc.cum + x.w >= "
+        f"greatest(cast(ceil({lit(float(q))} * {weight}) AS double), 1.0) "
+        f"THEN x.v ELSE acc.q{i} END AS q{i}"
+        for i, q in enumerate(quantiles)
+    )
+    return (
+        f"aggregate({pairs}, {acc0}, "
+        f"(acc, x) -> struct(acc.cum + x.w AS cum, {steps}))"
+    )
 
 
 def quantile_query(
@@ -419,10 +424,7 @@ def quantile_query(
     if not quantiles:
         raise ValueError("quantile_query: need at least one quantile")
     gcols = list(group_cols)
-    names = [quantile_label(q) for q in quantiles]
-    if len(set(names)) != len(names):
-        raise ValueError(
-            f"quantile_query: quantile labels collide: {names}")
+    names = quantile_labels(quantiles, "quantile_query")
     agg = F.percentile_approx(
         F.col(value_col).cast("double"),
         [float(q) for q in quantiles],
@@ -443,8 +445,8 @@ def kll_quantiles(
     exploded-row shuffle: flatten each state into (item, 2^level weight)
     pairs, ``collect_list`` gathers every state's pairs per group (the
     only shuffle — pair volume is bounded by state sizes, not raw rows),
-    sort the array once, then one ``aggregate`` fold per quantile walks
-    cumulative weight to the lower-rank pick at ceil(q·W) — identical
+    sort the array once, then one ``aggregate`` fold (``kll_pick_sql``)
+    walks cumulative weight to each lower-rank pick at ceil(q·W) — identical
     semantics to ``rank_quantiles`` (and identical RESULTS when the
     sketch is exact). Works on ``kll_partials`` output or merged states;
     both evaluate to the same quantiles by construction.
@@ -456,70 +458,21 @@ def kll_quantiles(
     EXACT regime (k ≥ group size, the oracle-test mode) the array holds
     every raw value of the group; use that mode only when a group's
     values fit driver-side anyway (tests / small dims), or pre-merge
-    with ``kll_merge`` (whose applyInPandas compaction bounds state
+    with ``merge_kll_states`` (whose applyInArrow compaction bounds state
     size) before evaluating."""
     if not quantiles:
         raise ValueError("kll_quantiles: need at least one quantile")
     gcols = list(group_cols)
-    # output labels: p50 for whole percents, p99_9-style for
-    # fine-grained quantiles; the fold accumulator below is keyed by
-    # POSITION (q0, q1, ...), so any distinct quantiles work — only
-    # genuinely duplicate labels (same quantile twice) are rejected
-    names = [quantile_label(q) for q in quantiles]
-    if len(set(names)) != len(names):
-        raise ValueError(
-            f"kll_quantiles: quantile labels collide: {names}")
-
-    # All big expressions are built as ONE SQL string each (F.expr /
-    # selectExpr): constructing the same nested lambdas through the
-    # Column API costs hundreds of py4j round-trips — measured ~0.2 s of
-    # pure driver-side plan construction PER QUERY (round 11,
-    # BASELINE.md), which was most of the q_kll_quantiles_prod pair's
-    # gap vs percentile_approx at sf0.1. The JVM plan is identical.
-    def _q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    qg = [_q(c) for c in gcols]
-    pairs_sql = (
-        "flatten(transform(__kll_levels, (items, lvl) -> "
-        "transform(items, v -> struct(v AS v, "
-        "cast(pow(2.0, lvl) AS double) AS w))))"
-    )
-    # per-STATE total weight from level sizes — a fold over ~log(n/k)
-    # levels per state row, so the O(pairs) weight pass disappears into
-    # the same groupBy that gathers the pairs
-    w_sql = (
-        "aggregate(transform(__kll_levels, (items, lvl) -> "
-        "cast(size(items) AS double) * pow(2.0, lvl)), "
-        "cast(0.0 AS double), (a, x) -> a + x)"
-    )
-    st = states.selectExpr(*qg, f"{pairs_sql} AS __pairs", f"{w_sql} AS __w")
+    names = quantile_labels(quantiles, "kll_quantiles")
+    qg = [ident(c) for c in gcols]
+    levels = ident("__kll_levels")
+    st = states.selectExpr(*qg, f"{kll_pairs_sql(levels)} AS __pairs",
+                           f"{kll_weight_sql(levels)} AS __w")
     aggs = [
         F.expr("array_sort(flatten(collect_list(__pairs)))").alias("__pairs"),
         F.expr("sum(__w)").alias("__n"),
     ]
     agged = st.groupBy(*gcols).agg(*aggs) if gcols else st.agg(*aggs)
-
-    # ONE fold over the sorted pairs finds every quantile's lower-rank
-    # pick at ceil(q·W) — higher-order folds evaluate interpreted per
-    # element, so folding once for Q quantiles instead of Q+1 separate
-    # passes is a measured ~3× on the evaluation stage (round 6)
-    acc0 = (
-        "named_struct('cum', cast(0.0 AS double), "
-        + ", ".join(f"'q{i}', cast(null AS double)"
-                    for i in range(len(quantiles)))
-        + ")"
-    )
-    steps = ", ".join(
-        f"CASE WHEN acc.q{i} IS NULL AND acc.cum + x.w >= "
-        f"greatest(cast(ceil({float(q)!r} * __n) AS double), 1.0) "
-        f"THEN x.v ELSE acc.q{i} END AS q{i}"
-        for i, q in enumerate(quantiles)
-    )
-    fold = (
-        f"aggregate(__pairs, {acc0}, "
-        f"(acc, x) -> struct(acc.cum + x.w AS cum, {steps}))"
-    )
-    out = agged.selectExpr(*qg, f"{fold} AS __q")
+    out = agged.selectExpr(*qg, f"{kll_pick_sql('__pairs', '__n', quantiles)} AS __q")
     return out.selectExpr(
-        *qg, *[f"__q.q{i} AS {n}" for i, n in enumerate(names)])
+        *qg, *[f"__q.q{i} AS {ident(n)}" for i, n in enumerate(names)])

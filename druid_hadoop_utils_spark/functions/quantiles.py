@@ -30,6 +30,34 @@ from druid_hadoop_utils_spark.functions.sqltext import column_sql, ident, lit
 DEFAULT_BINS = 128
 
 
+def quantile_label(q: float) -> str:
+    """Output column name for quantile ``q``: ``p50`` for whole
+    percents, ``p99_9``-style for fine-grained ones (0.999) — always a
+    valid unquoted SQL identifier, and distinct labels for distinct
+    quantiles at any granularity the float carries.
+
+    Formatting goes through one rounded decimal rendering, NEVER a
+    float-exactness test: q*100 is not float-exact for most hundredths
+    (0.29*100 == 28.999999999999996), so an ``int(pct) == pct`` fast
+    path would emit broken labels like ``p29_`` for p29 (round-12
+    review catch). ``%.8f`` absorbs that representation error (8
+    decimals of a percent = 1e-10 quantile resolution, far past any
+    meaningful distinction) and the strips leave a clean integer or
+    underscore-separated decimal."""
+    s = f"{q * 100.0:.8f}".rstrip("0").rstrip(".")
+    return "p" + s.replace(".", "_")
+
+
+def quantile_labels(quantiles: list[float], who: str) -> list[str]:
+    """The output column names of ``quantiles`` (``quantile_label``), for
+    every function that returns one column per quantile; the same
+    quantile twice raises ValueError naming the caller ``who``."""
+    names = [quantile_label(q) for q in quantiles]
+    if len(set(names)) != len(names):
+        raise ValueError(f"{who}: quantile labels collide: {names}")
+    return names
+
+
 def qhist_state_sql(value: str, lo: float, hi: float, bins: int = DEFAULT_BINS) -> str:
     """Partial aggregate as SQL text over the value expression ``value``:
     self-describing histogram state with bucket counts of length bins+2
@@ -129,7 +157,7 @@ def qhist_state_grouped(
     qg = [ident(c) for c in group_cols]
     bucket_sql = (
         f"width_bucket(cast({ident(value_col)} AS double), "
-        f"cast({float(lo)!r} AS double), cast({float(hi)!r} AS double), "
+        f"{lit(float(lo))}, {lit(float(hi))}, "
         f"{int(bins)})"
     )
     per_bucket = (
@@ -155,8 +183,8 @@ def qhist_state_grouped(
         "i -> cast(coalesce(try_element_at(__m, i), 0) AS bigint))"
     )
     state_sql = (
-        f"struct(cast({float(lo)!r} AS double) AS lo, "
-        f"cast({float(hi)!r} AS double) AS hi, {counts_sql} AS counts)"
+        f"struct({lit(float(lo))} AS lo, {lit(float(hi))} AS hi, "
+        f"{counts_sql} AS counts)"
     )
     return agged.selectExpr(*qg, f"{state_sql} AS __qh")
 
@@ -170,42 +198,14 @@ def approx_quantiles(
     hi: float,
     bins: int = DEFAULT_BINS,
 ) -> DataFrame:
-    """Grouped quantile estimates via the two-stage state build.
-
-    The finalize is the same cumulative-walk fold as ``qhist_quantile``
-    but built as SQL strings over the named state column — identical
-    JVM plan, a fraction of the py4j construction cost (round 11)."""
-
+    """Grouped quantile estimates via the two-stage state build
+    (``qhist_state_grouped``), each finalized by ``qhist_quantile_sql``."""
+    names = quantile_labels(quantiles, "approx_quantiles")
     qg = [ident(c) for c in group_cols]
     st = qhist_state_grouped(df, value_col, group_cols, lo, hi, bins)
-    names = [f"p{int(q * 100)}" for q in quantiles]
-    t1 = st.selectExpr(
-        *qg, "__qh",
-        "aggregate(__qh.counts, cast(0 AS bigint), (a, x) -> a + x) AS __tot",
-    )
-    idx_cols = [
-        "aggregate(__qh.counts, "
-        "named_struct('cum', cast(0 AS bigint), 'idx', -1, 'pos', 0), "
-        "(acc, x) -> struct(acc.cum + x AS cum, "
-        f"CASE WHEN acc.idx < 0 AND cast(acc.cum + x AS double) >= "
-        f"{float(q)!r} * cast(__tot AS double) AND __tot > 0 "
-        f"THEN acc.pos ELSE acc.idx END AS idx, "
-        f"acc.pos + 1 AS pos)).idx AS __idx_{n}"
-        for q, n in zip(quantiles, names)
-    ]
-    t2 = t1.selectExpr(
-        *qg, "__qh.lo AS __lo", "__qh.hi AS __hi",
-        "size(__qh.counts) - 2 AS __bins", "__tot", *idx_cols,
-    )
-    outs = [
-        f"CASE WHEN __tot = 0 THEN cast(NULL AS double) "
-        f"WHEN __idx_{n} <= 0 THEN __lo "
-        f"WHEN __idx_{n} >= __bins + 1 THEN __hi "
-        f"ELSE __lo + (cast(__idx_{n} AS double) - 0.5) * "
-        f"((__hi - __lo) / __bins) END AS {n}"
-        for n in names
-    ]
-    return t2.selectExpr(*qg, *outs)
+    return st.selectExpr(
+        *qg, *[f"{qhist_quantile_sql(ident('__qh'), q)} AS {ident(n)}"
+               for q, n in zip(quantiles, names)])
 
 
 def rank_quantiles(
@@ -239,6 +239,7 @@ def rank_quantiles(
 
     if not quantiles:
         raise ValueError("rank_quantiles: need at least one quantile")
+    names = quantile_labels(quantiles, "rank_quantiles")
     c = F.col(value_col).cast("double")
     per_value = (
         df.where(c.isNotNull())
@@ -261,8 +262,7 @@ def rank_quantiles(
         return F.min(F.when(F.col("__cum") >= rank_col, F.col("__v")))
 
     cols = []
-    for q in quantiles:
-        name = f"p{int(round(q * 100))}"
+    for q, name in zip(quantiles, names):
         if interpolation == "lower":
             # rank(q) = max(ceil(q*n), 1)
             rank = F.greatest(F.ceil(F.lit(float(q)) * F.col("__n")), F.lit(1))

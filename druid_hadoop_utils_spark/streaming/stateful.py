@@ -74,62 +74,69 @@ def streaming_quantiles(
     """Per-key LIFETIME rank quantiles over a stream, updated each
     micro-batch — the streaming twin of ``functions.kll``: the state store
     holds one bounded KLL sketch per key (O(k·log n), checkpointed,
-    restart-safe), each batch folds its values in with the same
-    deterministic compaction, and the current quantile estimates emit in
-    'update' mode. Exact while the key's value count stays ≤ k.
+    restart-safe), and each batch appends its values to level 0 and runs
+    the batch build's compaction (``_compact_np``). The grouped map emits
+    ``(key, n_values, levels)``; the quantiles are then picked by the same
+    SQL fold ``kll_quantiles`` uses (``kll_pick_sql``) and labelled by
+    ``quantile_label``, in 'update' mode. Exact while the key's value
+    count stays ≤ k.
     """
-    from druid_hadoop_utils_spark.functions.kll import _compact
+    import numpy as np
+
+    from druid_hadoop_utils_spark.functions.kll import (
+        _compact_np,
+        kll_pairs_sql,
+        kll_pick_sql,
+        kll_weight_sql,
+    )
+    from druid_hadoop_utils_spark.functions.quantiles import quantile_labels
+    from druid_hadoop_utils_spark.functions.sqltext import ident
 
     if not quantiles:
         raise ValueError("streaming_quantiles: need at least one quantile")
-    qnames = [f"p{int(round(q * 100))}" for q in quantiles]
-    out_schema = StructType(
-        [StructField("key", StringType()), StructField("n_values", LongType())]
-        + [StructField(nm, DoubleType()) for nm in qnames]
+    qnames = quantile_labels(quantiles, "streaming_quantiles")
+    levels_type = ArrayType(ArrayType(DoubleType()))
+    sketch_schema = StructType(
+        [
+            StructField("key", StringType()),
+            StructField("n_values", LongType()),
+            StructField("levels", levels_type),
+        ]
     )
     state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("levels", ArrayType(ArrayType(DoubleType()))),
-        ]
+        [StructField("n", LongType()), StructField("levels", levels_type)]
     )
 
     def update(
         key, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
-            n, levels = state.get
-            levels = [list(l) for l in levels]
+            n, stored = state.get
+            levels = [np.asarray(l, dtype="float64") for l in stored]
         else:
-            n, levels = 0, [[]]
+            n, levels = 0, [np.empty(0)]
         for pdf in batches:
-            vals = pdf[value_col].dropna()
+            vals = pdf[value_col].dropna().to_numpy(dtype="float64")
             n += len(vals)
-            levels[0].extend(vals.to_numpy(dtype="float64").tolist())
-            _compact(levels, k)
-        state.update((n, levels))
-        pairs = sorted(
-            (v, 2.0**lvl) for lvl, items in enumerate(levels) for v in items
-        )
-        total = sum(w for _, w in pairs)
-        row = {"key": str(key[0]), "n_values": n}
-        for q, nm in zip(quantiles, qnames):
-            if total == 0:
-                row[nm] = None
-                continue
-            rank = max(-(-q * total // 1), 1)  # ceil(q·W), ≥ 1
-            cum = 0.0
-            pick = pairs[-1][0]
-            for v, w in pairs:
-                cum += w
-                if cum >= rank:
-                    pick = v
-                    break
-            row[nm] = pick
-        yield pd.DataFrame([row])
+            levels[0] = np.concatenate([levels[0], vals])
+            _compact_np(levels, k)
+        stored = [l.tolist() for l in levels]
+        state.update((n, stored))
+        yield pd.DataFrame(
+            [{"key": str(key[0]), "n_values": n, "levels": stored}])
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    sketches = events.groupBy(key_col).applyInPandasWithState(
+        update, sketch_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
+    levels_sql = ident("levels")
+    st = sketches.selectExpr(
+        "key", "n_values", f"array_sort({kll_pairs_sql(levels_sql)}) AS __pairs",
+        f"{kll_weight_sql(levels_sql)} AS __n")
+    picked = st.selectExpr(
+        "key", "n_values", f"{kll_pick_sql('__pairs', '__n', quantiles)} AS __q")
+    return picked.selectExpr(
+        "key", "n_values",
+        *[f"__q.q{i} AS {ident(nm)}" for i, nm in enumerate(qnames)],
     )
 
 

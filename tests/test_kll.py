@@ -1,13 +1,15 @@
 """KLL-style mergeable rank sketch (functions/kll.py)."""
 
+import hashlib
 import math
 import random
 
+import numpy as np
 import pytest
 
 from druid_hadoop_utils_spark.functions.kll import (
-    _compact,
-    _merge_levels,
+    _compact_np,
+    _merge_np,
     kll_quantiles,
     kll_state_grouped,
     merge_kll_states,
@@ -22,8 +24,8 @@ def _exact_lower_quantile(vals, q):
 
 def test_compact_preserves_weight_and_bounds_size():
     rng = random.Random(3)
-    levels = [[rng.uniform(0, 100) for _ in range(1000)]]
-    _compact(levels, 64)
+    levels = [np.array([rng.uniform(0, 100) for _ in range(1000)])]
+    _compact_np(levels, 64)
     total_w = sum(len(items) * 2**i for i, items in enumerate(levels))
     assert total_w <= 1000  # collapse only ever drops odd leftovers' pairs
     assert total_w >= 500
@@ -96,14 +98,37 @@ def test_merge_states_matches_direct_build(spark):
 
 def test_merge_levels_associative_weight():
     rng = random.Random(21)
-    a = [[rng.uniform(0, 1) for _ in range(30)], [rng.uniform(0, 1) for _ in range(10)]]
-    b = [[rng.uniform(0, 1) for _ in range(25)]]
-    m = _merge_levels(a, b, 16)
+    a = [np.array([rng.uniform(0, 1) for _ in range(30)]),
+         np.array([rng.uniform(0, 1) for _ in range(10)])]
+    b = [np.array([rng.uniform(0, 1) for _ in range(25)])]
+    m = _merge_np(a, b, 16)
     wa = sum(len(l) * 2**i for i, l in enumerate(a))
     wb = sum(len(l) * 2**i for i, l in enumerate(b))
     wm = sum(len(l) * 2**i for i, l in enumerate(m))
     assert wm <= wa + wb and wm >= (wa + wb) * 0.4
     assert all(len(l) <= 16 for l in m)
+
+
+def test_merge_kll_states_matches_level_loop(spark):
+    """The vectorized level gather against the per-level, per-state loop
+    it replaced, on 200 random groups of 1-6 states with 1-5 levels each
+    (empty levels included, k=8 so compaction runs)."""
+    rng = random.Random(29)
+    rows, want = [], {}
+    for g in range(200):
+        states = [[[float(rng.randrange(100)) for _ in range(rng.randrange(12))]
+                   for _ in range(rng.randrange(1, 6))]
+                  for _ in range(rng.randrange(1, 7))]
+        rows += [(g, 8, levels) for levels in states]
+        acc = [np.array([v for st in states if i < len(st) for v in st[i]])
+               for i in range(max(len(st) for st in states))]
+        _compact_np(acc, 8)
+        want[g] = [sorted(a.tolist()) for a in acc]
+    df = spark.createDataFrame(
+        rows, "g int, __kll_k int, __kll_levels array<array<double>>")
+    got = {r["g"]: [list(l) for l in r["__kll_levels"]]
+           for r in merge_kll_states(df.repartition(3), ["g"]).collect()}
+    assert got == want
 
 
 def test_rejects_tiny_k(spark):
@@ -129,14 +154,57 @@ def test_merge_rejects_mixed_k(spark):
 def test_compaction_offset_alternates_by_level():
     """Level parity picks which pair member survives (bias cancellation):
     level 0 promotes lower members, level 1 upper members."""
-    levels = [[float(v) for v in range(16)]]
-    _compact(levels, 8)
+    levels = [np.arange(16, dtype="float64")]
+    _compact_np(levels, 8)
     # level 0 overflowed: even offset -> promoted are 0,2,4,... (lowers)
-    assert levels[1] == [0.0, 2.0, 4.0, 6.0, 8.0, 10.0, 12.0, 14.0]
-    lv2 = [[], [float(v) for v in range(16)]]
-    _compact(lv2, 8)
+    assert levels[1].tolist() == [0.0, 2.0, 4.0, 6.0, 8.0, 10.0, 12.0, 14.0]
+    lv2 = [np.empty(0), np.arange(16, dtype="float64")]
+    _compact_np(lv2, 8)
     # level 1 overflowed: odd offset -> promoted are 1,3,5,... (uppers)
-    assert lv2[2] == [1.0, 3.0, 5.0, 7.0, 9.0, 11.0, 13.0, 15.0]
+    assert lv2[2].tolist() == [1.0, 3.0, 5.0, 7.0, 9.0, 11.0, 13.0, 15.0]
+    # the whole layouts, as the pure-Python compaction this core
+    # replaced returned them
+    assert [l.tolist() for l in levels] == [
+        [], [0.0, 2.0, 4.0, 6.0, 8.0, 10.0, 12.0, 14.0]]
+    assert [l.tolist() for l in lv2] == [
+        [], [], [1.0, 3.0, 5.0, 7.0, 9.0, 11.0, 13.0, 15.0]]
+
+
+def test_compact_golden_seeded_layout():
+    """1,000 seeded values at k=64: every level, in order, bit for bit as
+    the pure-Python compaction this core replaced returned them."""
+    rng = random.Random(3)
+    lv3 = [np.array([rng.uniform(0, 100) for _ in range(1000)])]
+    _compact_np(lv3, 64)
+    assert [l.size for l in lv3] == [0, 0, 0, 1, 62]
+    assert [hashlib.sha256(l.astype("float64").tobytes()).hexdigest()[:16]
+            for l in lv3] == ["e3b0c44298fc1c14"] * 3 + [
+                "ead81d66e9ea8c9d", "8b096433353555af"]
+    assert lv3[3].tolist() == [99.28165485511329]
+
+
+def test_merge_kll_states_golden(spark):
+    """Three states with 3, 1 and 4 levels (plus a single-state group)
+    merge to the exact levels recorded before the level gather was
+    vectorized."""
+    from pyspark.sql import Row
+
+    states = spark.createDataFrame([
+        Row(g="x", __kll_k=8, __kll_levels=[
+            [9.0, 3.0, 14.0, 1.0, 7.0], [2.5, 11.5], [6.0]]),
+        Row(g="x", __kll_k=8, __kll_levels=[
+            [4.0, 13.0, 0.0, 8.0, 12.0, 5.0]]),
+        Row(g="x", __kll_k=8, __kll_levels=[
+            [10.0, 15.0], [], [3.5, 0.5], [7.5]]),
+        Row(g="y", __kll_k=8, __kll_levels=[[1.0, 2.0]]),
+    ], "g string, __kll_k int, __kll_levels array<array<double>>")
+    got = sorted((r["g"], r["__kll_k"], [list(l) for l in r["__kll_levels"]])
+                 for r in merge_kll_states(states, ["g"]).collect())
+    assert got == [
+        ("x", 8, [[15.0], [0.0, 2.5, 3.0, 5.0, 8.0, 10.0, 11.5, 13.0],
+                  [0.5, 3.5, 6.0], [7.5]]),
+        ("y", 8, [[1.0, 2.0]]),
+    ]
 
 
 def test_prod_k_accuracy_floor_vs_exact(spark, sf_dir):
@@ -223,6 +291,12 @@ def test_kll_quantiles_fine_grained_labels(spark):
     row = kll_quantiles(states, [], [0.999, 0.25]).first()
     assert row.p99_9 == 9990.0
     assert row.p25 == 2500.0
+
+
+def test_quantile_label_importable_from_kll():
+    from druid_hadoop_utils_spark.functions import kll, quantiles
+
+    assert kll.quantile_label is quantiles.quantile_label
 
 
 def test_kll_quantiles_rejects_true_duplicates(spark):

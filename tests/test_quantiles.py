@@ -250,3 +250,42 @@ def test_rank_quantiles_rejects_unknown_interpolation(spark):
     df = spark.createDataFrame([(1.0,)], "v double")
     with pytest.raises(ValueError):
         rank_quantiles(df, "v", [], [0.5], interpolation="nearest")
+
+
+def test_quantile_columns_use_one_label_rule(spark):
+    """approx_quantiles and rank_quantiles name their columns with
+    ``quantile_label``: 0.29 is p29 (not p28), and 0.995 and 1.0 are two
+    columns, p99_5 and p100 (not p100 twice)."""
+    from druid_hadoop_utils_spark.functions.quantiles import rank_quantiles
+
+    df = spark.range(1, 1001).selectExpr("cast(id AS double) AS v")
+    out = approx_quantiles(df, "v", [], [0.29], lo=0, hi=1000, bins=100)
+    assert out.columns == ["p29"]
+    assert out.first().p29 == pytest.approx(290, abs=10)
+    out = rank_quantiles(df, "v", [], [0.995, 1.0])
+    assert out.columns == ["p99_5", "p100"]
+    row = out.first()
+    assert (row.p99_5, row.p100) == (995.0, 1000.0)
+
+
+def test_repeated_quantile_rejected_by_every_quantile_function(spark):
+    from druid_hadoop_utils_spark.functions.kll import (
+        kll_quantiles,
+        kll_state_grouped,
+        quantile_query,
+    )
+    from druid_hadoop_utils_spark.functions.quantiles import rank_quantiles
+    from druid_hadoop_utils_spark.streaming.stateful import streaming_quantiles
+
+    df = spark.range(10).selectExpr("cast(id AS double) AS v", "'a' AS g")
+    states = kll_state_grouped(df, "v", [], k=64)
+    calls = {
+        "approx_quantiles": lambda qs: approx_quantiles(df, "v", [], qs, 0, 10),
+        "rank_quantiles": lambda qs: rank_quantiles(df, "v", [], qs),
+        "quantile_query": lambda qs: quantile_query(df, "v", [], qs),
+        "kll_quantiles": lambda qs: kll_quantiles(states, [], qs),
+        "streaming_quantiles": lambda qs: streaming_quantiles(df, "g", "v", qs),
+    }
+    for who, call in calls.items():
+        with pytest.raises(ValueError, match=f"{who}: quantile labels collide"):
+            call([0.5, 0.25, 0.5])

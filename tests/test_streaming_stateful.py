@@ -136,6 +136,55 @@ def test_streaming_quantiles_accumulate_across_batches(spark, tmp_path):
     assert sum(1 for r in rows if r.key == "a") >= 2
 
 
+def test_streaming_quantiles_under_compaction(spark, tmp_path):
+    """Keys whose value count exceeds k (k=8) compact across micro-batches.
+    Every emission equals the values recorded from the pure-Python fold
+    the numpy compaction replaced, and 0.995 and 1.0 label as two columns
+    (p99_5, p100)."""
+    import random
+
+    from druid_hadoop_utils_spark.streaming.stateful import streaming_quantiles
+
+    src = str(tmp_path / "in")
+    rng = random.Random(7)
+    schema = "g string, v double"
+    for b in range(3):
+        rows = [Row(g="a", v=float(rng.randrange(1000))) for _ in range(25)]
+        rows += [Row(g="b", v=rng.uniform(-5, 5)) for _ in range(7)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            f"{src}/f{b}")
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/*")
+    )
+    out = streaming_quantiles(
+        stream, "g", "v", [0.25, 0.5, 0.9, 0.99, 0.995, 1.0], k=8)
+    assert out.columns == [
+        "key", "n_values", "p25", "p50", "p90", "p99", "p99_5", "p100"]
+    q = (
+        out.writeStream.format("memory").queryName("stream_q_compact")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(180)
+
+    rows = sorted(tuple(r) for r in
+                  spark.sql("SELECT * FROM stream_q_compact").collect())
+    lo, mid, top1 = -4.381379516638596, -0.7240769433059713, 4.474497007074875
+    top2, top3 = 1.8039997318178589, 2.645708662128131
+    assert rows == [
+        ("a", 25, 92.0, 428.0, 840.0, 970.0, 970.0, 970.0),
+        ("a", 50, 99.0, 428.0, 835.0, 970.0, 970.0, 970.0),
+        ("a", 75, 120.0, 428.0, 835.0, 970.0, 970.0, 970.0),
+        ("b", 7, lo, 0.8299690446040735, top1, top1, top1, top1),
+        ("b", 14, lo, mid, top2, top2, top2, top2),
+        ("b", 21, -3.480154653394952, mid, top2, top3, top3, top3),
+    ]
+
+
 def test_streaming_heavy_hitters_across_batches(spark, tmp_path):
     """MG state merges across micro-batches: exact under low cardinality,
     heavy item guaranteed present under counter overflow."""
