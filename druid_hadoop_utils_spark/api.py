@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
-from druid_hadoop_utils_spark.functions.filters import _is_array, filter_sql
+from druid_hadoop_utils_spark.functions.filters import (
+    _is_array,
+    filter_columns,
+    filter_sql,
+)
 from druid_hadoop_utils_spark.functions.sqltext import ident, lit, sql_over
 from druid_hadoop_utils_spark.plans.planner import load
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
@@ -454,18 +458,6 @@ def druid_query(
 
     # columns the scan must carry: every aggregated field, plus any
     # dimension referenced by a filtered-aggregator's inner filter
-    def filter_dims(node: dict | None) -> list[str]:
-        if not node:
-            return []
-        out = []
-        if node.get("dimension"):
-            out.append(node["dimension"])
-        for child in node.get("fields", []) or []:
-            out += filter_dims(child)
-        if node.get("field"):
-            out += filter_dims(node["field"])
-        return out
-
     needed: list[dict] = []
     seen = set(dims) | {"__time"}
 
@@ -480,7 +472,7 @@ def druid_query(
         for fname2 in inner.get("fieldNames") or inner.get("fields") or []:
             need(fname2, "string")
         if a.get("type") == "filtered":
-            for d in filter_dims(a.get("filter")):
+            for d in filter_columns(a.get("filter")):
                 need(d, "string")
     spec = LoadSpec.from_json({
         "granularity": q.get("granularity", "ALL" if qtype == "timeseries" else "NONE"),

@@ -287,21 +287,6 @@ def finalized_sql(a: dict) -> str | None:
     return f"coalesce(CAST({fn}({name}) AS DOUBLE), 0.0D) AS {name}"
 
 
-def finalize_sketch_columns(
-    df: DataFrame,
-    aggregations: list[dict],
-    names: set[str],
-) -> DataFrame:
-    """Replace each named sketch state column of ``df`` with its estimate
-    (``finalized_sql``) — after post-aggregators have read the raw state."""
-    out = {}
-    for a in aggregations:
-        text = finalized_sql(a) if agg_out_name(a) in names else None
-        if text:
-            out[agg_out_name(a)] = F.expr(text)
-    return df.withColumns(out) if out else df
-
-
 def sketch_post_agg_refs(post_aggregations: list[dict] | None) -> set[str]:
     """Aggregator names that post-aggregators consume AS SKETCHES —
     Druid's rule: those aggregators must not finalize before post-agg
@@ -447,13 +432,30 @@ def group_aggregate_sql(
         text += f" GROUP BY {', '.join(key_cols)}"
     if not post_aggregations:
         return text
-    cols = key_cols + [
-        (finalize and agg_out_name(a) in skip_final and finalized_sql(a))
+    return post_agg_select_sql(f"({text})", keys, aggregations,
+                               post_aggregations,
+                               skip_final if finalize else set())
+
+
+def post_agg_select_sql(
+    source: str,
+    keys: list[str],
+    aggregations: list[dict],
+    post_aggregations: list[dict],
+    refinalize: set[str],
+) -> str:
+    """The SELECT over an aggregated ``source`` that evaluates the
+    post-aggregators: the group keys, each aggregator column — its sketch
+    state re-finalized to the estimate (``finalized_sql``, the broker
+    step) when its name is in ``refinalize`` — then the post-aggregators,
+    which read the columns as ``source`` holds them."""
+    cols = [ident(k) for k in keys] + [
+        (agg_out_name(a) in refinalize and finalized_sql(a))
         or ident(agg_out_name(a))
         for a in aggregations
     ]
     posts = [post_agg_sql(p) for p in post_aggregations]
-    return f"SELECT {', '.join(cols + posts)} FROM ({text})"
+    return f"SELECT {', '.join(cols + posts)} FROM {source}"
 
 
 def group_aggregate(

@@ -466,3 +466,22 @@ def filter_to_column(spec: dict | None, schema: StructType | DataFrame | None = 
     if isinstance(schema, DataFrame):
         schema = schema.schema
     return F.expr(filter_sql(spec, schema))
+
+
+def filter_columns(spec: dict | None) -> list[str]:
+    """The column names a DimFilter tree reads, in first-reference order,
+    each once: the ``dimension`` of every node under ``fields`` /
+    ``field``."""
+    out: list[str] = []
+
+    def walk(node) -> None:
+        if not isinstance(node, dict):
+            return
+        if node.get("dimension") and node["dimension"] not in out:
+            out.append(node["dimension"])
+        for child in node.get("fields") or []:
+            walk(child)
+        walk(node.get("field"))
+
+    walk(spec)
+    return out

@@ -31,13 +31,20 @@ _TRUNC_UNITS = {
     "YEAR": "year",
 }
 
-# fixed-duration names → seconds
-_DURATION_SECONDS = {
+#: fixed-width names → bucket width in seconds. UTC is pinned engine-wide
+#: (session.py), so DAY is a fixed 86400 s and every bucket here is
+#: epoch-aligned: divisibility is exactly bucket nesting. WEEK is left
+#: out on purpose — ISO weeks nest into nothing coarser.
+BUCKET_SECONDS = {
+    "SECOND": 1,
+    "MINUTE": 60,
     "FIVE_MINUTE": 300,
     "TEN_MINUTE": 600,
     "FIFTEEN_MINUTE": 900,
     "THIRTY_MINUTE": 1800,
+    "HOUR": 3600,
     "SIX_HOUR": 21600,
+    "DAY": 86400,
 }
 
 _PERIOD_RE = re.compile(
@@ -104,8 +111,8 @@ def granularity_sql(granularity: str | dict, col: str) -> str:
         return "CAST('1970-01-01 00:00:00' AS TIMESTAMP)"
     if g in _TRUNC_UNITS:
         return f"date_trunc('{_TRUNC_UNITS[g]}', {col})"
-    if g in _DURATION_SECONDS:
-        return _duration_trunc(col, _DURATION_SECONDS[g])
+    if g in BUCKET_SECONDS:
+        return _duration_trunc(col, BUCKET_SECONDS[g])
     raise ValueError(f"unknown granularity: {granularity!r}")
 
 
@@ -179,10 +186,10 @@ def bucket_step_sql(granularity: str | dict) -> str:
             return f"INTERVAL {_period_seconds(m, granularity['period'])} SECOND"
         raise ValueError(f"unknown granularity spec: {granularity!r}")
     g = granularity.upper()
-    fixed = {"SECOND": 1, "MINUTE": 60, "HOUR": 3600, "DAY": 86400,
-             "WEEK": 604800, **_DURATION_SECONDS}
-    if g in fixed:
-        return f"INTERVAL {fixed[g]} SECOND"
+    if g in BUCKET_SECONDS:
+        return f"INTERVAL {BUCKET_SECONDS[g]} SECOND"
+    if g == "WEEK":
+        return "INTERVAL 604800 SECOND"
     if g == "MONTH":
         return "INTERVAL 1 MONTH"
     if g == "QUARTER":

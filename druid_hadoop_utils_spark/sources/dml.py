@@ -207,15 +207,17 @@ def _affected_intervals(df: DataFrame, time_column: str,
                         bucket: str) -> list[Interval]:
     """Distinct time-bucket intervals present in ``df`` — the bounded
     driver-side planning input (one distinct job over the bucket key)."""
-    from datetime import timezone
+    from datetime import datetime, timezone
 
-    from druid_hadoop_utils_spark.functions.granularity import (
-        granularity_expr,
-    )
+    from druid_hadoop_utils_spark.functions.granularity import granularity_sql
+    from druid_hadoop_utils_spark.functions.sqltext import ident
     from druid_hadoop_utils_spark.sources.ingest import _bucket_end
 
+    # bucket starts as epoch seconds: a collected timestamp would come
+    # back in the driver's local zone, not the session's UTC
+    bucket_start = granularity_sql(bucket, ident(time_column))
     rows = (
-        df.select(granularity_expr(bucket, time_column).alias("__bucket"))
+        df.selectExpr(f"unix_seconds({bucket_start}) AS __bucket")
         .distinct()
         .collect()
     )
@@ -226,7 +228,7 @@ def _affected_intervals(df: DataFrame, time_column: str,
         )
     out = []
     for r in rows:
-        start = r["__bucket"].replace(tzinfo=timezone.utc)
+        start = datetime.fromtimestamp(r["__bucket"], tz=timezone.utc)
         out.append(Interval(start, _bucket_end(start, bucket)))
     return sorted(out, key=lambda iv: iv.start)
 

@@ -631,7 +631,7 @@ def import_druid_segment(
     fields = [StructField("__time", TimestampType())]
     data: dict[str, list] = {
         "__time": [
-            datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).replace(tzinfo=None)
+            datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
             for ms in cols["__time"].values
         ]
     }

@@ -412,14 +412,8 @@ def _df_to_columns(rows, schema, complex_types: dict[str, str],
         dt = field.dataType.simpleString()
         vals = [r[name] for r in rows]
         if name == "__time":
-            # integer epoch math: float .timestamp()*1000 rounds some
-            # sub-second timestamps 1 ms low (e.g. ….489 → ….488999…)
-            import calendar
-
-            cols[name] = {"kind": "LONG", "values": [
-                calendar.timegm(v.timetuple()) * 1000
-                + v.microsecond // 1000
-                for v in vals]}
+            # epoch millis, computed in the JVM (export_druid_segments)
+            cols[name] = {"kind": "LONG", "values": vals}
             continue
         if dt == "array<string>":
             multi = any(v is not None and len(v) > 1 for v in vals)
@@ -484,6 +478,8 @@ def export_druid_segments(
     collect, never an OOM: re-publish it with more ``shards_per_bucket``
     or a finer bucket (``compact_segments``) and re-export.
     """
+    from pyspark.sql import functions as F
+
     from druid_hadoop_utils_spark.intervals import Interval
     from druid_hadoop_utils_spark.sources.segments import (
         _safe,
@@ -512,7 +508,10 @@ def export_druid_segments(
                 f"segment {m.identifier} is only partially visible — "
                 "compact the interval, then export"
             )
-        df = spark.read.parquet(m.path).orderBy("__time")
+        # __time leaves the JVM as epoch millis: collected timestamps
+        # would come back in the driver's local zone, not UTC
+        df = spark.read.parquet(m.path).orderBy("__time").withColumn(
+            "__time", F.expr("unix_millis(CAST(`__time` AS TIMESTAMP))"))
         # metadata-cheap parquet row count, BEFORE the collect: refuse an
         # oversized segment loudly instead of OOMing the driver
         n = spark.read.parquet(m.path).count()

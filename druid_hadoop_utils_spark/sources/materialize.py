@@ -28,6 +28,14 @@ Why this is the shape you want at 100 TB:
   its interval) makes its whole-segment state unusable — the query
   refuses loudly (compact the table; states for the compacted segments
   then materialize cleanly) rather than over-counting.
+- **One read path**: `query_materialized` and the transparent groupBy
+  rewrite `api.druid_query` calls (`rewrite_groupby_from_states`)
+  resolve the visible state files through ONE MVCC resolver
+  (`_resolve_state_paths`) and compile the merge as ONE Spark SQL
+  statement over them (`sqltext.sql_over` + `group_aggregate_sql`, the
+  compiler the raw-scan groupBy uses) — a constant number of py4j round
+  trips however many aggregators, filters or post-aggregators the query
+  carries.
 
 Granularity caveat: states are bucketed by `granularity` at materialize
 time; a query interval is applied to the BUCKET timestamps, so it must
@@ -45,6 +53,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from druid_hadoop_utils_spark.functions.granularity import BUCKET_SECONDS
+from druid_hadoop_utils_spark.functions.sqltext import ident, sql_over
 from druid_hadoop_utils_spark.intervals import Interval
 
 #: aggregator types whose partial states re-aggregate associatively with
@@ -59,6 +69,11 @@ MERGEABLE_TYPES = frozenset({
     "doubleMin", "doubleMax", "hyperUnique", "thetaSketch",
     "approxHistogram", "approxHistogramFold",
 })
+
+
+#: the whole timeline — the window of the full lazy passes and of a
+#: state read without an interval
+_ETERNITY = Interval.parse("0001-01-01T00:00:00/9999-12-31T00:00:00")
 
 
 def _mat_dir(table_root: str, data_source: str, name: str) -> str:
@@ -129,13 +144,6 @@ def materialize_aggs(
     segments are skipped — the incremental-maintenance contract). The
     spec is persisted beside the states; re-calling with a DIFFERENT
     spec under the same name is refused (pick a new name)."""
-    from druid_hadoop_utils_spark.functions.aggregators import group_aggregate
-    from druid_hadoop_utils_spark.functions.granularity import granularity_expr
-    from druid_hadoop_utils_spark.sources.segments import (
-        list_manifests,
-        resolve_visible_windows,
-    )
-
     _validate_aggs(aggregations)
     spec = {
         "dimensions": list(dimensions),
@@ -237,6 +245,19 @@ def _compact_postings_entry(token: str) -> str:
     return f"_compact.{token}.parquet"
 
 
+def _union_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """One scan per segment's postings dir, unioned by name. Each dir is
+    its own ``__cell=N``-partitioned tree, and Spark's partition
+    discovery cannot merge several partitioned roots in one read
+    (CONFLICTING_DIRECTORY_STRUCTURES); each scan still partition-prunes
+    on a probed-cell IN filter. ``compact_postings`` collapses this to
+    ONE scan for many-segment tables."""
+    from functools import reduce
+
+    return reduce(DataFrame.unionByName,
+                  (spark.read.parquet(p) for p in paths))
+
+
 def compact_postings(
     spark: SparkSession,
     table_root: str,
@@ -276,8 +297,8 @@ def compact_postings(
     # From one snapshot, a racing publish can only make the tree
     # stale-named; readers fall back to the per-segment union.
     manifests = list_manifests(table_root, data_source)
-    spec, paths, _iv = _resolve_state_paths(fs, table_root, data_source,
-                                            name, manifests=manifests)
+    spec, paths = _resolve_state_paths(fs, table_root, data_source, name,
+                                       manifests=manifests)
     if spec.get("kind") != "ivf_postings":
         raise ValueError(
             f"materialization {name!r} is kind="
@@ -294,10 +315,7 @@ def compact_postings(
     existing = resolve_parquet_dir(fs, target)
     if existing is not None:
         return target
-    union = None
-    for p in paths:
-        df = spark.read.parquet(p)
-        union = df if union is None else union.unionByName(df)
+    union = _union_postings(spark, paths)
     publish_parquet_dir(
         fs,
         lambda url: (union.repartition("__cell")
@@ -330,8 +348,7 @@ def read_postings(
     from druid_hadoop_utils_spark.sources.fs import get_fs
 
     fs = get_fs(table_root)
-    spec, paths, _iv = _resolve_state_paths(fs, table_root, data_source,
-                                            name)
+    spec, paths = _resolve_state_paths(fs, table_root, data_source, name)
     if spec.get("kind") != "ivf_postings":
         raise ValueError(
             f"materialization {name!r} is kind="
@@ -358,18 +375,7 @@ def read_postings(
         fs, fs.join(mdir, _compact_postings_entry(token)))
     if compact is not None:
         return spark.read.parquet(fs.spark_url(compact))
-
-    # each segment's postings dir is its own __cell=N-partitioned tree;
-    # Spark's partition discovery cannot merge multiple partitioned
-    # roots in one read (CONFLICTING_DIRECTORY_STRUCTURES), so this is
-    # one scan per segment, unioned — each scan still partition-prunes
-    # on the probed-cell IN filter. compact_postings collapses this to
-    # ONE scan for many-segment tables.
-    out = None
-    for p in paths:
-        df = spark.read.parquet(p)
-        out = df if out is None else out.unionByName(df)
-    return out
+    return _union_postings(spark, paths)
 
 
 def _materialize_generic(
@@ -420,8 +426,7 @@ def _materialize_generic(
     pdir = _pending_dir(mdir)
     pre_markers = [m for m in fs.ls(pdir) if m.endswith(".json")]
     manifests = list_manifests(table_root, data_source)
-    everything = Interval.parse("0001-01-01T00:00:00/9999-12-31T00:00:00")
-    visible = resolve_visible_windows(manifests, everything)
+    visible = resolve_visible_windows(manifests, _ETERNITY)
     targets = [
         w for w in visible
         if not w.manifest.tombstone
@@ -442,6 +447,7 @@ def _build_states(spark, fs, mdir: str, spec: dict, targets, visible):
     pre-aggregation states) or ``signatures`` (per-doc minhash
     signatures for incremental near-dedup)."""
     from druid_hadoop_utils_spark.functions.aggregators import group_aggregate
+    from druid_hadoop_utils_spark.functions.filters import filter_columns
     from druid_hadoop_utils_spark.functions.granularity import granularity_expr
 
     from druid_hadoop_utils_spark.sources.fs import publish_parquet_dir
@@ -529,7 +535,7 @@ def _build_states(spark, fs, mdir: str, spec: dict, targets, visible):
                 inner = a.get("aggregator") or {}
                 if inner.get("fieldName"):
                     refs.add(inner["fieldName"])
-                refs |= _filter_refs(a.get("filter"))
+                refs |= set(filter_columns(a.get("filter")))
         return refs
 
     needed = set(dimensions) | _agg_field_refs(aggregations)
@@ -615,17 +621,13 @@ _ROLLUP_NAMES_TTL_S = 60.0
 _ROLLUP_NAMES_CACHE: dict = {}
 
 
-def _rollup_names(fs, table_root: str, data_source: str) -> list[str]:
-    import time as _time
-
+def _rollup_names(table_root: str, data_source: str) -> list[str]:
     key = (table_root, data_source)
-    now = _time.time()
+    now = time.time()
     hit = _ROLLUP_NAMES_CACHE.get(key)
     if hit is not None and hit[0] > now:
         return hit[1]
-    base = fs.join(table_root, data_source, "_materialized")
-    names = [n for n in fs.ls(base)
-             if fs.exists(fs.join(base, n, "spec.json"))]
+    names = list(list_materializations(table_root, data_source))
     _ROLLUP_NAMES_CACHE[key] = (now + _ROLLUP_NAMES_TTL_S, names)
     return names
 
@@ -645,11 +647,11 @@ def register_pending_states(
     fs = get_fs(table_root)
     base = fs.join(table_root, data_source, "_materialized")
     written: list[str] = []
-    for name in _rollup_names(fs, table_root, data_source):
+    for name in _rollup_names(table_root, data_source):
         mdir = fs.join(base, name)
-        for ident in identifiers:
-            p = fs.join(_pending_dir(mdir), _safe(ident) + ".json")
-            fs.put_text(p, json.dumps({"identifier": ident}))
+        for seg_id in identifiers:
+            p = fs.join(_pending_dir(mdir), _safe(seg_id) + ".json")
+            fs.put_text(p, json.dumps({"identifier": seg_id}))
             written.append(p)
     return written
 
@@ -681,10 +683,12 @@ def catch_up_materialized(
 
     fs = get_fs(table_root)
     base = fs.join(table_root, data_source, "_materialized")
-    names = [name] if name is not None else [
-        n for n in fs.ls(base)
-        if fs.exists(fs.join(base, n, "spec.json"))
-    ]
+    specs = list_materializations(table_root, data_source)
+    if name is not None:
+        if name not in specs:
+            raise FileNotFoundError(
+                f"no materialized rollup {name!r} for {data_source}")
+        specs = {name: specs[name]}
     # ORDER MATTERS: snapshot every rollup's pending markers BEFORE the
     # timeline listing. Markers are written AFTER their registration,
     # so any marker visible now refers to a segment the later manifest
@@ -694,25 +698,19 @@ def catch_up_materialized(
     # state, permanently dropping that segment from the commit-driven
     # path (round-12 review catch).
     pending_by_name: dict[str, list[str]] = {}
-    for n in names:
+    for n in specs:
         pdir = _pending_dir(fs.join(base, n))
         pending_by_name[n] = [m for m in fs.ls(pdir)
                               if m.endswith(".json")]
     manifests = list_manifests(table_root, data_source)
-    everything = Interval.parse("0001-01-01T00:00:00/9999-12-31T00:00:00")
-    visible = resolve_visible_windows(manifests, everything)
+    visible = resolve_visible_windows(manifests, _ETERNITY)
     by_safe = {
         _safe(w.manifest.identifier): w
         for w in visible if not w.manifest.tombstone
     }
     out: dict[str, list[str]] = {}
-    for n in names:
+    for n, spec in specs.items():
         mdir = fs.join(base, n)
-        spec_path = fs.join(mdir, "spec.json")
-        if not fs.exists(spec_path):
-            raise FileNotFoundError(
-                f"no materialized rollup {n!r} for {data_source}")
-        spec = json.loads(fs.read_text(spec_path))
         pdir = _pending_dir(mdir)
         markers = pending_by_name[n]
         targets = []
@@ -739,18 +737,21 @@ def catch_up_materialized(
 
 def _resolve_state_paths(
     fs, table_root: str, data_source: str, name: str,
-    interval: str | Interval | None = None,
+    intervals: list[Interval] | None = None,
     manifests: list | None = None,
-) -> tuple[dict, list[str], Interval]:
-    """Spec, spark-readable state paths, and the resolved interval for
-    the VISIBLE segments of a
-    materialization — the shared MVCC resolution behind
-    ``query_materialized`` and ``read_signatures``: partial visibility
-    refuses (a whole-segment file would leak overshadowed rows), a
-    missing state refuses naming the catch-up. ``manifests`` lets a
-    caller that already listed the timeline reuse that ONE snapshot
-    (``compact_postings`` derives the tree name and contents from the
-    same listing, closing the name/content race)."""
+    spec: dict | None = None,
+) -> tuple[dict, list[str]]:
+    """Spec and spark-readable state paths for the VISIBLE segments of a
+    materialization in ``intervals`` (default: the whole timeline) — the
+    one MVCC resolution behind ``query_materialized``, the groupBy
+    rewrite and the signature/postings readers. Partial visibility in any
+    interval refuses (a whole-segment file would leak overshadowed rows);
+    a missing state refuses naming the catch-up; a segment visible in
+    several intervals is read once. ``spec`` / ``manifests`` let a caller
+    that already read the spec or listed the timeline reuse them: the
+    rewrite lists the timeline once for all its candidate rollups, and
+    ``compact_postings`` derives the tree name and contents from the same
+    listing, closing the name/content race."""
     from druid_hadoop_utils_spark.sources.fs import resolve_parquet_dir
     from druid_hadoop_utils_spark.sources.segments import (
         list_manifests,
@@ -758,43 +759,49 @@ def _resolve_state_paths(
     )
 
     mdir = _mat_dir(table_root, data_source, name)
-    spec_path = fs.join(mdir, "spec.json")
-    if not fs.exists(spec_path):
-        raise FileNotFoundError(
-            f"no materialization {name!r} for {data_source} — run "
-            "materialize_aggs / materialize_signatures first"
-        )
-    spec = json.loads(fs.read_text(spec_path))
-    iv = Interval.parse(interval) if interval is not None else Interval.parse(
-        "0001-01-01T00:00:00/9999-12-31T00:00:00")
+    if spec is None:
+        spec_path = fs.join(mdir, "spec.json")
+        if not fs.exists(spec_path):
+            raise FileNotFoundError(
+                f"no materialization {name!r} for {data_source} — run "
+                "materialize_aggs / materialize_signatures first"
+            )
+        spec = json.loads(fs.read_text(spec_path))
+    ivs = intervals or [_ETERNITY]
     if manifests is None:
         manifests = list_manifests(table_root, data_source)
-    visible = resolve_visible_windows(manifests, iv)
     paths: list[str] = []
-    for w in visible:
-        if w.manifest.tombstone:
-            continue
-        if not w.is_fully_visible(iv):
-            raise ValueError(
-                f"segment {w.manifest.identifier} is only partially "
-                "visible (overshadowed in part of its interval) — its "
-                "whole-segment state would leak overshadowed rows; "
-                "compact the table, re-materialize, then query again"
-            )
-        p = resolve_parquet_dir(fs, _state_path(mdir, w.manifest.identifier))
-        if p is None:
-            raise FileNotFoundError(
-                f"segment {w.manifest.identifier} has no state for "
-                f"{name!r} — run materialize_aggs / "
-                "materialize_signatures (or catch_up_materialized) to "
-                "catch up; only the missing segments compute"
-            )
-        paths.append(fs.spark_url(p))
+    seen: set[str] = set()
+    for iv in ivs:
+        for w in resolve_visible_windows(manifests, iv):
+            seg_id = w.manifest.identifier
+            if w.manifest.tombstone:
+                continue
+            if not w.is_fully_visible(iv):
+                raise ValueError(
+                    f"segment {seg_id} is only partially visible "
+                    "(overshadowed in part of its interval) — its "
+                    "whole-segment state would leak overshadowed rows; "
+                    "compact the table, re-materialize, then query again"
+                )
+            if seg_id in seen:
+                continue
+            seen.add(seg_id)
+            p = resolve_parquet_dir(fs, _state_path(mdir, seg_id))
+            if p is None:
+                raise FileNotFoundError(
+                    f"segment {seg_id} has no state for "
+                    f"{name!r} — run materialize_aggs / "
+                    "materialize_signatures (or catch_up_materialized) to "
+                    "catch up; only the missing segments compute"
+                )
+            paths.append(fs.spark_url(p))
     if not paths:
         raise FileNotFoundError(
-            f"no visible segments for {data_source} in {iv.iso()}"
+            f"no visible segments for {data_source} in "
+            f"{', '.join(iv.iso() for iv in ivs)}"
         )
-    return spec, paths, iv
+    return spec, paths
 
 
 def read_signatures(
@@ -812,8 +819,7 @@ def read_signatures(
     from druid_hadoop_utils_spark.sources.fs import get_fs
 
     fs = get_fs(table_root)
-    spec, paths, _iv = _resolve_state_paths(fs, table_root, data_source,
-                                            name)
+    spec, paths = _resolve_state_paths(fs, table_root, data_source, name)
     if spec.get("kind") != "signatures":
         raise ValueError(
             f"materialization {name!r} is kind="
@@ -833,32 +839,30 @@ def query_materialized(
 ) -> DataFrame:
     """Answer the rollup from per-segment states only — raw rows are
     never rescanned. One state-merge shuffle on (bucket, dims); state
-    volume is (buckets × dims cardinality) per segment, not rows."""
-    from druid_hadoop_utils_spark.functions.aggregators import group_aggregate
-
+    volume is (buckets × dims cardinality) per segment, not rows. The
+    merge compiles as one SQL statement over the state files."""
+    from druid_hadoop_utils_spark.functions.aggregators import (
+        group_aggregate_sql,
+    )
+    from druid_hadoop_utils_spark.plans.planner import interval_sql
     from druid_hadoop_utils_spark.sources.fs import get_fs
 
     fs = get_fs(table_root)
-    spec, paths, iv = _resolve_state_paths(fs, table_root, data_source,
-                                           name, interval)
+    ivs = [Interval.parse(interval) if interval is not None else _ETERNITY]
+    spec, paths = _resolve_state_paths(fs, table_root, data_source, name,
+                                       ivs)
     if spec.get("kind", "rollup") != "rollup":
         raise ValueError(
             f"materialization {name!r} is kind={spec.get('kind')!r}, not "
             "a rollup — read it with its own reader (read_signatures)"
         )
     states = spark.read.parquet(*paths)
-    states = states.where(
-        (F.col("__time") >= F.lit(iv.start.replace(tzinfo=None)))
-        & (F.col("__time") < F.lit(iv.end.replace(tzinfo=None)))
-    )
-    return group_aggregate(
-        states,
-        spec["dimensions"],
-        _merge_aggregations(spec["aggregations"]),
-        post_aggregations=post_aggregations,
-        finalize=True,
-        time_column="__time",
-    )
+    schema = states.schema
+    keys = ["__time", *spec["dimensions"]]
+    merged = _merge_aggregations(spec["aggregations"])
+    return sql_over(states, lambda src: group_aggregate_sql(
+        f"(SELECT * FROM {src} WHERE {interval_sql(ivs)})", schema, keys,
+        merged, post_aggregations))
 
 
 def vacuum_materialized(
@@ -991,15 +995,6 @@ def vacuum_materialized(
 
 # ------------------------------------------------ transparent query rewrite
 
-#: epoch-anchored bucket widths in seconds. UTC is pinned engine-wide
-#: (session.py), so DAY is a fixed 86400 s and every width below it is
-#: epoch-aligned — divisibility is exactly bucket nesting.
-_GRAN_SECONDS = {
-    "SECOND": 1, "MINUTE": 60, "FIVE_MINUTE": 300, "TEN_MINUTE": 600,
-    "FIFTEEN_MINUTE": 900, "THIRTY_MINUTE": 1800, "HOUR": 3600,
-    "SIX_HOUR": 21600, "DAY": 86400,
-}
-
 _CALENDAR = {"WEEK", "MONTH", "QUARTER", "YEAR"}
 
 
@@ -1024,11 +1019,11 @@ def granularity_nests(fine, coarse) -> bool:
         return False
     if f == "NONE":
         return True
-    if f in _GRAN_SECONDS and c in _GRAN_SECONDS:
-        return _GRAN_SECONDS[c] % _GRAN_SECONDS[f] == 0
+    if f in BUCKET_SECONDS and c in BUCKET_SECONDS:
+        return BUCKET_SECONDS[c] % BUCKET_SECONDS[f] == 0
     if c in _CALENDAR:
-        if f in _GRAN_SECONDS:
-            return 86400 % _GRAN_SECONDS[f] == 0
+        if f in BUCKET_SECONDS:
+            return 86400 % BUCKET_SECONDS[f] == 0
         if f == "MONTH":
             return c in {"QUARTER", "YEAR"}
         if f == "QUARTER":
@@ -1048,9 +1043,9 @@ def _bucket_aligned(dt, granularity) -> bool:
         return True
     if dt.microsecond:
         return False
-    if g in _GRAN_SECONDS:
+    if g in BUCKET_SECONDS:
         aware = dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-        return int(aware.timestamp()) % _GRAN_SECONDS[g] == 0
+        return int(aware.timestamp()) % BUCKET_SECONDS[g] == 0
     midnight = dt.hour == 0 and dt.minute == 0 and dt.second == 0
     if g == "WEEK":
         return midnight and dt.isoweekday() == 1
@@ -1074,20 +1069,6 @@ def list_materializations(table_root: str, data_source: str) -> dict[str, dict]:
         spec_path = fs.join(base, name, "spec.json")
         if fs.exists(spec_path):
             out[name] = json.loads(fs.read_text(spec_path))
-    return out
-
-
-def _filter_refs(node) -> set:
-    """Column names a DimFilter tree reads."""
-    if not node:
-        return set()
-    out = set()
-    if node.get("dimension"):
-        out.add(node["dimension"])
-    for child in node.get("fields") or []:
-        out |= _filter_refs(child)
-    if isinstance(node.get("field"), dict):
-        out |= _filter_refs(node["field"])
     return out
 
 
@@ -1138,22 +1119,35 @@ def rewrite_groupby_from_states(
       happens on raw rows in the scan path; refusing keeps the two paths
       bit-identical rather than arguing about explode-after-merge);
     - every visible segment in the intervals is FULLY visible and has a
-      state file (same MVCC contract as ``query_materialized``).
+      state file — the MVCC resolver ``query_materialized`` uses
+      (``_resolve_state_paths``), fed one timeline listing shared by
+      every candidate rollup.
 
-    Plan shape on success: read small state parquets → one hash aggregate
-    on (coarse bucket, query dims). Raw rows are never scanned — at
-    100 TB the query touches kilobytes per segment instead of the table.
+    Compile on success: ``spark.read.parquet`` over the state files plus
+    ONE ``spark.sql`` statement (interval + filter + re-bucketing, the
+    state merge through ``group_aggregate_sql``, then the post-aggs and
+    broker finalize through ``post_agg_select_sql`` — the raw groupBy's
+    own compilers). Plan shape: read small state parquets → one hash
+    aggregate on (coarse bucket, query dims). Raw rows are never scanned
+    — at 100 TB the query touches kilobytes per segment instead of the
+    table.
     """
     from druid_hadoop_utils_spark.functions.aggregators import (
+        agg_inner,
         agg_out_name,
-        group_aggregate,
+        group_aggregate_sql,
+        post_agg_select_sql,
+        sketch_post_agg_refs,
     )
-    from druid_hadoop_utils_spark.functions.filters import filter_to_column
-    from druid_hadoop_utils_spark.functions.granularity import granularity_expr
-    from druid_hadoop_utils_spark.sources.segments import (
-        list_manifests,
-        resolve_visible_windows,
+    from druid_hadoop_utils_spark.functions.filters import (
+        _is_array,
+        filter_columns,
+        filter_sql,
     )
+    from druid_hadoop_utils_spark.functions.granularity import granularity_sql
+    from druid_hadoop_utils_spark.plans.planner import interval_sql
+    from druid_hadoop_utils_spark.sources.fs import get_fs
+    from druid_hadoop_utils_spark.sources.segments import list_manifests
 
     def miss(reason: str):
         if require:
@@ -1163,19 +1157,15 @@ def rewrite_groupby_from_states(
 
     if not isinstance(data_source, str):
         return miss("dataSource is not a plain table name")
-    from druid_hadoop_utils_spark.sources.fs import (
-        get_fs,
-        resolve_parquet_dir,
-    )
-
-    fs = get_fs(table_root)
     specs = list_materializations(table_root, data_source)
     if not specs:
         return miss("table has no materialized rollups")
+    fs = get_fs(table_root)
     ivs = intervals if isinstance(intervals, (list, tuple)) else [intervals]
     ivs = [Interval.parse(iv) for iv in ivs]
     q_dims = list(dimensions)
-    refs = _filter_refs(dim_filter)
+    refs = set(filter_columns(dim_filter))
+    manifests = None  # the timeline, listed once for every candidate
     reasons = []
     for name, spec in specs.items():
         if spec.get("kind", "rollup") != "rollup":
@@ -1222,101 +1212,62 @@ def rewrite_groupby_from_states(
             reasons.append(f"{name}: interval endpoints {misaligned} not "
                            f"aligned to {s_gran} buckets")
             continue
-
-        # ---- MVCC resolution: same contract as query_materialized
-        mdir = _mat_dir(table_root, data_source, name)
-        manifests = list_manifests(table_root, data_source)
-        paths: list[str] = []
-        sound = True
-        seen_idents = set()
-        for iv in ivs:
-            for w in resolve_visible_windows(manifests, iv):
-                if w.manifest.tombstone:
-                    continue
-                if not w.is_fully_visible(iv):
-                    reasons.append(f"{name}: segment "
-                                   f"{w.manifest.identifier} only "
-                                   "partially visible — compact first")
-                    sound = False
-                    break
-                p = resolve_parquet_dir(
-                    fs, _state_path(mdir, w.manifest.identifier))
-                if p is None:
-                    reasons.append(f"{name}: segment "
-                                   f"{w.manifest.identifier} has no state "
-                                   "— run materialize_aggs to catch up")
-                    sound = False
-                    break
-                if w.manifest.identifier not in seen_idents:
-                    seen_idents.add(w.manifest.identifier)
-                    paths.append(fs.spark_url(p))
-            if not sound:
-                break
-        if not sound:
-            continue
-        if not paths:
-            reasons.append(f"{name}: no visible segments in the intervals")
+        if manifests is None:
+            manifests = list_manifests(table_root, data_source)
+        try:
+            _spec, paths = _resolve_state_paths(
+                fs, table_root, data_source, name, ivs,
+                manifests=manifests, spec=spec)
+        except (ValueError, FileNotFoundError) as e:
+            reasons.append(f"{name}: {e}")
             continue
 
         states = spark.read.parquet(*paths)
-        dtypes = dict(states.dtypes)
-        arrayish = [d for d in (set(q_dims) | refs)
-                    if dtypes.get(d, "").startswith("array<")]
+        schema = states.schema
+        arrayish = sorted(d for d in set(q_dims) | refs if _is_array(schema, d))
         if arrayish:
-            reasons.append(f"{name}: multi-value dims {sorted(arrayish)} "
+            reasons.append(f"{name}: multi-value dims {arrayish} "
                            "take the raw-scan explode path")
             continue
 
-        pred = None
-        for iv in ivs:
-            p = (
-                (F.col("__time") >= F.lit(iv.start.replace(tzinfo=None)))
-                & (F.col("__time") < F.lit(iv.end.replace(tzinfo=None)))
-            )
-            pred = p if pred is None else (pred | p)
-        states = states.where(pred)
-        if dim_filter is not None:
-            states = states.where(filter_to_column(dim_filter, states.schema))
-        states = states.withColumn(
-            "__time", granularity_expr(granularity, "__time")
-        )
         merged = []
         for qa, sa in matched:
             m = _merge_aggregations([sa])[0]
             m["name"] = agg_out_name(qa)
             merged.append(m)
-        from druid_hadoop_utils_spark.functions.aggregators import (
-            finalize_sketch_columns,
-            post_agg_expr,
-            sketch_post_agg_refs,
-        )
-
-        refs = sketch_post_agg_refs(post_aggregations)
-        out = group_aggregate(
-            states, q_dims, merged, finalize=True, time_column="__time",
-            no_finalize=refs,
-        )
+        keys = ["__time", *q_dims]
+        where = interval_sql(ivs)
+        if dim_filter is not None:
+            where += f" AND ({filter_sql(dim_filter, schema)})"
+        bucket = granularity_sql(granularity, ident("__time"))
         # schema parity with the raw-scan path: count re-merges as a SUM
         # of stored counts (nullable), but raw count(*) is non-nullable —
         # coalesce restores the non-null schema bit (a group always has
         # ≥1 state row, so the value itself can never actually be null).
         # This runs BEFORE post-aggregations so derived columns computed
         # from counts inherit the same nullability as on the raw path.
-        count_names = [
-            agg_out_name(qa) for qa, _ in matched
-            if qa.get("type") == "count"
-            or (qa.get("type") == "filtered"
-                and (qa.get("aggregator") or {}).get("type") == "count")
+        counts = {agg_out_name(qa) for qa, _ in matched
+                  if agg_inner(qa).get("type") == "count"}
+        counted = [ident(k) for k in keys] + [
+            f"coalesce({ident(n)}, CAST(0 AS BIGINT)) AS {ident(n)}"
+            if n in counts else ident(n)
+            for n in (m["name"] for m in merged)
         ]
-        for n in count_names:
-            out = out.withColumn(n, F.coalesce(F.col(n), F.lit(0).cast("long")))
-        if post_aggregations:
-            out = out.select(
-                "*", *[post_agg_expr(p) for p in post_aggregations]
-            )
-        # the broker step, mirroring the raw path (api.py): sketch
-        # columns the post-aggs consumed as raw state re-finalize to
-        # their double estimates in the response
-        out = finalize_sketch_columns(out, merged, refs)
-        return out
+        # sketch columns the post-aggs read as raw state stay unfinalized
+        # through the merge, then re-finalize to their estimates in the
+        # response (the broker step, as on the raw path)
+        sketch_refs = sketch_post_agg_refs(post_aggregations)
+
+        def build(src: str) -> str:
+            rows = (f"(SELECT {bucket} AS `__time`, * EXCEPT (`__time`) "
+                    f"FROM {src} WHERE {where})")
+            text = (f"SELECT {', '.join(counted)} FROM ("
+                    + group_aggregate_sql(rows, schema, keys, merged,
+                                          no_finalize=sketch_refs) + ")")
+            if not post_aggregations:
+                return text
+            return post_agg_select_sql(f"({text})", keys, merged,
+                                       post_aggregations, sketch_refs)
+
+        return sql_over(states, build)
     return miss("; ".join(reasons) if reasons else "no candidate specs")

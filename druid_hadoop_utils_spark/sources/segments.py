@@ -349,12 +349,9 @@ def write_segment(
     """
     iv = Interval.parse(interval)
     if enforce_interval and "__time" in df.columns:
-        from pyspark.sql import functions as F
+        from druid_hadoop_utils_spark.plans.planner import interval_sql
 
-        df = df.where(
-            (F.col("__time") >= F.lit(iv.start.replace(tzinfo=None)))
-            & (F.col("__time") < F.lit(iv.end.replace(tzinfo=None)))
-        )
+        df = df.where(interval_sql([iv]))
     seg_dir = segment_dir(table_root, data_source, iv, version, shard_num)
     writer = df.write.mode("overwrite")
     if partition_by_day:

@@ -16,7 +16,7 @@ not a full pass.
 
 from __future__ import annotations
 
-from datetime import timedelta, timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,15 +77,15 @@ def segment_publishing_writer(
         if batch_df.isEmpty():
             return
         version = f"batch-{batch_id:012d}"
-        buckets = [r.b for r in batch_df.select(
-            F.date_trunc("hour", F.col("__time")).alias("b")).distinct().collect()]
-        for b in buckets:
-            start = b.replace(tzinfo=timezone.utc)
+        # bucket starts as epoch seconds: a collected timestamp would come
+        # back in the driver's local zone, not the session's UTC
+        starts = [r.b for r in batch_df.selectExpr(
+            "unix_seconds(date_trunc('hour', `__time`)) AS b").distinct().collect()]
+        for b in starts:
+            start = datetime.fromtimestamp(b, tz=timezone.utc)
             iv = Interval(start, start + timedelta(hours=1))
-            part = batch_df.where(
-                F.date_trunc("hour", F.col("__time")) == F.lit(b)
-            )
-            write_segment(part, table_root, data_source, iv, version,
+            # write_segment keeps exactly the rows inside ``iv``
+            write_segment(batch_df, table_root, data_source, iv, version,
                           stats_columns=stats_columns)
 
     writer = rolled.writeStream.outputMode("append").foreachBatch(publish)

@@ -6,7 +6,9 @@ managed-table load merges the segments' schemas from their manifests
 instead of reading parquet footers in a Spark job. These tests pin both
 for the query shapes of an interactive session: a zero-filled
 timeseries, a topN, a two-dimension groupBy and a 128-bucket
-approximate-histogram query.
+approximate-histogram query. A groupBy answered from materialized
+rollup states is held to the same round-trip bound, and its metadata
+cost to one timeline listing.
 """
 
 from __future__ import annotations
@@ -24,6 +26,10 @@ from pyspark.sql import Row
 
 from druid_hadoop_utils_spark.api import druid_query
 from druid_hadoop_utils_spark.sources.ingest import publish_segments
+from druid_hadoop_utils_spark.sources.materialize import (
+    catch_up_materialized,
+    materialize_aggs,
+)
 
 DS = "events"
 MAX_ROUND_TRIPS = 100
@@ -115,16 +121,52 @@ def _queries(day: str) -> dict[str, dict]:
     }
 
 
-@pytest.fixture(scope="module")
-def table(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("compile_cost") / "tbl")
+def _rows(n: int = 400) -> list[Row]:
     start = datetime(2023, 1, 1)
-    rows = [Row(__time=start + timedelta(minutes=37 * i),
+    return [Row(__time=start + timedelta(minutes=37 * i),
                 country=f"C{i % 5}",
                 event_type=("view", "click", "buy")[i % 3],
                 value=float(i % 400), bytes=i * 7)
-            for i in range(400)]
-    publish_segments(spark.createDataFrame(rows), root, DS, version="v1")
+            for i in range(n)]
+
+
+@pytest.fixture(scope="module")
+def table(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("compile_cost") / "tbl")
+    publish_segments(spark.createDataFrame(_rows()), root, DS, version="v1")
+    return root
+
+
+#: the materialized rollup the rewrite-hit shape is answered from
+ROLLUP_AGGS = [
+    {"type": "count", "name": "n"},
+    {"type": "doubleSum", "name": "value_sum", "fieldName": "value"},
+    {"type": "hyperUnique", "name": "uniq_bytes", "fieldName": "bytes"},
+]
+
+#: a filtered groupBy with an arithmetic and a sketch post-aggregator,
+#: which must be answered from the rollup's states
+REWRITE_HIT = {
+    "queryType": "groupBy", "dataSource": DS,
+    "intervals": ["2023-01-02T00:00:00/2023-01-04T00:00:00"],
+    "granularity": "DAY", "dimensions": ["country"],
+    "filter": {"type": "in", "dimension": "event_type",
+               "values": ["click", "buy"]},
+    "aggregations": ROLLUP_AGGS,
+    "postAggregations": [
+        _ratio("value_per_n", "value_sum", "n"),
+        {"type": "hyperUniqueCardinality", "name": "uniq",
+         "fieldName": "uniq_bytes"}],
+    "context": {"useMaterialized": "require"},
+}
+
+
+@pytest.fixture(scope="module")
+def rollup_table(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("compile_cost") / "rollup")
+    publish_segments(spark.createDataFrame(_rows()), root, DS, version="v1")
+    materialize_aggs(spark, root, DS, "hourly", ["country", "event_type"],
+                     ROLLUP_AGGS, granularity="HOUR")
     return root
 
 
@@ -146,6 +188,56 @@ def test_compile_makes_few_round_trips_and_no_spark_job(spark, table, shape):
         sc.setLocalProperty("spark.job.description", None)
     assert compile_jobs == [], f"{shape} compile launched Spark jobs {compile_jobs}"
     assert trips[0] < MAX_ROUND_TRIPS, f"{shape} compile made {trips[0]} round trips"
+
+
+def test_rewrite_hit_makes_few_round_trips(spark, rollup_table):
+    """A groupBy answered from materialized states compiles as one SQL
+    statement over the state files. (Reading the state files infers
+    their schema in one Spark job, so only round trips are bounded.)"""
+    druid_query(spark, rollup_table, REWRITE_HIT)  # warm imports
+    with count_round_trips() as trips:
+        df = druid_query(spark, rollup_table, REWRITE_HIT)
+    assert all("_materialized" in f for f in df.inputFiles())
+    raw = druid_query(spark, rollup_table,
+                      dict(REWRITE_HIT, context={"useMaterialized": False}))
+    assert sorted(df.collect()) == sorted(raw.collect())
+    assert df.schema == raw.schema
+    assert trips[0] < MAX_ROUND_TRIPS, \
+        f"rewrite-hit compile made {trips[0]} round trips"
+
+
+def test_rewrite_lists_the_timeline_once(spark, tmp_path, monkeypatch):
+    """Two rollups cover the query; the first (by name) lacks a state for
+    a newly published day, so the rewrite falls through to the second —
+    listing the segment manifests once, not once per candidate."""
+    from druid_hadoop_utils_spark.sources import segments
+
+    root = str(tmp_path / "two_rollups")
+    publish_segments(spark.createDataFrame(_rows(200)), root, DS,
+                     version="v1")
+    for name in ("a_daily", "b_daily"):
+        materialize_aggs(spark, root, DS, name, ["country"], ROLLUP_AGGS[:2],
+                         granularity="DAY")
+    day = [Row(__time=datetime(2023, 1, 9, h), country="C9",
+               event_type="buy", value=1.0, bytes=h) for h in range(3)]
+    publish_segments(spark.createDataFrame(day), root, DS, version="v1")
+    assert catch_up_materialized(spark, root, DS, name="b_daily")["b_daily"]
+
+    calls = []
+    listing = segments.list_manifests
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return listing(*args, **kwargs)
+
+    monkeypatch.setattr(segments, "list_manifests", counting)
+    q = {"queryType": "groupBy", "dataSource": DS,
+         "intervals": ["2023-01-01/2023-01-10"], "granularity": "DAY",
+         "dimensions": ["country"], "aggregations": ROLLUP_AGGS[:2],
+         "context": {"useMaterialized": "require"}}
+    out = druid_query(spark, root, q)
+    assert len(calls) == 1, calls
+    assert ("C9", 3) in {(r["country"], r["n"]) for r in out.collect()}
 
 
 def test_concurrent_queries_keep_their_own_views(spark, table):

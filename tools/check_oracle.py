@@ -65,6 +65,11 @@ def table_hash(rows: list[tuple], colnames: list[str]) -> str:
 def main() -> int:
     from __spark_entry__ import oracle_sql, queries
 
+    qs, oracles = queries(), oracle_sql()
+    unknown = sorted(ONLY - set(qs))
+    if unknown:
+        print(f"no query registered under: {', '.join(unknown)}")
+        return 2
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in ALL_TABLES:
@@ -72,11 +77,12 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    qs, oracles = queries(), oracle_sql()
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
+        ran += 1
         t0 = time.time()
         try:
             sdf = fn(spark, SF_DIR)
@@ -124,7 +130,7 @@ def main() -> int:
             failures.append(name)
         else:
             print(f"ok    {name}: rows={len(srows)} hash={sh} [{time.time()-t0:.1f}s]")
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} queries pass")
+    print(f"\n{ran - len(failures)}/{ran} queries pass")
     spark.stop()
     return 1 if failures else 0
 
