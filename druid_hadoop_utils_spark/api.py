@@ -587,7 +587,7 @@ def druid_query(
             )
 
             span = Interval(interval[0].start, interval[-1].end)
-            df, schema = _scan(spark, source, ds, span, as_of=q.get("asOf"))
+            df, schema, _ = _scan(spark, source, ds, span, as_of=q.get("asOf"))
             dtypes = {f.name: f.dataType.simpleString()
                       for f in (schema or df.schema).fields}
             # normalize the stored time column exactly as load() does

@@ -875,46 +875,16 @@ def _restamp_within_drift(spark, table_root: str, data_source: str,
     return raw
 
 
-def _pq_encode_udf(codebooks: np.ndarray, centroids: np.ndarray | None = None):
-    """vector → array<int> of m nearest-centroid codes (one numpy pass per
-    Arrow batch; vectors normalized first, matching training). With
-    ``centroids`` the RESIDUAL ``v − centroid[cell(v)]`` is encoded (cell
-    = argmax dot, identical to ``_cell_assign_udf``'s top-1)."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, ks, dsub = codebooks.shape
-
-    @pandas_udf("array<int>")
-    def encode(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        if centroids is not None:
-            assign = np.argmax(mat @ centroids.T, axis=1)
-            mat = mat - centroids[assign]
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            sub = mat[:, j * dsub : (j + 1) * dsub]
-            # ||s - c||² argmin == argmax(s·c - ||c||²/2)
-            scores = sub @ codebooks[j].T - 0.5 * (codebooks[j] ** 2).sum(axis=1)
-            codes[:, j] = np.argmax(scores, axis=1)
-        return pd.Series(list(codes))
-
-    return encode
-
-
 def _assign_encode_udf(
     codebooks: np.ndarray, centroids: np.ndarray, residual: bool
 ):
     """Fused corpus-side IVF cell assignment + PQ encoding: ONE Arrow
-    crossing per corpus row instead of two. ``ivfpq_topk``'s r15 plan ran
-    ``_cell_assign_udf`` and ``_pq_encode_udf`` as two ArrowEvalPython
-    nodes, each shipping the full embedding column JVM→Python→JVM and
-    each normalizing the batch (guide §4.1: you control how many columns
-    cross and how often). The math is byte-for-byte the originals':
-    cell = ``argsort(-sims)[:, 0]`` (``_cell_assign_udf``'s nprobe=1
-    column, including its tie behavior), codes use ``argmax`` assignment
-    in residual mode (``_pq_encode_udf``'s convention) — so outputs are
-    identical, there is just one boundary crossing."""
+    crossing per corpus row, shipping the embedding column JVM→Python→JVM
+    once and normalizing each batch once. The cell is
+    ``argsort(-sims)[:, 0]`` (``_cell_assign_udf``'s nprobe=1 column,
+    including its tie behavior); each sub-vector's code is its nearest
+    codeword, with the residual against the ``argmax`` cell encoded in
+    residual mode."""
     from pyspark.sql.functions import pandas_udf
 
     m, ks, dsub = codebooks.shape

@@ -72,9 +72,12 @@ def interval_sql(ivs, col: str = TIME_COL, ntz: bool = False) -> str:
 
 def _scan(spark: SparkSession, table_root: str, data_source: str,
           iv: Interval, dim_filter: dict | None = None,
-          as_of=None, manifests=None) -> tuple[DataFrame, StructType | None]:
+          as_of=None, manifests=None,
+          ) -> tuple[DataFrame, StructType | None, list[Interval] | None]:
     """``_scan_segments`` plus the scan's schema merged from the visible
-    manifests (None when a manifest records none)."""
+    manifests (None when a manifest records none) and the intervals of
+    the scanned segments when every one is fully visible (None when any
+    is read through a window predicate)."""
     from druid_hadoop_utils_spark.plans.pruning import (
         filter_constraints,
         segment_excluded,
@@ -138,7 +141,8 @@ def _scan(spark: SparkSession, table_root: str, data_source: str,
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
-    return out, schema
+    full = None if windowed else [m.interval for m in scanned]
+    return out, schema, full
 
 
 def _scan_segments(spark: SparkSession, table_root: str, data_source: str,
@@ -197,6 +201,19 @@ def load(
     about the scan: its schema is the visible manifests' recorded schemas
     merged on the driver, and the interval, filter, granularity and
     projection go to Spark as SQL text in two DataFrame calls.
+
+    The interval predicate is omitted when the timeline proves it
+    redundant: the time column is ``__time``, every scanned segment is
+    fully visible (no partly overshadowed window), and each one's
+    interval lies inside a single query interval. Rows lie inside their
+    segment's interval: ``write_segment`` filters them to it (its
+    ``enforce_interval=False`` callers vouch for it), and publish, DML,
+    compaction, clone and streaming all bucket rows by their own time.
+    A one-day query over DAY segments then compiles to the same plan on
+    every day, so Spark reuses its generated classes. A multi-interval
+    query whose gap cuts a segment, a sub-day interval, a partly
+    overshadowed segment and a segment coarser than the query interval
+    all keep the predicate.
     """
     if not isinstance(spec, LoadSpec):
         spec = LoadSpec.from_json(spec, data_source=data_source, interval=interval)
@@ -208,6 +225,7 @@ def load(
     ivs = parse_intervals(interval) if interval is not None else spec.intervals
 
     schema = None
+    covered = False
     if isinstance(source, DataFrame):
         df = source
     else:
@@ -224,8 +242,13 @@ def load(
                 # the span's visible set by the per-interval predicates
                 # below equals resolving each interval separately
                 span = Interval(ivs[0].start, ivs[-1].end)
-                df, schema = _scan(spark, source, ds, span,
-                                   dim_filter=spec.filter, as_of=spec.as_of)
+                df, schema, full = _scan(spark, source, ds, span,
+                                         dim_filter=spec.filter,
+                                         as_of=spec.as_of)
+                # every scanned row provably inside ivs: see the docstring
+                covered = (full is not None and time_column == TIME_COL
+                           and all(any(q.covers(s) for q in ivs)
+                                   for s in full))
             except AllSegmentsPruned:
                 # a provably-empty result, not missing data
                 return _empty_result(spark, spec)
@@ -249,7 +272,7 @@ def load(
     time_is_nanos = time_type == "bigint"
     time_is_ntz = time_type == "timestamp_ntz"
     preds = []
-    if ivs:
+    if ivs and not covered:
         if time_is_nanos:
             # epoch-nanos long time column: compare raw longs so the range
             # predicate pushes down to parquet row-group stats (a predicate

@@ -125,17 +125,25 @@ def publish_segments(
             F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
                    F.lit(shards_per_bucket)),
         )
-    # salt bounds output files at files_per_bucket per (bucket[, shard]):
-    # each partition-column combo lands in one shuffle partition, so
-    # partitionBy emits at most files_per_bucket files per leaf dir
+    # partitionBy writes one file per (leaf dir, shuffle partition): a
+    # leaf dir (bucket[, shard]) gets one file per partition holding it
     part_cols = ["__bucket", "__shard"] if sharded else ["__bucket"]
-    bucketed = (
-        bucketed.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("__time")), F.lit(files_per_bucket))
-        )
-        .repartition(*[F.col(c) for c in part_cols + ["__salt"]])
-        .drop("__salt")
-    )
+    if files_per_bucket == 1:
+        # one partition per leaf; AQE may coalesce small ones
+        bucketed = bucketed.repartition(*part_cols)
+    else:
+        # salt s of a leaf goes to partition (hash(leaf) + s) mod n: with
+        # n >= files_per_bucket a leaf's salts never share a partition,
+        # so the file count is files_per_bucket whatever the core count
+        # (hashing (leaf, salt) into spark.sql.shuffle.partitions, which
+        # follows the core count, lets salts collide). The explicit
+        # count also keeps AQE from coalescing them again.
+        conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        n = max(int(conf), files_per_bucket)
+        leaf = ", ".join(part_cols)
+        bucketed = bucketed.repartitionById(n, F.expr(
+            f"CAST(pmod(hash({leaf}), {n}) AS INT)"
+            f" + CAST(pmod(xxhash64(__time), {files_per_bucket}) AS INT)"))
     if sort_by:
         # clustering dims within each file tightens parquet row-group
         # min/max stats → better predicate skipping on those dims at read
