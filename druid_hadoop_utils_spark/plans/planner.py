@@ -203,12 +203,15 @@ def load(
     projection go to Spark as SQL text in two DataFrame calls.
 
     The interval predicate is omitted when the timeline proves it
-    redundant: the time column is ``__time``, every scanned segment is
-    fully visible (no partly overshadowed window), and each one's
-    interval lies inside a single query interval. Rows lie inside their
-    segment's interval: ``write_segment`` filters them to it (its
+    redundant: the time column is a ``__time`` timestamp, every scanned
+    segment is fully visible (no partly overshadowed window), and each
+    one's interval lies inside a single query interval. Rows lie inside
+    their segment's interval: ``write_segment`` filters them to it (its
     ``enforce_interval=False`` callers vouch for it), and publish, DML,
     compaction, clone and streaming all bucket rows by their own time.
+    An epoch-nanos ``__time`` keeps the predicate: ``write_segment``
+    cannot filter a long to the interval, so its writers pass
+    ``enforce_interval=False`` and nothing bounds their rows.
     A one-day query over DAY segments then compiles to the same plan on
     every day, so Spark reuses its generated classes. A multi-interval
     query whose gap cuts a segment, a sub-day interval, a partly
@@ -272,7 +275,7 @@ def load(
     time_is_nanos = time_type == "bigint"
     time_is_ntz = time_type == "timestamp_ntz"
     preds = []
-    if ivs and not covered:
+    if ivs and (time_is_nanos or not covered):
         if time_is_nanos:
             # epoch-nanos long time column: compare raw longs so the range
             # predicate pushes down to parquet row-group stats (a predicate

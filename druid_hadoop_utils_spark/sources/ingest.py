@@ -126,24 +126,18 @@ def publish_segments(
                    F.lit(shards_per_bucket)),
         )
     # partitionBy writes one file per (leaf dir, shuffle partition): a
-    # leaf dir (bucket[, shard]) gets one file per partition holding it
+    # leaf dir (bucket[, shard]) gets one file per partition holding it.
+    # Salt s of a leaf goes to partition (hash(leaf) + s) mod n: with
+    # n >= files_per_bucket a leaf's salts never share a partition, so
+    # the file count is files_per_bucket whatever the core count, and
+    # the explicit count keeps AQE from merging them.
     part_cols = ["__bucket", "__shard"] if sharded else ["__bucket"]
-    if files_per_bucket == 1:
-        # one partition per leaf; AQE may coalesce small ones
-        bucketed = bucketed.repartition(*part_cols)
-    else:
-        # salt s of a leaf goes to partition (hash(leaf) + s) mod n: with
-        # n >= files_per_bucket a leaf's salts never share a partition,
-        # so the file count is files_per_bucket whatever the core count
-        # (hashing (leaf, salt) into spark.sql.shuffle.partitions, which
-        # follows the core count, lets salts collide). The explicit
-        # count also keeps AQE from coalescing them again.
-        conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        n = max(int(conf), files_per_bucket)
-        leaf = ", ".join(part_cols)
-        bucketed = bucketed.repartitionById(n, F.expr(
-            f"CAST(pmod(hash({leaf}), {n}) AS INT)"
-            f" + CAST(pmod(xxhash64(__time), {files_per_bucket}) AS INT)"))
+    conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    n = max(int(conf), files_per_bucket)
+    leaf = ", ".join(part_cols)
+    bucketed = bucketed.repartitionById(n, F.expr(
+        f"CAST(pmod(hash({leaf}), {n}) AS INT)"
+        f" + CAST(pmod(xxhash64(__time), {files_per_bucket}) AS INT)"))
     if sort_by:
         # clustering dims within each file tightens parquet row-group
         # min/max stats → better predicate skipping on those dims at read

@@ -342,8 +342,9 @@ def write_segment(
     timeline's visibility math assumes segment data lies inside its
     declared interval (Druid enforces this at ingestion); rows outside it
     would leak into fully-visible reads. ``enforce_interval=False`` leaves
-    that to the caller: a fully visible segment inside the query
-    interval is read with no time filter at all (``plans.planner.load``).
+    that to the caller: a fully visible timestamp-``__time`` segment
+    inside the query interval is read with no time filter at all
+    (``plans.planner.load``).
 
     ``stats_columns`` records per-column min/max in the manifest (one
     extra aggregate job) so the planner can skip this segment entirely

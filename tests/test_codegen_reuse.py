@@ -153,8 +153,9 @@ def test_month_segment_under_a_one_day_query(spark, tmp_path):
 
 @pytest.mark.parametrize("time_type", ["nanos", "ntz"])
 def test_stored_time_types(spark, tmp_path, time_type):
-    """Epoch-nanos and TIMESTAMP_NTZ ``__time`` segments read the same
-    rows with the predicate omitted (one day) and kept (part of a day)."""
+    """Epoch-nanos and TIMESTAMP_NTZ ``__time`` segments read the right
+    rows over one day and over part of a day. TIMESTAMP_NTZ omits the
+    predicate on the whole day; epoch nanos always keep it."""
     root = str(tmp_path)
     epoch = datetime(1970, 1, 1)
     for d in range(3):
@@ -174,7 +175,43 @@ def test_stored_time_types(spark, tmp_path, time_type):
                             ("2023-01-02T06:00:00/2023-01-02T18:00:00",
                              range(6, 18))):
         df = load(spark, root, SPEC, interval=interval, data_source=DS)
-        assert _time_filtered(df) == (len(hours) < 24)
+        assert _time_filtered(df) == (len(hours) < 24 or time_type == "nanos")
         got = _sorted(df)
         assert got == [(START + timedelta(days=1, hours=h), f"C{h % 4}", 100.0 + h)
                        for h in hours]
+
+
+def test_nanos_row_outside_its_segment_is_not_returned(spark, tmp_path):
+    """Epoch-nanos segments are written with ``enforce_interval=False``,
+    so a row may lie outside its segment's interval; a query over the
+    whole segment must still filter it out."""
+    root = str(tmp_path)
+    day = START + timedelta(days=1)
+    times = [day + timedelta(hours=h) for h in range(24)]
+    times.append(day + timedelta(days=1, hours=1))   # the stray row
+    epoch = datetime(1970, 1, 1)
+    data = [((t - epoch) // timedelta(microseconds=1) * 1000, "C", float(i))
+            for i, t in enumerate(times)]
+    write_segment(
+        spark.createDataFrame(data, "__time long, country string, value double"),
+        root, DS, "2023-01-02/2023-01-03", "v1", enforce_interval=False)
+    df = load(spark, root, SPEC, interval="2023-01-02/2023-01-03",
+              data_source=DS)
+    assert _time_filtered(df)
+    got = _sorted(df)
+    assert [r[0] for r in got] == times[:24]
+
+
+@pytest.mark.parametrize("files", [1, 3])
+def test_publish_file_count_ignores_shuffle_partitions(spark, tmp_path, files):
+    """A day holds ``files_per_bucket`` files even when the session has
+    fewer shuffle partitions than that."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        publish_segments(spark.createDataFrame(_rows(30)), str(tmp_path), DS,
+                         version="v1", files_per_bucket=files)
+    finally:
+        spark.conf.set(key, old)
+    assert len(list(tmp_path.glob(f"{DS}/*/v=v1/shard=0/*.parquet"))) == files
