@@ -4897,7 +4897,8 @@ def q_kll_quantiles_prod(spark, sf_dir):
     # approximate (rank error ≤ 1/accuracy) → rows-only driver check;
     # the KLL sketch itself stays value-verified by the hash-green
     # q_kll_quantiles (exact regime), test_kll's prod-k accuracy floor,
-    # and tools/kll_scale_pair.py's 10×/30× scale certifications.
+    # and the 10×/30× scale certifications (BASELINE.md "KLL scale pair
+    # (round 6)").
     from druid_hadoop_utils_spark.functions.kll import quantile_query
 
     ev = _t(spark, sf_dir, "events")
@@ -4914,9 +4915,9 @@ def q_kll_state_reagg(spark, sf_dir):
     # at ingest; query time touches only the small states (thousands of
     # structs, never raw rows). No plain-PySpark twin exists:
     # percentile_approx cannot emit a storable intermediate, so the
-    # plain user rescans raw on every query — the delta kll_scale_pair
-    # measures at 10×/30× (BASELINE.md). Approximate (compaction
-    # active) → rows-only driver check; accuracy floor pinned in
+    # plain user rescans raw on every query — the delta measured at
+    # 10×/30× (BASELINE.md "KLL scale pair (round 6)"). Approximate
+    # (compaction active) → rows-only driver check; accuracy floor pinned in
     # test_kll, exactness-when-k≥n hash-verified by q_kll_quantiles.
     from druid_hadoop_utils_spark.functions.kll import (
         kll_quantiles,

@@ -75,11 +75,11 @@ MIN_INPUT_BYTES_CONF = "spark.graft.shared.materialize.minInputBytes"
 #: materialization beats per-consumer re-expansion for BOTH gated text
 #: operators from ~13 MiB of leaf input up (lm_score 0.85x / bm25 0.90x
 #: at 13 MiB; 0.70x / 0.76x at 27 MiB; 0.47x / 0.42x at 730 MiB —
-#: tools/gate_crossover_probe.py, full table in plans/r16/
-#: gate_crossover.md), while below ~4 MiB the extra job + cache round
-#: trip is floor-bound noise either way EXCEPT the single-file tiny
-#: corpus (the sf0.1 bench shape, 0.6 MiB), where r15 measured inline
-#: 1.33x better — which a 16 MiB gate keeps inline
+#: full table and method in plans/r16/gate_crossover.md), while below
+#: ~4 MiB the extra job + cache round trip is floor-bound noise either
+#: way EXCEPT the single-file tiny corpus (the sf0.1 bench shape,
+#: 0.6 MiB), where r15 measured inline 1.33x better — which a 16 MiB
+#: gate keeps inline
 DEFAULT_MIN_INPUT_BYTES = 16 * 1024 * 1024
 
 # ------------------------------------------- deterministic persist ledger

@@ -31,6 +31,7 @@ map-side partial aggregation, including sketch partials.
 from __future__ import annotations
 
 from collections import defaultdict
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +51,8 @@ from druid_hadoop_utils_spark.sources.segments import (
 )
 
 TIME_COL = "__time"
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICRO = timedelta(microseconds=1)
 _ISO_MILLIS = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
 
@@ -58,15 +61,29 @@ class AllSegmentsPruned(FileNotFoundError):
     the query result is provably empty (distinct from 'no segments')."""
 
 
-def interval_sql(ivs, col: str = TIME_COL, ntz: bool = False) -> str:
-    """SQL text: ``col`` inside any of the half-open intervals ``ivs``,
-    compared against TIMESTAMP (or, for a TIMESTAMP_NTZ column,
-    TIMESTAMP_NTZ) literals so the range pushes down to the scan."""
-    kw = "TIMESTAMP_NTZ" if ntz else "TIMESTAMP"
+def interval_sql(ivs, col: str = TIME_COL, time_type: str = "timestamp") -> str:
+    """SQL text: ``col`` inside any of the half-open intervals ``ivs``.
+
+    ``time_type`` is the column's ``simpleString``. A TIMESTAMP column
+    compares against TIMESTAMP literals and a TIMESTAMP_NTZ column
+    against TIMESTAMP_NTZ literals (an LTZ literal would coerce the
+    column and block pushdown); an epoch-nanos ``bigint`` column compares
+    raw longs, clamped to int64 because nanos only span ~1677..2262, so a
+    wider bound (e.g. /3000-01-01) means "no bound". Each form pushes
+    down to the parquet scan unwrapped."""
     c = ident(col)
+    if time_type == "bigint":
+        lmin, lmax = -(1 << 63), (1 << 63) - 1
+
+        def bound(t) -> str:
+            return str(min(max((t - _EPOCH) // _MICRO * 1000, lmin), lmax))
+    else:
+        kw = "TIMESTAMP_NTZ" if time_type == "timestamp_ntz" else "TIMESTAMP"
+
+        def bound(t) -> str:
+            return f"{kw} {lit(ts_text(t))}"
     return "(" + " OR ".join(
-        f"({c} >= {kw} {lit(ts_text(iv.start))} AND {c} < {kw} {lit(ts_text(iv.end))})"
-        for iv in ivs
+        f"({c} >= {bound(iv.start)} AND {c} < {bound(iv.end)})" for iv in ivs
     ) + ")"
 
 
@@ -276,29 +293,7 @@ def load(
     time_is_ntz = time_type == "timestamp_ntz"
     preds = []
     if ivs and (time_is_nanos or not covered):
-        if time_is_nanos:
-            # epoch-nanos long time column: compare raw longs so the range
-            # predicate pushes down to parquet row-group stats (a predicate
-            # over timestamp_micros(col) would not push)
-            from datetime import datetime, timedelta, timezone
-
-            epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
-            us = timedelta(microseconds=1)
-            lmin, lmax = -(1 << 63), (1 << 63) - 1
-
-            def nanos_pred(iv: Interval) -> str:
-                # clamp to int64: nanos can only represent ~1677..2262, so
-                # a wider interval (e.g. /3000-01-01) means "no bound"
-                start_ns = max(((iv.start - epoch) // us) * 1000, lmin)
-                end_ns = min(((iv.end - epoch) // us) * 1000, lmax)
-                return f"(`{TIME_COL}` >= {start_ns} AND `{TIME_COL}` < {end_ns})"
-
-            preds.append("(" + " OR ".join(nanos_pred(iv) for iv in ivs) + ")")
-        else:
-            # TIMESTAMP_NTZ columns compare against NTZ literals so the
-            # range predicate pushes down to the parquet scan unwrapped
-            # (an LTZ literal would coerce the column and block pushdown)
-            preds.append(interval_sql(ivs, ntz=time_is_ntz))
+        preds.append(interval_sql(ivs, time_type=time_type))
     if time_is_nanos or time_is_ntz:
         if preds:
             df = df.where(preds.pop())

@@ -175,6 +175,7 @@ def vacuum_result_cache(
 
     from druid_hadoop_utils_spark.sources.fs import (
         get_fs,
+        old_enough,
         published_entries,
         remove_published_dirs,
     )
@@ -185,15 +186,6 @@ def vacuum_result_cache(
     removed: list[str] = []
     stale_entries: list[str] = []  # published entries → bulk unpublish
     garbage_dirs: list[str] = []   # writer garbage → bulk delete
-
-    def _stale(path: str) -> bool:
-        # prefix_age_s (fs.py) handles object-store virtual dirs whose
-        # mtime reads 0.0 by falling back to the newest file mtime;
-        # None (no trustworthy age) = not stale — never yank a writer
-        from druid_hadoop_utils_spark.sources.fs import prefix_age_s
-
-        age = prefix_age_s(fs, path)
-        return age is not None and age >= tmp_min_age_s
 
     for key in fs.ls(root):
         kdir = fs.join(root, key)
@@ -220,7 +212,7 @@ def vacuum_result_cache(
                 continue
             if fs.atomic_dir_rename and ".tmp-" not in n:
                 continue  # committed dirs were handled above
-            if not _stale(p):
+            if not old_enough(fs, p, tmp_min_age_s):
                 continue
             removed.append(p)
             garbage_dirs.append(p)

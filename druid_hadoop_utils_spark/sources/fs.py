@@ -101,6 +101,14 @@ def prefix_age_s(fs, path: str, now: float | None = None) -> float | None:
     return now - newest
 
 
+def old_enough(fs, path: str, min_age_s: float, now: float | None = None) -> bool:
+    """The reclamation age gate: ``path``'s ``prefix_age_s`` is known and
+    at least ``min_age_s``. No trustworthy age means not old enough —
+    never yank an in-flight writer's tree."""
+    age = prefix_age_s(fs, path, now=now)
+    return age is not None and age >= min_age_s
+
+
 def _local_put_if_absent(local_path: str, text: str) -> bool:
     """Atomic CONTENT-CARRYING create-if-absent for local-disk-backed
     stores: write the full body to a private temp file, then
@@ -790,8 +798,8 @@ class ArrowMetaFS(MetaFS):
         # directories, and pyarrow's create_dir writes one EMPTY
         # marker object per level — pure request waste (measured on a
         # real endpoint: 4 of the 5 requests of a manifest
-        # registration were mkdirs ceremony, tools/moto_request_probe)
-        # that also pollutes listings. Writers under a prefix need no
+        # registration were mkdirs ceremony; tests/test_s3_requests.py
+        # pins the count) that also pollutes listings. Writers under a prefix need no
         # parent; a listing of a nonexistent prefix is already [].
         # Dir-ful backends (HDFS-like, atomic_dir_rename) keep the
         # real recursive create.
@@ -801,7 +809,7 @@ class ArrowMetaFS(MetaFS):
     def read_text(self, path: str) -> str:
         # s3 + boto3: ONE GET — the pyarrow input stream costs a HEAD
         # (open: size/existence) plus a GET per read, doubling every
-        # manifest read's round-trips (measured, moto_request_probe)
+        # manifest read's round-trips (measured, tests/test_s3_requests.py)
         client = self._boto_metadata_client()
         if client is not None:
             bucket, key = self._bucket_key(path)
@@ -875,7 +883,7 @@ class ArrowMetaFS(MetaFS):
         # s3 + boto3: one DELETE — pyarrow's delete_file additionally
         # HEADs the object first and RE-CREATES an empty parent
         # directory marker when it removed the prefix's last object
-        # (measured: 1 request vs 3, tools/moto_request_probe). S3
+        # (measured: 1 request vs 3, tests/test_s3_requests.py). S3
         # DeleteObject is idempotent (204 for missing keys), matching
         # this method's swallow-missing contract.
         client = self._boto_metadata_client()
@@ -910,7 +918,8 @@ class ArrowMetaFS(MetaFS):
         # measured: a 3-file promotion paid 16 requests, 12 of them
         # directory markers + their listing checks; with the gate it is
         # 1 listing + 1 CopyObject per file, size-independent below the
-        # 5 GB UploadPartCopy threshold — tools/moto_multipart_probe)
+        # 5 GB UploadPartCopy threshold — BASELINE.md "Round 13 —
+        # data-plane request counts on the real endpoint")
         if self.atomic_dir_rename:
             self._fs.create_dir(dp, recursive=True)
         sel = pafs.FileSelector(sp, recursive=True)

@@ -417,8 +417,8 @@ def _vacuum_sweep(
         # visible or invisible together — belt and braces). The parsed
         # object comes from the LISTING pass above (raw_objs): re-reading
         # every file here doubled the sweep's GET count on object stores
-        # (tools/delay_probe.py), and the lease guarantees nothing
-        # rewrote them since.
+        # (BASELINE.md "Injected-latency probe (round 8)"), and the
+        # lease guarantees nothing rewrote them since.
         obj = raw_objs.get(mfile)
         if obj is None:
             try:
@@ -509,7 +509,7 @@ def _reclaim_staged_orphans(
     objectsim path-scheme lesson)."""
     import time as _time
 
-    from druid_hadoop_utils_spark.sources.fs import prefix_age_s
+    from druid_hadoop_utils_spark.sources.fs import old_enough
 
     ds_root = fs.join(table_root, data_source)
     # spark_url is idempotent, so normalizing the (already-spark-URL)
@@ -517,15 +517,6 @@ def _reclaim_staged_orphans(
     referenced = {fs.spark_url(m.path).rstrip("/")
                   for m in manifests if m.path}
     now = _time.time()
-
-    def _old_enough(path: str) -> bool:
-        # prefix_age_s handles virtual-dir prefixes (object stores
-        # report no mtime for them) by falling back to the newest FILE
-        # mtime; None = no trustworthy age = never old enough, because
-        # refusing to reclaim an in-flight writer's staged tree is the
-        # only safe answer (fs.py:prefix_age_s has the full rationale)
-        age = prefix_age_s(fs, path, now=now)
-        return age is not None and age >= min_age_s
 
     try:
         entries = fs.ls(ds_root)
@@ -536,7 +527,7 @@ def _reclaim_staged_orphans(
     for entry in entries:
         path = fs.join(ds_root, entry)
         if entry.startswith("_staging_"):
-            if fs.isdir(path) and _old_enough(path):
+            if fs.isdir(path) and old_enough(fs, path, min_age_s, now):
                 doomed.append(path)
                 reclaimed.append(path)
             continue
@@ -556,7 +547,7 @@ def _reclaim_staged_orphans(
             }
             if shard_urls & referenced:
                 continue
-            if not _old_enough(vdir):
+            if not old_enough(fs, vdir, min_age_s, now):
                 continue
             doomed.append(vdir)
             reclaimed.append(vdir)

@@ -905,22 +905,15 @@ def vacuum_materialized(
         _current_compact = None
     listed = listed | ({_current_compact} if _current_compact else set())
 
-    def _stale_path(path: str) -> bool:
-        # an mtime-age floor gates ALL reclamation of in-flight writer
-        # dirs (default 6 h, override via tmp_min_age_s): the pid probe
-        # below is SAME-HOST only — on shared storage a live
-        # materializer on another host would look dead (and pid reuse
-        # would look alive) — so age is the load-bearing condition.
-        # prefix_age_s (fs.py) handles object-store virtual dirs whose
-        # mtime reads 0.0 by falling back to the newest file mtime;
-        # None (no trustworthy age) = not stale — never yank a writer
-        from druid_hadoop_utils_spark.sources.fs import prefix_age_s
-
-        age = prefix_age_s(fs, path)
-        return age is not None and age >= tmp_min_age_s
+    # an mtime-age floor gates ALL reclamation of in-flight writer dirs
+    # (default 6 h, override via tmp_min_age_s): the pid probe below is
+    # SAME-HOST only — on shared storage a live materializer on another
+    # host would look dead (and pid reuse would look alive) — so age is
+    # the load-bearing condition (fs.old_enough)
+    from druid_hadoop_utils_spark.sources.fs import old_enough
 
     def _stale(entry: str) -> bool:
-        return _stale_path(fs.join(mdir, entry))
+        return old_enough(fs, fs.join(mdir, entry), tmp_min_age_s)
 
     # the committed states (rename backends: `<ident>.parquet` dirs;
     # pointer backends: `<ident>.parquet` pointer files), keyed by stem
@@ -982,7 +975,7 @@ def vacuum_materialized(
                 # '.parquet.<token>'), so probing it yields age None and
                 # stale _compact.* trees would leak forever.
                 if (stem.startswith("_compact.")
-                        and not _stale_path(committed[logical])):
+                        and not old_enough(fs, committed[logical], tmp_min_age_s)):
                     continue
                 unpublish.append(fs.join(mdir, logical))
                 gone.append(stem)

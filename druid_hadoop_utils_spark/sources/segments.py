@@ -354,7 +354,8 @@ def write_segment(
     if enforce_interval and "__time" in df.columns:
         from druid_hadoop_utils_spark.plans.planner import interval_sql
 
-        df = df.where(interval_sql([iv]))
+        df = df.where(interval_sql(
+            [iv], time_type=df.schema["__time"].dataType.simpleString()))
     seg_dir = segment_dir(table_root, data_source, iv, version, shard_num)
     writer = df.write.mode("overwrite")
     if partition_by_day:
@@ -598,7 +599,8 @@ def list_manifests(
                 # hand the parsed objects back to callers that would
                 # otherwise RE-READ every file (vacuum's shape-aware
                 # rewrite) — on an object store that re-read doubles the
-                # sweep's GET count (measured: tools/delay_probe.py)
+                # sweep's GET count (measured: BASELINE.md
+                # "Injected-latency probe (round 8)")
                 _raw_out[mpath] = obj
             for m in _manifests_from_json(obj, mpath):
                 if as_of is not None and not _published_within(

@@ -202,6 +202,23 @@ def test_nanos_row_outside_its_segment_is_not_returned(spark, tmp_path):
     assert [r[0] for r in got] == times[:24]
 
 
+def test_enforced_nanos_write_drops_the_stray_row(spark, tmp_path):
+    """A default (``enforce_interval=True``) write of an epoch-nanos
+    ``__time`` filters with the same long-typed predicate ``load`` uses:
+    it does not raise, and the row past the interval is not stored."""
+    root = str(tmp_path)
+    day = START + timedelta(days=1)
+    epoch = datetime(1970, 1, 1)
+    times = [day + timedelta(hours=3), day + timedelta(days=1, hours=1)]
+    data = [((t - epoch) // timedelta(microseconds=1) * 1000, "C", float(i))
+            for i, t in enumerate(times)]
+    manifest = write_segment(
+        spark.createDataFrame(data, "__time long, country string, value double"),
+        root, DS, "2023-01-02/2023-01-03", "v1")
+    stored = spark.read.parquet(manifest.path).collect()
+    assert [r["__time"] for r in stored] == [data[0][0]]
+
+
 @pytest.mark.parametrize("files", [1, 3])
 def test_publish_file_count_ignores_shuffle_partitions(spark, tmp_path, files):
     """A day holds ``files_per_bucket`` files even when the session has

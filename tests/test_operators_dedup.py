@@ -190,6 +190,27 @@ def test_simhash_near_dups(docs):
     assert hams[(1, 2)] == 0  # identical text → identical simhash
 
 
+def test_expression_signatures_equal_their_table_twins(spark, docs):
+    """``minhash_signature`` equals ``minhash_table`` and ``simhash``
+    equals ``simhash_table`` (``xxhash64`` mode) per document: the fixture
+    docs, an empty document and one of 320 tokens (past the 127-token
+    block of the table's bit sums)."""
+    long_text = " ".join(f"w{i % 97}" for i in range(320))
+    more = spark.createDataFrame([Row(doc_id=6, text=""), Row(doc_id=7, text=long_text)])
+    all_docs = docs.unionByName(more)
+    ids = list(range(1, 8))
+    sh = all_docs.select("doc_id", D.word_shingles("text", 3).alias("__sh"))
+    expr_mh = {r.doc_id: r.sig for r in sh.select(
+        "doc_id", D.minhash_signature(F.col("__sh")).alias("sig")).collect()}
+    table_mh = {r.doc_id: r.signature
+                for r in D.minhash_table(sh, "doc_id", "__sh").collect()}
+    assert sorted(table_mh) == ids and table_mh == expr_mh
+    expr_sh = {r.doc_id: r.sig for r in all_docs.select(
+        "doc_id", D.simhash(D.tokens("text")).alias("sig")).collect()}
+    table_sh = {r.doc_id: r.sig for r in D.simhash_table(all_docs, "doc_id").collect()}
+    assert sorted(table_sh) == ids and table_sh == expr_sh
+
+
 def test_simhash_deterministic(docs):
     a = docs.select(D.simhash(D.tokens("text")).alias("s")).collect()
     b = docs.select(D.simhash(D.tokens("text")).alias("s")).collect()

@@ -12,7 +12,8 @@ ONE. These tests count ACTUAL requests served by an in-process moto
 endpoint so a regression anywhere in the stack (engine code, pyarrow
 behavior, boto3 retries) fails loudly with the request log attached.
 
-Numbers also recorded in BASELINE.md (tools/moto_request_probe.py).
+Numbers also recorded in BASELINE.md ("Real-S3-protocol request counts
+(round 12)").
 """
 
 from __future__ import annotations
@@ -146,8 +147,8 @@ def test_copy_tree_promotion_request_bound(root):
     ONE listing plus ONE server-side CopyObject per file — no directory
     marker ceremony (was 16 requests for 3 files; now 4), and no byte
     re-streaming regardless of object size (CopyObject is server-side
-    below the 5 GB UploadPartCopy threshold —
-    tools/moto_multipart_probe.py has the size sweep)."""
+    below the 5 GB UploadPartCopy threshold — the 1 KB/8 MB/64 MB sweep
+    is in BASELINE.md, "Round 13 — data-plane request counts")."""
     from druid_hadoop_utils_spark.sources.fs import get_fs
 
     r, counter = root

@@ -116,7 +116,7 @@ def test_metafs_contract(root):
     fs.delete_file(p)
     assert not fs.exists(p)
     # bulk deletes overlap round-trips — correctness check here,
-    # latency characterization lives in tools/delay_probe.py
+    # latency characterization: BASELINE.md "Injected-latency probe (round 8)"
     many = [fs.join(root, "bulk", f"f{i}.json") for i in range(32)]
     for q in many:
         fs.put_text(q, "x")

@@ -212,7 +212,8 @@ def build_baseline(spark, sf_dir: str = None) -> dict:
         # pins that the dispatch adds no overhead. The KLL sketch path
         # itself is benched by q_kll_state_reagg (state-producing
         # workload, no plain equivalent: percentile_approx's summary is
-        # not storable) and scale-certified by tools/kll_scale_pair.py.
+        # not storable) and scale-certified at 10×/30× (BASELINE.md "KLL
+        # scale pair (round 6)").
         "q_kll_quantiles_prod": lambda: events()
         .groupBy("event_type")
         .agg(F.percentile_approx("value", [0.25, 0.5, 0.95]).alias("ps")),
