@@ -1,10 +1,11 @@
 """The scripts under ``tools/``: every one compiles, every ``tools/``
 script path that the package, the tests, the tools, README.md or
-NOTES.md name exists, and ``tools/ab.py`` refuses a variant that
-changes an op's output."""
+NOTES.md name exists, ``tools/ab.py`` rejects a malformed variant with
+its usage message, and refuses a variant that changes an op's output."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import re
 import subprocess
@@ -41,6 +42,16 @@ def test_named_tool_paths_exist():
                             for m in TOOL_PATH.findall(line)
                             if not os.path.isfile(os.path.join(TOOLS, m))]
     assert not missing, "dangling tool references:\n" + "\n".join(missing)
+
+
+@pytest.mark.parametrize("spec", ["conf:spark.sql.adaptive.enabled", "conf:a=1,b",
+                                  "py:contextlib", "py::nullcontext", "sql:x=1"])
+def test_ab_rejects_malformed_variant(spec):
+    load = importlib.util.spec_from_file_location("ab", os.path.join(TOOLS, "ab.py"))
+    ab = importlib.util.module_from_spec(load)
+    load.loader.exec_module(ab)
+    with pytest.raises(SystemExit, match="neither conf:k=v"):
+        ab.variant(spec)
 
 
 VARIANT = '''
