@@ -27,6 +27,7 @@ from druid_hadoop_utils_spark.functions.filters import (
 from druid_hadoop_utils_spark.functions.sqltext import ident, lit, sql_over
 from druid_hadoop_utils_spark.plans.planner import load
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
+from druid_hadoop_utils_spark.session import local_frame
 
 
 def _base(
@@ -607,7 +608,7 @@ def druid_query(
             schema_str = ("column string, type string, cardinality long, "
                           "min_value string, max_value string")
             if not cols:
-                return spark.createDataFrame([], schema_str)
+                return local_frame(spark, [], schema_str)
             aggs = []
             for c in cols:
                 if "cardinality" in analysis:
@@ -627,7 +628,7 @@ def druid_query(
                 )
                 for c in cols
             ]
-            return spark.createDataFrame(out_rows, schema_str)
+            return local_frame(spark, out_rows, schema_str)
         manifests = list_manifests(source, ds, as_of=q.get("asOf"))
         visible = {
             w.manifest
@@ -641,10 +642,10 @@ def druid_query(
              m in visible, _j.dumps(m.stats, sort_keys=True) if m.stats else None)
             for m in manifests
         ]
-        return spark.createDataFrame(
-            rows, "identifier string, interval string, version string, "
-                  "shard_num int, path string, visible boolean, "
-                  "column_stats string"
+        return local_frame(
+            spark, rows,
+            "identifier string, interval string, version string, "
+            "shard_num int, path string, visible boolean, column_stats string",
         )
     if qtype == "timeseries":
         skip = bool((q.get("context") or {}).get("skipEmptyBuckets", False))

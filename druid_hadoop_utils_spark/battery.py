@@ -29,6 +29,7 @@ from druid_hadoop_utils_spark.operators import dedup as DD
 from druid_hadoop_utils_spark.operators import similarity as SIM
 from druid_hadoop_utils_spark.operators import text as TX
 from druid_hadoop_utils_spark.plans.planner import load
+from druid_hadoop_utils_spark.session import local_frame
 from druid_hadoop_utils_spark.sources.tables import load_table
 
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -1221,7 +1222,7 @@ def q_bpe_encode(spark, sf_dir):
     merges = _BPE_MERGES_CACHE.get(sf_dir)
     if merges is None:
         merges = train_bpe(docs, vocab_size=300, min_count=2)
-        merges = spark.createDataFrame(merges.collect(), merges.schema)
+        merges = local_frame(spark, merges.collect(), merges.schema)
         _BPE_MERGES_CACHE[sf_dir] = merges
     enc = bpe_encode(docs, merges)
     return enc.select(
@@ -1269,7 +1270,7 @@ def q_bpe_roundtrip(spark, sf_dir):
     merges = _BPE_MERGES_CACHE.get(sf_dir)
     if merges is None:
         merges = train_bpe(docs_all, vocab_size=300, min_count=2)
-        merges = spark.createDataFrame(merges.collect(), merges.schema)
+        merges = local_frame(spark, merges.collect(), merges.schema)
         _BPE_MERGES_CACHE[sf_dir] = merges
     docs = docs_all.filter(~F.col("text").contains("</w>"))
     enc = bpe_encode(docs, merges)

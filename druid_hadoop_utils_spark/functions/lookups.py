@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from druid_hadoop_utils_spark.functions.sqltext import column_sql, lit
+from druid_hadoop_utils_spark.session import local_frame
 
 _REGISTRY: dict[str, dict | DataFrame] = {}
 
@@ -136,8 +137,10 @@ def lookup_join(
     if isinstance(lookup, str):
         lookup = _REGISTRY.get(lookup, None) or lookup_mapping(lookup)
     if isinstance(lookup, dict):
-        lut = df.sparkSession.createDataFrame(
-            [(str(k), str(v)) for k, v in lookup.items()], "__lk_key string, __lk_val string"
+        lut = local_frame(
+            df.sparkSession,
+            [(str(k), str(v)) for k, v in lookup.items()],
+            "__lk_key string, __lk_val string",
         )
     else:
         k, v = lookup.columns

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from druid_hadoop_utils_spark.operators.text import tokens
+from druid_hadoop_utils_spark.session import local_frame
 
 END_OF_WORD = "</w>"
 
@@ -143,12 +144,11 @@ def train_bpe(
     alphabet = {ch for w, _c in rows for ch in w} | {END_OF_WORD}
     n_merges = max(vocab_size - len(alphabet), 0)
     merges = _merge_loop(rows, n_merges)
-    spark = df.sparkSession
-    out = spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank INT, left STRING, right STRING, merged STRING",
     )
-    return out
 
 
 def _apply_merges(word: str, ranks: dict) -> list[str]:

@@ -99,7 +99,9 @@ def _shifted_ngrams(parts: Column, num: Column, n: int, sep: str) -> Column:
 
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (built-ins only,
-    linear in document length)."""
+    linear in document length). An empty or blank document has the one
+    shingle ``""``, so its signatures and Jaccard similarities are
+    defined."""
     toks = tokens(col)
     num = F.greatest(F.size(toks) - (n - 1), F.lit(1))
     return F.array_distinct(_shifted_ngrams(toks, num, n, " "))
@@ -498,7 +500,11 @@ def simhash_table(
     """(id, sig) SimHash signatures, bulk path: explode tokens → token hash →
     one hash aggregate with a sum per bit → majority-vote reassembly.
     Everything stays in whole-stage codegen; one shuffle on the id.
-    Documents with no tokens are dropped (no signature to speak of).
+    A blank text (empty or whitespace only) tokenizes to ``[""]``, one
+    empty token, and is signed like any document: every blank document
+    gets the same signature, as ``word_shingles`` gives every empty
+    document the one shingle ``""``. Only a null text, which has no
+    tokens, is dropped.
 
     ``hash_mode='xxhash64'`` (default) produces bit-identical signatures to
     ``simhash`` (same hash, same majority rule) — pinned by tests.

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from druid_hadoop_utils_spark.session import local_frame
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -449,7 +451,7 @@ def synthetic_media_df(spark, n_images: int = 12, n_audio: int = 12) -> DataFram
         blob = synthesize_wav(i)
         rows.append((1000 + i, "audio", bytearray(blob),
                      ("wav", None, None, 200)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def encode_png(img: "Any") -> bytes:

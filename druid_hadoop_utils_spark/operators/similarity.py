@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from druid_hadoop_utils_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -630,7 +632,7 @@ def ivf_topk_from_postings(
     # of the whole postings table.
     q_rows = q_plan.collect()
     probed = sorted({r["__cell"] for r in q_rows})
-    q = queries.sparkSession.createDataFrame(q_rows, q_plan.schema)
+    q = local_frame(queries.sparkSession, q_rows, q_plan.schema)
     c = postings.where(F.col("__cell").isin(probed)).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),

@@ -39,6 +39,7 @@ from pyspark.sql.types import ArrayType, BinaryType, StructField, StructType, Ti
 
 from druid_hadoop_utils_spark.intervals import Interval, parse_intervals
 from druid_hadoop_utils_spark.plans.spec import LoadSpec
+from druid_hadoop_utils_spark.session import local_frame
 from druid_hadoop_utils_spark.functions.filters import filter_sql
 from druid_hadoop_utils_spark.functions.granularity import granularity_sql
 from druid_hadoop_utils_spark.functions.sqltext import ident, lit, ts_text
@@ -351,7 +352,7 @@ def _empty_result(spark: SparkSession, spec: LoadSpec) -> DataFrame:
         else:
             t = StringType()
         fields.append(StructField(m.name, t))
-    return spark.createDataFrame([], StructType(fields))
+    return local_frame(spark, [], StructType(fields))
 
 
 def to_compat_output(df: DataFrame) -> DataFrame:

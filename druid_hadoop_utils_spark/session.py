@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -62,3 +62,47 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of ``rows`` (tuples or Rows in ``schema`` order) that
+    the driver already holds, built through Arrow in the JVM.
+
+    ``schema`` is a ``StructType`` or a DDL string. The rows become one
+    ``pyarrow.Table`` of the schema's Arrow types, and
+    ``spark.createDataFrame(table, schema)`` decodes its batches in the
+    JVM. ``createDataFrame`` over a Python list instead pickles the rows
+    into a ``PythonRDD``, so every task starts a Python worker to
+    unpickle rows the driver already had.
+
+    Measured in fresh sessions (4-core box, ``local[3]``, 300 rows of
+    ``(timestamp, array<string>, long)`` built and collected; method in
+    NOTES.md): the list path took 130–182 ms per call once warm and
+    1.9 s on first use; this path takes 15–30 ms, and 1.05 s on first
+    use. An empty list cost 110–152 ms against 9–23 ms here.
+
+    Values and schemas equal the list path's, except for naive
+    datetimes: they are read as UTC wall time (the session zone is
+    UTC), where the list path read them in the driver process's local
+    zone. Pass tz-aware datetimes. ``collect()`` returns naive local
+    wall time, so collected Rows with a timestamp column round-trip
+    only when the process zone is UTC; the package recreates collected
+    Rows only where they hold no timestamp.
+
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` the frame
+    is a local relation, scanned in ``min(rows, defaultParallelism)``
+    partitions sliced as ``parallelize`` slices them. So a frame of at
+    least that many rows keeps the list path's partitions and writes the
+    same files; with fewer rows it has no empty partitions. Above the
+    threshold each partition is one Arrow batch of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[]] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)

@@ -603,6 +603,7 @@ def import_druid_segment(
         TimestampType,
     )
 
+    from druid_hadoop_utils_spark.session import local_frame
     from druid_hadoop_utils_spark.sources.segments import write_segment
 
     desc_path = os.path.join(segment_dir, "descriptor.json")
@@ -624,7 +625,6 @@ def import_druid_segment(
     cols = read_segment(segment_dir)
     if "__time" not in cols:
         raise ValueError("segment has no __time column")
-    n = len(cols["__time"].values)
 
     from datetime import datetime, timezone
 
@@ -660,8 +660,7 @@ def import_druid_segment(
             fields.append(StructField(name, BinaryType()))
             data[name] = [bytes(v) for v in col.values]
 
-    rows = [tuple(data[f.name][i] for f in fields) for i in range(n)]
-    df = spark.createDataFrame(rows, StructType(fields))
+    df = local_frame(spark, zip(*(data[f.name] for f in fields)), StructType(fields))
     return write_segment(
         df, table_root, data_source, interval, str(version), shard_num
     )

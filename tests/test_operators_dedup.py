@@ -213,6 +213,21 @@ def test_expression_signatures_equal_their_table_twins(spark, docs):
     assert table_sh == {k: expr_sh[k] for k in table_sh}
 
 
+def test_blank_documents_pair_only_with_each_other(spark, docs):
+    """A blank text tokenizes to ``[""]`` and is signed like any document:
+    two blank texts pair with each other (SimHash hamming 0, MinHash
+    Jaccard 1.0) and with nothing else."""
+    blanks = spark.createDataFrame([Row(doc_id=8, text=""), Row(doc_id=9, text="   ")])
+    df = docs.unionByName(blanks)
+
+    def touching_blanks(pairs, metric):
+        return sorted((r.id_a, r.id_b, r[metric]) for r in pairs.collect()
+                      if {r.id_a, r.id_b} & {8, 9})
+
+    assert touching_blanks(D.simhash_candidate_pairs(df, "doc_id"), "hamming") == [(8, 9, 0)]
+    assert touching_blanks(D.minhash_lsh_dedup_pairs(df, "doc_id"), "jaccard") == [(8, 9, 1.0)]
+
+
 def test_simhash_deterministic(docs):
     a = docs.select(D.simhash(D.tokens("text")).alias("s")).collect()
     b = docs.select(D.simhash(D.tokens("text")).alias("s")).collect()
